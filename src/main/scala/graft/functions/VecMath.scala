@@ -359,6 +359,10 @@ case class VecBestCode(vec: Expression, nrm: Expression, entries: Expression)
     new StructType().add("code", IntegerType, nullable = false)
       .add("d2", LongType, nullable = false)
 
+  // an EMPTY (non-null) entry list has no nearest code: the result is null
+  // even when every child is non-null
+  override def nullable: Boolean = true
+
   override def checkInputDataTypes(): TypeCheckResult =
     (vec.dataType, nrm.dataType, entries.dataType) match {
       case (ArrayType(LongType, _), LongType, ArrayType(s: StructType, _))
@@ -374,8 +378,9 @@ case class VecBestCode(vec: Expression, nrm: Expression, entries: Expression)
       c.asInstanceOf[ArrayData], codeOrd, cvOrd, cnOrd)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, q, c) =>
-      s"graft.functions.VecMath.bestCode($v, $q, $c, $codeOrd, $cvOrd, $cnOrd)")
+    nullSafeCodeGen(ctx, ev, (v, q, c) =>
+      s"""${ev.value} = graft.functions.VecMath.bestCode($v, $q, $c, $codeOrd, $cvOrd, $cnOrd);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): VecBestCode =

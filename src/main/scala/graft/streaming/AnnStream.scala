@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -50,21 +48,8 @@ object AnnStream {
       .schema(embeddingsSchema(spark, dir))
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
-    val sink = "stream_ann_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val assigned = CarbonStream.drainMemorySink(spark, sink)
+    val assigned = CarbonStream.replay(
+      Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents), "complete")
     Similarity.topKFromCands(Similarity.ivfCandsFromAssigned(assigned,
       Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)))
   }
@@ -86,21 +71,8 @@ object AnnStream {
       .schema(embeddingsSchema(spark, dir))
       .option("pathGlobFilter", "embeddings.parquet")
       .parquet(dir)
-    val sink = "stream_semantic_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = CarbonStream.replay(
+      Similarity.assignNearest(Similarity.fixedVecsFrom(stream), cents), "complete")
     Similarity.semanticFromAssigned(
       spark.createDataFrame(drained.rdd, drained.schema),
       Similarity.DupThreshold)
@@ -140,12 +112,12 @@ object AnnStream {
         s"$src/slice$i.parquet", (3 - i) * 60000L)
     }: _*)
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val stream = spark.readStream
-          .schema(raw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-        val q = Similarity.fixedVecsFrom(stream)
+      val stream = spark.readStream
+        .schema(raw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+      CarbonStream.runToEnd(spark) {
+        Similarity.fixedVecsFrom(stream)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             VecIndexStore.append(
@@ -154,7 +126,6 @@ object AnnStream {
           }
           .outputMode("append")
           .start()
-        try q.processAllAvailable() finally q.stop()
       }
       VecIndexStore.compact(spark, idx)
       val probeLists = Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,19 +56,19 @@ object CarbonStream {
   /** Run `body` with the session's shuffle partitions temporarily lowered
     * to [[StreamShufflePartitions]] and, when [[RocksDbFlag]] is set, the
     * RocksDB state-store provider selected (streaming plans bind both
-    * values at `start()`), restoring the batch settings afterwards.
+    * values at `start()`), restoring the batch settings afterwards. Only
+    * EXPLICIT settings are saved (`getAll`; `getOption` would return the
+    * default and pin it), so a key unset before is unset again after.
     */
   def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption(ProviderConf)
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+    val partitionsConf = "spark.sql.shuffle.partitions"
+    val explicit = spark.conf.getAll
+    val saved = Seq(partitionsConf, ProviderConf).map(k => k -> explicit.get(k))
+    spark.conf.set(partitionsConf, StreamShufflePartitions.toString)
     if (rocksDbEnabled(spark)) spark.conf.set(ProviderConf, RocksDbProvider)
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) => spark.conf.set(ProviderConf, p)
-        case None => spark.conf.unset(ProviderConf)
-      }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -84,6 +83,32 @@ object CarbonStream {
     val out = spark.table(sink)
     spark.catalog.dropTempView(sink)
     out
+  }
+
+  /** The one lifecycle of a FINITE replay: `start` builds and starts the
+    * query inside [[withStreamPartitions]] (streaming plans bind its confs
+    * at `start()`), the query runs to the end of the available input, and
+    * it stops whether or not that succeeded.
+    * The live daemon queries ([[startRollupFlush]]) own their lifetime
+    * instead.
+    */
+  def runToEnd(spark: SparkSession)(start: => StreamingQuery): Unit =
+    withStreamPartitions(spark) {
+      val q = start
+      try q.processAllAvailable() finally q.stop()
+    }
+
+  /** Replay `df` to the end of its input into a fresh memory sink in
+    * output `mode` (`complete` or `append`) and return the drained rows
+    * ([[drainMemorySink]]: the sink's temp view is already gone).
+    */
+  def replay(df: DataFrame, mode: String): DataFrame = {
+    val spark = df.sparkSession
+    val sink = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    runToEnd(spark) {
+      df.writeStream.format("memory").queryName(sink).outputMode(mode).start()
+    }
+    drainMemorySink(spark, sink)
   }
 
   /** The canonical events schema with `ts` ALREADY in the epoch-nanos
@@ -189,24 +214,8 @@ object CarbonStream {
   /** Run the streaming rollup over the events fixture (file source, memory
     * sink, complete mode), block until drained, return the result table.
     */
-  def rollupQuery(spark: SparkSession, dir: String): DataFrame = {
-    val events = eventsStream(spark, dir)
-    val sink = "stream_rollup_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = windowedRollup(toMetrics(events))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    drainMemorySink(spark, sink)
-  }
+  def rollupQuery(spark: SparkSession, dir: String): DataFrame =
+    replay(windowedRollup(toMetrics(eventsStream(spark, dir))), "complete")
 
   /** The streaming quantile sketch: the bin-count histogram IS the
     * streaming-maintainable state (integer counts, order-immune partials
@@ -219,25 +228,11 @@ object CarbonStream {
     */
   def quantilesQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Carbon
-    val events = eventsStream(spark, dir)
-    val sink = "stream_quantiles_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = events
-        .groupBy(col("event_type"),
-          floor(col("value") / Carbon.QuantileBinW).cast("long").as("bin"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Carbon.quantilesFromBins(drainMemorySink(spark, sink))
+    val bins = eventsStream(spark, dir)
+      .groupBy(col("event_type"),
+        floor(col("value") / Carbon.QuantileBinW).cast("long").as("bin"))
+      .agg(count(lit(1)).as("c"))
+    Carbon.quantilesFromBins(replay(bins, "complete"))
   }
 
   /** The streaming cardinality sketch: the 64 HLL registers per event type
@@ -254,27 +249,13 @@ object CarbonStream {
     */
   def cardinalityQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.OpsStats
-    val events = eventsStream(spark, dir)
-    val sink = "stream_cardinality_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = OpsStats.hllRegisterRows(events)
-        .groupBy(col("event_type"), col("r"))
-        .agg(max("rank").as("m"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    val registers = replay(OpsStats.hllRegisterRows(eventsStream(spark, dir))
+      .groupBy(col("event_type"), col("r"))
+      .agg(max("rank").as("m")), "complete")
     val exact = Tables.events(spark, dir)
       .groupBy("event_type")
       .agg(countDistinct("user_id").as("n_exact"))
-    OpsStats.hllFinalize(drainMemorySink(spark, sink), exact)
+    OpsStats.hllFinalize(registers, exact)
   }
 
   /** The live path index: the reference's index manager consumes the path
@@ -291,21 +272,7 @@ object CarbonStream {
     */
   def indexQuery(spark: SparkSession, dir: String): DataFrame = {
     val paths = toMetrics(eventsStream(spark, dir)).select("path")
-    val sink = "stream_index_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = graft.operators.Index.indexFrom(paths)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    drainMemorySink(spark, sink)
+    replay(graft.operators.Index.indexFrom(paths), "complete")
   }
 
   /** The live top-volume paths: per-path integer counters are the
@@ -318,23 +285,9 @@ object CarbonStream {
     * `top_paths`' SQL verbatim.
     */
   def topPathsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val metrics = toMetrics(eventsStream(spark, dir))
-    val sink = "stream_top_paths_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = metrics
-        .groupBy("path").agg(count(lit(1)).as("points"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    graft.operators.Carbon.topFromCounts(drainMemorySink(spark, sink))
+    val counts = toMetrics(eventsStream(spark, dir))
+      .groupBy("path").agg(count(lit(1)).as("points"))
+    graft.operators.Carbon.topFromCounts(replay(counts, "complete"))
   }
 
   /** The live heavy hitters — the ONLY aggregation in this engine whose
@@ -357,23 +310,9 @@ object CarbonStream {
       .select(explode(array((0 until Carbon.CmsDepth).map(j =>
         struct(lit(j).as("j"), bs(j).as("bucket"))): _*)).as("jb"))
       .select(col("jb.j").as("j"), col("jb.bucket").as("bucket"))
-    val sink = "stream_cms_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = metrics
-        .groupBy("j", "bucket").agg(count(lit(1)).as("c"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Carbon.cmsTopFrom(drainMemorySink(spark, sink),
-      Carbon.pathCounts(spark, dir), bits)
+    val counters = replay(
+      metrics.groupBy("j", "bucket").agg(count(lit(1)).as("c")), "complete")
+    Carbon.cmsTopFrom(counters, Carbon.pathCounts(spark, dir), bits)
   }
 
   /** The live outlier detector: `series_anomaly`'s per-path moment state
@@ -390,22 +329,8 @@ object CarbonStream {
   def anomalyQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Series
     val live = Series.centsFrom(toMetrics(eventsStream(spark, dir)))
-    val sink = "stream_anomaly_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = Series.statsFrom(live)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Series.anomalyFrom(Series.centsFrom(Tables.metrics(spark, dir)),
-      drainMemorySink(spark, sink))
+    val moments = replay(Series.statsFrom(live), "complete")
+    Series.anomalyFrom(Series.centsFrom(Tables.metrics(spark, dir)), moments)
   }
 
   /** Oracle: identical to the batch 60 s average rollup — finite stream in
@@ -444,19 +369,14 @@ object CarbonStream {
     // state and therefore goes through graft.model.Spill.)
     val out = java.nio.file.Files
       .createTempDirectory("stream_rollup_append").toString
-    withStreamPartitions(spark) {
-      val q = windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
+    runToEnd(spark) {
+      windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
         .writeStream
         .format("parquet")
         .option("path", s"$out/data")
         .option("checkpointLocation", s"$out/chk")
         .outputMode("append")
         .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
     }
     spark.read.parquet(s"$out/data")
   }
@@ -469,27 +389,6 @@ object CarbonStream {
        |FROM c GROUP BY 1, 2
        |HAVING stat_time <= (SELECT max(ts) FROM metrics)""".stripMargin
 
-  /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle
-    * (datastore/metricstore.go:85-185 — accumulate deltas per flush
-    * interval, flush to the store, re-accumulate on collision) re-expressed
-    * without any streaming state at all. Each micro-batch computes its
-    * MERGEABLE partial rollup state (graft.operators.Rollups.mergeableFrom
-    * — commutative five-method state, all windows, one batch-local
-    * aggregation) and APPENDS it to the partitioned store; readers finalize
-    * with [[graft.sources.RollupStore.readFinalized]] (associative
-    * `mergeAll` + `finalize`). Because the state algebra is associative,
-    * the finalized store provably equals the single-pass batch `rollups`
-    * REGARDLESS of how ingest was sliced into flush cycles — the spec
-    * replays the fixture in 3 micro-batches and asserts bit-equality.
-    *
-    * Versus the append-mode windowed form ([[rollupAppendQuery]]): no
-    * watermark, no state store, no still-open-window tail — a late point
-    * lands as one more state row and merges in at read; compaction (rewrite
-    * a partition through `mergeAll`) amortizes read cost exactly like the
-    * reference's re-accumulation on flush collision. At 100 TB each flush
-    * cycle is a map-side-combined aggregation of just that cycle's points,
-    * and the store stays partition-pruned on (tbl, stat_date).
-    */
   /** Start (and return) the LIVE flush query — the daemon's ingest arm:
     * each staged source file becomes one micro-batch, reduced to its
     * mergeable rollup state and appended to the store as one slice. The
@@ -554,16 +453,30 @@ object CarbonStream {
       .start()
   }
 
+  /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle
+    * (datastore/metricstore.go:85-185 — accumulate deltas per flush
+    * interval, flush to the store, re-accumulate on collision) re-expressed
+    * without any streaming state at all. Each micro-batch computes its
+    * MERGEABLE partial rollup state (graft.operators.Rollups.mergeableFrom
+    * — commutative five-method state, all windows, one batch-local
+    * aggregation) and APPENDS it to the partitioned store; readers finalize
+    * with [[graft.sources.RollupStore.readFinalized]] (associative
+    * `mergeAll` + `finalize`). Because the state algebra is associative,
+    * the finalized store provably equals the single-pass batch `rollups`
+    * REGARDLESS of how ingest was sliced into flush cycles — the spec
+    * replays the fixture in 3 micro-batches and asserts bit-equality.
+    *
+    * Versus the append-mode windowed form ([[rollupAppendQuery]]): no
+    * watermark, no state store, no still-open-window tail — a late point
+    * lands as one more state row and merges in at read; compaction (rewrite
+    * a partition through `mergeAll`) amortizes read cost exactly like the
+    * reference's re-accumulation on flush collision. At 100 TB each flush
+    * cycle is a map-side-combined aggregation of just that cycle's points,
+    * and the store stays partition-pruned on (tbl, stat_date).
+    */
   def streamRollupsToStore(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet"): Unit =
-    withStreamPartitions(spark) {
-      val q = startRollupFlush(spark, srcDir, store, glob)
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    runToEnd(spark)(startRollupFlush(spark, srcDir, store, glob))
 
   /** The LIVE form of `series_fill`: the dashboard gap-repaired range read
     * served from stream state instead of a batch aggregation. The state is
@@ -583,22 +496,8 @@ object CarbonStream {
       toMetrics(eventsStream(spark, dir), keepId = true)
         .filter(col("path") === MetricQuery.FetchPath))
       .filter(col("tbl") === MetricQuery.FetchTable)
-    val sink = "stream_fill_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = live
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     Series.fillLastFrom(
-      MetricQuery.fetchFrom(spark, dir, drainMemorySink(spark, sink)))
+      MetricQuery.fetchFrom(spark, dir, replay(live, "complete")))
   }
 
   /** The live trend fit: `series_linreg`'s per-path moment tuple
@@ -615,21 +514,7 @@ object CarbonStream {
   def linregQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Series
     val live = Series.centsFrom(toMetrics(eventsStream(spark, dir)))
-    val sink = "stream_linreg_" + UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(spark) {
-      val q = Series.linregMomentsFrom(live)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Series.linregFrom(drainMemorySink(spark, sink))
+    Series.linregFrom(replay(Series.linregMomentsFrom(live), "complete"))
   }
 
   def ops: Seq[Op] = Seq(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -53,21 +51,7 @@ object DedupStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    val sink = "stream_dedup_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = dedupAgg(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+    CarbonStream.replay(dedupAgg(docs), "complete")
   }
 
   /** Oracle: identical to the batch exact dedup — finite stream in
@@ -213,28 +197,14 @@ object DedupStream {
     // test are the watermark/state-eviction rules, and a file sink adds a
     // per-micro-batch parquet commit (8 files + _spark_metadata per batch
     // at the bound partition count) that only measures sink IO.
-    val sink = "stream_dedup_wm_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = spark.readStream
-        .schema(streamSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("tts", timestamp_seconds(col("ts")))
-        .withWatermark("tts", s"$Horizon seconds")
-        .dropDuplicatesWithinWatermark("text_hash")
-        .select("doc_id", "text_hash")
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+    CarbonStream.replay(spark.readStream
+      .schema(streamSchema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(src)
+      .withColumn("tts", timestamp_seconds(col("ts")))
+      .withWatermark("tts", s"$Horizon seconds")
+      .dropDuplicatesWithinWatermark("text_hash")
+      .select("doc_id", "text_hash"), "append")
   }
 
   private val dedupWatermarkSql: String =
@@ -310,22 +280,7 @@ object DedupStream {
       .groupBy("doc_id")
       .agg(sum(when(bloomHit, 1L).otherwise(0L)).as("n_bloom"),
         count(col("hit")).as("n_shared"))
-
-    val sink = "stream_decon_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = counts
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    Dedup.bloomVerdict(CarbonStream.drainMemorySink(spark, sink))
+    Dedup.bloomVerdict(CarbonStream.replay(counts, "complete"))
   }
 
   // ------------------------------------------------------------ stream_chunk
@@ -345,21 +300,7 @@ object DedupStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    val sink = "stream_chunk_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.TextOps.chunkDocumentsFrom(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+    CarbonStream.replay(graft.operators.TextOps.chunkDocumentsFrom(docs), "append")
   }
 
   // -------------------------------------------------------- stream_chunk_ann
@@ -383,22 +324,8 @@ object DedupStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    val sink = "stream_cann_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = TextOps.chunkDenseRowLocal(docs)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     TextOps.chunkAnnFrom(spark, dir,
-      CarbonStream.drainMemorySink(spark, sink),
+      CarbonStream.replay(TextOps.chunkDenseRowLocal(docs), "append"),
       TextOps.chunkCentsFor(spark, dir, "trained", TextOps.ChunkCentMod),
       TextOps.ChunkNProbe)
   }
@@ -421,22 +348,9 @@ object DedupStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    val sink = "stream_mix_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     graft.operators.TextOps.mixFromCounts(spark,
-      CarbonStream.drainMemorySink(spark, sink),
+      CarbonStream.replay(
+        docs.groupBy("lang").agg(count(lit(1)).as("n_docs")), "complete"),
       graft.model.Tables.documents(spark, dir))
   }
 
@@ -458,25 +372,11 @@ object DedupStream {
       .schema(documentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
-    val sink = "stream_surprisal_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = docs
-        .select(explode(split(lower(col("text")), " ")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("tf"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
+    val tf = CarbonStream.replay(docs
+      .select(explode(split(lower(col("text")), " ")).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("tf")), "complete")
     graft.operators.TextOps.surprisalFromTf(
-      graft.model.Tables.documents(spark, dir),
-      CarbonStream.drainMemorySink(spark, sink))
+      graft.model.Tables.documents(spark, dir), tf)
   }
 
   // -------------------------------------------------------------- stream_pack
@@ -565,23 +465,11 @@ object DedupStream {
       StructField("doc_id", LongType),
       StructField("n_tok", LongType),
       StructField("shard", LongType)))
-    val sink = "stream_pack_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = packMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[PackDoc])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      CarbonStream.drainMemorySink(spark, sink)
+      CarbonStream.replay(packMachine(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src).as[PackDoc]).toDF(), "append")
     } finally {
       // the drained memory sink holds the rows; the replay files are done
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
@@ -610,23 +498,9 @@ object DedupStream {
       .parquet(dir)
     val banded = Multimodal.bandedFrom(Multimodal.featuresFrom(
       Multimodal.blobsFrom(docs)))
-    val sink = "stream_phash_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = banded
+    val drained = CarbonStream.replay(banded
         .groupBy("doc_id", "media_kind", "phash", "band", "sig")
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+        .agg(count(lit(1)).as("n")), "complete")
       .select("doc_id", "media_kind", "phash", "band", "sig")
     // pairsFromBanded SELF-joins the frame: rebase off the memory-sink
     // View first (Catalyst's conflicting-references gotcha, stream_cohort)
@@ -673,8 +547,8 @@ object DedupStream {
         (docs.filter(col("doc_id") > c2), s"$src/batch2.parquet", 60000L))
     } finally docs.unpersist(blocking = true)
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = spark.readStream
+      CarbonStream.runToEnd(spark) {
+        spark.readStream
           .schema(documentsSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(src)
@@ -694,7 +568,6 @@ object DedupStream {
           }
           .outputMode("append")
           .start()
-        try q.processAllAvailable() finally q.stop()
       }
       spark.read.parquet(out)
     } finally {

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -72,25 +70,11 @@ object SessionStream {
     */
   def sessionizeQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val se = Encoders.product[SessEvent]
-    val sink = "stream_sessionize_" + UUID.randomUUID().toString.replace("-", "")
     val events = CarbonStream.eventsStream(spark, dir)
       .select(col("user_id"), expr("ts DIV 1000000000").as("ts_sec"), col("event_id"))
       .as[SessEvent]
-    CarbonStream.withStreamPartitions(spark) {
-      val q = sessionize(events, graft.operators.Analytics.SessionGapSec)
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    CarbonStream.drainMemorySink(spark, sink)
+    CarbonStream.replay(
+      sessionize(events, graft.operators.Analytics.SessionGapSec).toDF(), "append")
   }
 
   /** Oracle: the batch sessionization minus each user's final (open)
@@ -146,24 +130,11 @@ object SessionStream {
       .select(col("user_id"),
         expr(s"ts DIV 1000000000 DIV ${graft.operators.Analytics.CohortWeekSec}")
           .as("week"))
-    val sink = "stream_cohort_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = ev.groupBy("user_id", "week").agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     // the readoff SELF-joins the matrix (first-seen ⋈ activity); a memory
     // sink's View keeps one attribute set, which Catalyst cannot dedup in
     // a self-join — rebase the matrix-sized frame onto fresh attributes
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = CarbonStream.replay(
+      ev.groupBy("user_id", "week").agg(count(lit(1)).as("n")), "complete")
       .select("user_id", "week")
     graft.operators.Analytics.cohortFrom(
       spark.createDataFrame(drained.rdd, drained.schema))
@@ -184,24 +155,11 @@ object SessionStream {
   def engagementQuery(spark: SparkSession, dir: String): DataFrame = {
     val ev = CarbonStream.eventsStream(spark, dir)
       .select(col("user_id"), expr("ts DIV 86400000000000").as("day"))
-    val sink = "stream_engagement_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = ev.groupBy("user_id", "day").agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
     // the readoff SELF-joins the matrix (dau ⋈ wau both derive from it);
     // rebase the memory-sink View onto fresh attributes (stream_cohort's
     // conflicting-references gotcha)
-    val drained = CarbonStream.drainMemorySink(spark, sink)
+    val drained = CarbonStream.replay(
+      ev.groupBy("user_id", "day").agg(count(lit(1)).as("n")), "complete")
       .select("user_id", "day")
     graft.operators.Analytics.engagementFrom(
       spark.createDataFrame(drained.rdd, drained.schema))
@@ -287,24 +245,12 @@ object SessionStream {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
-    val sink = "stream_trans_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = transitionsMachine(
+      graft.operators.Analytics.transitionProbFrom(CarbonStream.replay(
+        transitionsMachine(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[TransEvent])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      graft.operators.Analytics.transitionProbFrom(
-        CarbonStream.drainMemorySink(spark, sink))
+            .parquet(src).as[TransEvent]).toDF(), "append"))
     } finally {
       // the drained memory sink holds the rows; the replay files are done
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
@@ -432,27 +378,14 @@ object SessionStream {
     implicit val be = Encoders.product[BufEvent]
     val src = java.nio.file.Files.createTempDirectory("stream_btrans_src").toString
     val delaySec = writeSwappedReplay(spark, dir, src)
-    val schema = bufEventSchema
-    val sink = "stream_btrans_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = transitionsBufferedMachine(
-          spark.readStream.schema(schema)
+      graft.operators.Analytics.transitionProbFrom(CarbonStream.replay(
+        transitionsBufferedMachine(
+          spark.readStream.schema(bufEventSchema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      graft.operators.Analytics.transitionProbFrom(
-        CarbonStream.drainMemorySink(spark, sink))
+            .as[BufEvent]).toDF(), "append"))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
     }
@@ -557,22 +490,11 @@ object SessionStream {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType)))
-    val sink = "stream_funnel_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = funnelMachine(
+      val fin = CarbonStream.replay(funnelMachine(
           spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[FunnelEvent])
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      val fin = CarbonStream.drainMemorySink(spark, sink)
+            .parquet(src).as[FunnelEvent]), "append")
         .groupBy("user_id")
         .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
       graft.operators.Analytics.funnelAggFrom(
@@ -661,24 +583,13 @@ object SessionStream {
     implicit val be = Encoders.product[BufEvent]
     val src = java.nio.file.Files.createTempDirectory("stream_bfunnel_src").toString
     val delaySec = writeSwappedReplay(spark, dir, src)
-    val sink = "stream_bfunnel_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = funnelBufferedMachine(
+      val fin = CarbonStream.replay(funnelBufferedMachine(
           spark.readStream.schema(bufEventSchema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent])
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      val fin = CarbonStream.drainMemorySink(spark, sink)
+            .as[BufEvent]), "append")
         .groupBy("user_id")
         .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
       graft.operators.Analytics.funnelAggFrom(
@@ -782,23 +693,11 @@ object SessionStream {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("cents",
         org.apache.spark.sql.types.LongType)))
-    val sink = "stream_holt_" + UUID.randomUUID().toString.replace("-", "")
     try {
-      CarbonStream.withStreamPartitions(spark) {
-        val q = holtMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[HoltEvt])
-          .toDF()
-          .writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      CarbonStream.drainMemorySink(spark, sink)
+      CarbonStream.replay(holtMachine(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(src).as[HoltEvt]).toDF(), "append")
     } finally {
       // the drained memory sink holds the rows; the replay files are done
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
@@ -824,22 +723,8 @@ object SessionStream {
       .select(col("user_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-    val sink = "stream_attr_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Analytics.attributionPerUser(ev)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    graft.operators.Analytics.attributionFrom(
-      CarbonStream.drainMemorySink(spark, sink))
+    graft.operators.Analytics.attributionFrom(CarbonStream.replay(
+      graft.operators.Analytics.attributionPerUser(ev), "complete"))
   }
 
   // -------------------------------------------------------------- stream_rfm
@@ -860,22 +745,8 @@ object SessionStream {
       .select(col("user_id"), col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-    val sink = "stream_rfm_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Analytics.rfmPerUser(ev)
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-      }
-    }
-    graft.operators.Analytics.rfmFrom(
-      CarbonStream.drainMemorySink(spark, sink))
+    graft.operators.Analytics.rfmFrom(CarbonStream.replay(
+      graft.operators.Analytics.rfmPerUser(ev), "complete"))
   }
 
   def ops: Seq[Op] = Seq(

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -92,22 +90,10 @@ object WireStream {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("payload",
         org.apache.spark.sql.types.StringType)))
-    val sink = "stream_reassemble_" + UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = reassemble(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src).as[Packet])
-        .toDF()
-        .writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    val relines = CarbonStream.drainMemorySink(spark, sink)
+    val relines = CarbonStream.replay(reassemble(
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src).as[Packet]).toDF(), "append")
     Carbon.withParsedLine(relines, "line")
       .select(
         col("conn"), col("line_no"), col("valid"), col("peer_cmd"),

@@ -21,6 +21,8 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *     (worst-case diameter) in ≤ 2·log₂(64) rounds — plain min-label
   *     propagation needs 63.
   *  4. `withGlobalRank` must assign exactly 1..n across range partitions.
+  *  5. Finite stream replays use `CarbonStream.runToEnd` / `replay`; a
+  *     source scan fails on a hand-rolled start/drain/stop block.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -66,6 +68,42 @@ class Round12Spec extends AnyFunSuite with TestSpark {
         "a new Window.orderBy/empty partitionBy funnels a data-sized frame " +
         "through ONE task; use Partitioning.withGlobalRank (exact distributed " +
         "rank) or aggregate+broadcast instead, or audit the bound here")
+  }
+
+  // ----------------------------------------------- replay lifecycle census
+
+  /** The finite-replay lifecycle lives in ONE place: in the streaming
+    * package (comment lines stripped), `processAllAvailable`, a memory
+    * sink and a `withStreamPartitions(` call appear only inside the
+    * `CarbonStream.runToEnd` / `replay` definitions. Each hit is attributed
+    * to the nearest enclosing `def`, so a hand-rolled start/drain/stop
+    * block in any operator body fails here.
+    */
+  test("finite stream replays go through CarbonStream.runToEnd / replay") {
+    import scala.jdk.CollectionConverters._
+    val patterns = Seq("processAllAvailable", ".format(\"memory\")",
+      "withStreamPartitions(")
+    val defName = """\bdef\s+(\w+)""".r
+    val root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val hits = java.nio.file.Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val code = java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+        var enclosing = ""
+        code.flatMap { l =>
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          patterns.filter(l.contains).map(pat => (p.getFileName.toString, enclosing, pat))
+        }
+      }.sorted
+    val want = Seq(
+      ("CarbonStream.scala", "replay", ".format(\"memory\")"),
+      ("CarbonStream.scala", "runToEnd", "processAllAvailable"),
+      ("CarbonStream.scala", "runToEnd", "withStreamPartitions(")).sorted
+    assert(hits == want,
+      s"replay lifecycle census drifted: got $hits, want $want — run a finite " +
+        "stream through CarbonStream.replay (memory sink) or runToEnd (any " +
+        "other sink) instead of hand-rolling start/processAllAvailable/stop")
   }
 
   // ------------------------------------------------- rfm cut-point algebra

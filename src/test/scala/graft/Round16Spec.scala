@@ -141,4 +141,38 @@ class Round16Spec extends AnyFunSuite with TestSpark {
       s"row-local chunk argmax diverged: ${(got diff want).take(5)} vs " +
         s"${(want diff got).take(5)}")
   }
+
+  test("vec_best_code over an empty entry list is null, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    val entry = new StructType().add("code", IntegerType, nullable = false)
+      .add("cv", ArrayType(LongType, containsNull = false), nullable = false)
+      .add("cn", LongType, nullable = false)
+    // every child is non-null: only the kernel itself can produce the null
+    val e = graft.functions.VecBestCode(
+      BoundReference(0, ArrayType(LongType, containsNull = false), nullable = false),
+      BoundReference(1, LongType, nullable = false),
+      BoundReference(2, ArrayType(entry, containsNull = false), nullable = false))
+    assert(e.nullable)
+    val row = InternalRow(new GenericArrayData(Array[Any](3L, 4L)), 25L,
+      new GenericArrayData(Array.empty[Any]))
+    assert(e.eval(row) == null, "interpreted evaluation must give null")
+    // an unsafe projection writes the struct unless isNull is set, so a
+    // null value behind isNull=false fails here with an NPE
+    val projected = GenerateUnsafeProjection.generate(Seq(e)).apply(row)
+    assert(projected.isNullAt(0), "generated code must set isNull")
+    // end to end: a non-nullable declaration lets the optimizer fold
+    // `IS NULL` to false
+    graft.functions.VecMath.register(spark)
+    val nulls = spark.range(2)
+      .selectExpr("array(id + 3, id + 4) AS x", "id + 25 AS xn")
+      .selectExpr("vec_best_code(x, xn, filter(" +
+        "array(named_struct('code', 0, 'cv', x, 'cn', xn)), e -> false)) AS b")
+      .filter(col("b").isNull)
+      .count()
+    assert(nulls == 2)
+  }
 }
