@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered operator on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
   *
@@ -23,18 +21,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = opt("graft.bench.ops").map(_.split(",").map(_.trim).toSet)
+    val ops = opt("graft.bench.ops")
+      .map(names => Registry.select(names.split(",").map(_.trim).toSet))
+      .getOrElse(Registry.ops)
     val reps = opt("graft.bench.reps").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.envCores(32), "graft-bench")
 
     // warmup: touch every table + exercise codegen/shuffle machinery once,
     // so the first measured query doesn't pay JVM/classloading costs
@@ -45,27 +36,25 @@ object Bench {
     graft.model.Tables.metrics(spark, sfDir)
       .groupBy("path").count().write.format("noop").mode("overwrite").save()
 
-    val results = Registry.ops
-      .filter(op => only.forall(_.contains(op.name)))
-      .map { op =>
-        val dt = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          try op.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] ${op.name} failed: ${e.getMessage}")
-          }
-          val d = (System.nanoTime() - t0) / 1e9
-          // inter-query isolation: one op must not re-price the ones after
-          // it. clearCache drops Dataset-level cache entries; the RDD sweep
-          // frees localCheckpoint blocks, which live OUTSIDE the
-          // CacheManager.
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          d
-        }.min
-        op.name -> dt
-      }
+    val results = ops.map { op =>
+      val dt = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        try op.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] ${op.name} failed: ${e.getMessage}")
+        }
+        val d = (System.nanoTime() - t0) / 1e9
+        // inter-query isolation: one op must not re-price the ones after
+        // it. clearCache drops Dataset-level cache entries; the RDD sweep
+        // frees localCheckpoint blocks, which live OUTSIDE the
+        // CacheManager.
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        d
+      }.min
+      op.name -> dt
+    }
 
     val qs = results
       .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }

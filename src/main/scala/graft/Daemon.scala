@@ -299,13 +299,7 @@ object Daemon {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val store = java.nio.file.Files.createTempDirectory("graft_daemon_store").toString
     val src = java.nio.file.Files.createTempDirectory("graft_daemon_src").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4, "graft-daemon")
 
     val now = graft.model.Tables.metrics(spark, dir).agg(max("ts")).head().getLong(0)
     val daemon = new Daemon(spark, store, Some(now))

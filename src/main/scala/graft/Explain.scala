@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for the named operators
   * (or a default headline set) so shuffle/broadcast/pushdown shape can be
   * reviewed. `runMain graft.Explain [sfDir] [op,op,...]`.
@@ -38,15 +36,9 @@ object Explain {
         "knn_graph_ivf", "knn_graph_recall", "chunk_ann",
         "ann_ivf_stored", "multimodal_decode_real",
         "ann_ivf_stored_live", "ann_ivfpq_stored", "chunk_ann_stored"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val byName = Registry.ops.map(o => o.name -> o).toMap
+    // unknown names fail before the session starts; plans print in `names` order
+    val byName = Registry.select(names.toSet).map(o => o.name -> o).toMap
+    val spark = Harness.session(4, "graft-explain")
     // -Dgraft.explain.exec=true: EXECUTE each query first and print the
     // AQE FINAL plan (isFinalPlan=true) — the only view that shows
     // runtime exchange reuse (`ReusedExchange` / stage-cache dedup of

@@ -34,4 +34,18 @@ object Registry {
       graft.streaming.SessionStream.ops ++
       graft.streaming.WireStream.ops ++
       graft.streaming.AnnStream.ops
+
+  /** The ops `names` selects, in Registry order. An empty set or an
+    * unknown name fails here: a typo'd op filter would otherwise run
+    * nothing and report that as a result (an empty bench, a vacuous
+    * oracle check).
+    */
+  def select(names: Set[String]): Seq[Op] = {
+    require(names.nonEmpty, "op filter is set but names no ops")
+    val all = ops
+    val unknown = names -- all.map(_.name)
+    require(unknown.isEmpty,
+      s"op filter names unknown ops: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.filter(op => names.contains(op.name))
+  }
 }

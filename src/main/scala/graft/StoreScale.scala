@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -45,14 +45,7 @@ object StoreScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(6)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.envCores(32), "graft-store-scale")
 
     val m = Tables.metrics(spark, sfDir)
     val span = m.agg(min(expr("ts DIV 86400")), max(expr("ts DIV 86400"))).head()

@@ -2,8 +2,6 @@ package graft
 
 import java.net.{DatagramPacket, DatagramSocket, InetAddress, Socket}
 
-import org.apache.spark.sql.SparkSession
-
 /** Carbon-line load generator against the REAL listener sockets — the
   * reference's devtools/stresstest.go re-expressed against graft's own
   * front door: the same six-stat tick group (`foo.bar.baz.{average,max,
@@ -33,13 +31,7 @@ object StressTest {
     require(rate == 0 || (rate >= 5 && rate % 5 == 0),
       "rate must be >= 5 and divisible by 5 (or 0 = firehose)")
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(2, "graft-stress-test")
 
     val (port, receivedOk, receivedFail, flushFn, stopFn) =
       if (protocol == "tcp") {

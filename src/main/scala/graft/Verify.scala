@@ -1,33 +1,27 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered operator's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** The dump itself, separated from session lifecycle so Round9Spec can
     * run the SAME gate (dump + tools/oracle_check.py) over an adversarial
     * fixture dir inside the shared test session without stopping it.
+    * `only` goes through [[Registry.select]], so an empty or typo'd filter
+    * fails instead of dumping nothing and passing the check vacuously.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       only: Option[Set[String]] = None): Unit = {
     new java.io.File(outDir).mkdirs()
-    only.foreach { names =>
-      require(names.nonEmpty,
-        "op filter is set but names no ops — the dump would be " +
-          "empty and the oracle check would pass vacuously")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"op filter names unknown ops: ${unknown.mkString(", ")}")
-    }
-    def selected(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val ops = only.map(Registry.select).getOrElse(Registry.ops)
+    ops.foreach { op =>
+      try op.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${op.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${op.name} failed: ${e.getMessage}")
       }
     }
-    writeOracleJson(outDir, SparkEntry.oracleSql.filter(e => selected(e._1)))
+    writeOracleJson(outDir, ops.flatMap(op => op.oracle.map(op.name -> _)).toMap)
   }
 
   /** Write `<outDir>/oracle_sql.json` — factored out of [[dump]] so the
@@ -56,14 +50,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(Harness.envCores(4), "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     // -Dgraft.verify.ops=a,b restricts the dump (and the oracle json) for
     // fast local iteration on a changed operator; the driver runs unfiltered.

@@ -94,7 +94,7 @@ object Bpe {
       : Seq[(Int, String, String, Long)] =
     trainedMergesN(spark, dir, Merges)
 
-  /** Rounds-parameterized trainer (the `graft.BpeTune` sweep surface).
+  /** Rounds-parameterized trainer (the `graft.Tune bpe` sweep surface).
     * The merge sequence is PREFIX-STABLE: round r depends only on rounds
     * 1..r-1, so `trainedMergesN(n)` is the first n rows of any longer
     * training — a sweep trains once at its maximum and slices.
@@ -135,7 +135,7 @@ object Bpe {
 
   /** The composed apply chain for a merge table: one nested-replace SQL
     * expression over the wrapped form — shared by [[bpeEncode]] and the
-    * `graft.BpeTune` sweep.
+    * `graft.Tune bpe` sweep.
     */
   private[graft] def applyChainSql(merges: Seq[(Int, String, String, Long)]): String =
     merges.foldLeft(wrapSql) {

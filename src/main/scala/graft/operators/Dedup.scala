@@ -364,7 +364,6 @@ object Dedup {
     * `sketch_occupancy` operator is the measured gate that says when.
     */
   val SimhashPieceBits = 15
-  val SimhashPieces: Int = SimhashBits / SimhashPieceBits
 
   /** Per-document 60-bit SimHash `(doc_id, sh)` — the majority-bit
     * aggregation shared by every piece width.

@@ -368,7 +368,7 @@ object Similarity {
     * efficient direction: a distance-2 ring covers 106 of 2^14 buckets
     * (0.65%) per table. The shipped 32×14×d2 point is the r9 sf0.1-swept
     * knee for the ≥0.8-recall regime: recall@5 = 0.82 at 22.4% scanned on
-    * sf0.1 AND 0.90 at 22.8% on sf0.01 (`graft.LshTune`; docs/TUNING.md
+    * sf0.1 AND 0.90 at 22.8% on sf0.01 (`graft.Tune lsh`; docs/TUNING.md
     * has the full frontier; the per-round `ann_recall` key re-measures
     * it). The r8 16-table point (0.74 @ 12.9% sf0.01, but only 0.59 at
     * sf0.1) sat below the recall bar a curation pipeline wants. At 100 TB
@@ -395,7 +395,7 @@ object Similarity {
     * stream has period 2^11, so past 32 planes (2048 draws) "independent"
     * tables silently repeated earlier plane rows — measured as 6-, 8- and
     * 10-table configs returning byte-identical candidate sets
-    * (`graft.LshTune`). splitmix64's full-width mixing has no such lattice.
+    * (`graft.Tune lsh`). splitmix64's full-width mixing has no such lattice.
     * The stream is sequential, so `mkPlanes(n)` for a larger `n` extends
     * the same plane set rather than replacing it.
     */
@@ -435,7 +435,7 @@ object Similarity {
 
   /** Scored candidate pairs `(q_id, vec_id, cos)` for a given table/probe
     * configuration — the shared core of [[lshBucketed]] and the
-    * `graft.LshTune` dial-measurement harness.
+    * `graft.Tune lsh` dial-measurement harness.
     *
     * Plan shape: ALL table signatures come out of one map-only corpus
     * projection (one `vec_signbits` call per table); each table joins the
@@ -680,7 +680,7 @@ object Similarity {
     semanticDedupWith(spark, dir, DupThreshold, CentroidMod)
 
   /** [[semanticDedup]] at an explicit `(threshold, centroidMod)` — the
-    * dial surface `graft.SemTune` sweeps: the threshold is the
+    * dial surface `graft.Tune sem` sweeps: the threshold is the
     * aggressiveness knob (higher ⇒ fewer drops, monotone — spec-pinned),
     * `centroidMod` the cell-width/recall trade (more cells ⇒ cheaper
     * pair join but near-dups straddling a cell boundary go unseen — the
@@ -744,10 +744,6 @@ object Similarity {
     fixedVecs(spark, dir)
       .select(col("vec_id"), posexplode(sigArr).as(Seq("t", "b")))
   }
-
-  /** [[lshTableSigsWith]] at the shipped [[NumTables]]×[[PlanesPerTable]]. */
-  private[graft] def lshTableSigs(spark: SparkSession, dir: String): DataFrame =
-    lshTableSigsWith(spark, dir, NumTables, PlanesPerTable)
 
   private val embeddingNearDupSql: String = {
     val elem = (i: Int) => s"v[$i]"
@@ -877,7 +873,7 @@ object Similarity {
     topKFromCands(ivfCands(vecs, cents, NProbe))
 
   /** Scored IVF candidates `(q_id, vec_id, cos)` for a given quantizer and
-    * probe width — shared by [[ivfFrom]] and `graft.IvfTune`.
+    * probe width — shared by [[ivfFrom]] and `graft.Tune ivf`.
     */
   private[graft] def ivfCands(vecs: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
     // Corpus assignment is the sort-free max_by aggregation (see
@@ -967,7 +963,7 @@ object Similarity {
     ivfAssignmentsWith(spark, dir, CentroidMod)
 
   /** Per-cell inverted-list sizes `(c_id, occ)` for an arbitrary
-    * quantizer — the occupancy view `graft.IvfTune` reports next to
+    * quantizer — the occupancy view `graft.Tune ivf` reports next to
     * recall for the seed/trained/balanced quantizers.
     */
   private[graft] def assignNearestOcc(vecs: DataFrame, cents: DataFrame): DataFrame =
@@ -1068,7 +1064,7 @@ object Similarity {
   }
 
   /** [[mutualKnnEdgesIvf]] at an explicit `(source, centroidMod, nprobe)`
-    * — the dial surface `graft.KnnGraphTune` sweeps (docs/TUNING.md
+    * — the dial surface `graft.Tune knngraph` sweeps (docs/TUNING.md
     * records the frontier; nprobe 1→2 measured 0.36→0.92 edge recall at
     * sf0.01; seed→trained quantizer is the r14 lever).
     */
@@ -1165,7 +1161,7 @@ object Similarity {
     * sf0.01 0.921 → 0.942.
     */
   /** NN-Descent rounds shipped by `knn_graph_refined` (and the refined
-    * row of `knn_graph_recall`) — swept by `graft.KnnGraphTune`.
+    * row of `knn_graph_recall`) — swept by `graft.Tune knngraph`.
     */
   val KnnRefineRounds = 2
 
@@ -1423,7 +1419,7 @@ object Similarity {
     * division — the house float bound).
     */
   /** The exact slice edge set / the IVF slice edge set at an explicit
-    * dial — `graft.KnnGraphTune`'s two measurement surfaces.
+    * dial — `graft.Tune knngraph`'s two measurement surfaces.
     */
   private[graft] def exactSliceEdges(spark: SparkSession, dir: String): DataFrame =
     mutualKnnEdges(spark, dir, "tune_slice")
@@ -1611,7 +1607,7 @@ object Similarity {
   // ---------------------------------------------------------- k-means train
 
   /** Fixed Lloyd-iteration count: determinism is the contract (the oracle
-    * unrolls exactly this many rounds). 4 is the `graft.IvfTune`-measured
+    * unrolls exactly this many rounds). 4 is the `graft.Tune ivf`-measured
     * best on both fixtures — IVF recall@5 at sf0.1 (16 centroids, the
     * realistic-k fixture): seed 0.350 → trained 0.365; at sf0.01 the
     * quantizer is only 4 centroids (nprobe=2 already scans ~50%), so
@@ -1852,7 +1848,7 @@ object Similarity {
     * split step; the clone pair separates along the cell's own density in
     * the next round) — then the remaining rounds are pure Lloyd polish.
     * Every variant of MORE aggressive swapping measured WORSE on the
-    * sf0.1 fixture (graft.IvfTune, r9): per-round swaps thrash Lloyd's
+    * sf0.1 fixture (graft.Tune ivf, r9): per-round swaps thrash Lloyd's
     * convergence (max_occ 148-149 vs 143), final-round swaps ship an
     * unrefined split, and boundary seeding (farthest member as the new
     * centroid) steals from neighboring cells. The shipped rule moves the
@@ -1921,7 +1917,7 @@ object Similarity {
 
   /** `ann_ivf_balanced`: [[ivf]] with the split-hot/merge-cold balanced
     * quantizer — same probe shape as [[ivfTrained]], but the inverted
-    * lists it scans are the BALANCED ones (`graft.IvfTune` measures the
+    * lists it scans are the BALANCED ones (`graft.Tune ivf` measures the
     * max/mean list occupancy next to recall for all three quantizers).
     */
   def ivfBalanced(spark: SparkSession, dir: String): DataFrame = {
@@ -2033,7 +2029,7 @@ object Similarity {
     */
   val PqSubs = 8
   val PqSubDim: Int = Dim / PqSubs
-  /** r15: 32 → 64 — the r15 `graft.PqTune` re-sweep (trained codebooks,
+  /** r15: 32 → 64 — the r15 `graft.Tune pq` re-sweep (trained codebooks,
     * sf0.1): k 32→64 at UNCHANGED shortlist lifts recall@5
     * 0.780 → 0.895 at the SAME 5% re-rank fetch fraction — codebook
     * size is the cheaper dial (encode work, never re-rank fetches), and
@@ -2110,7 +2106,7 @@ object Similarity {
   /** Lloyd rounds for the TRAINED per-subspace codebooks (r14): FAISS
     * trains PQ codebooks with k-means in each subspace; the hash-ranked
     * sample is only the SEED. The house TrainIters knee, re-measured on
-    * the PQ domain by `graft.PqTune` seed-vs-trained.
+    * the PQ domain by `graft.Tune pq` seed-vs-trained.
     */
   val PqTrainIters = 4
 
@@ -2274,7 +2270,7 @@ object Similarity {
 
   /** ADC shortlist width: the compressed scan keeps this many candidates
     * per probe for the exact re-rank. The dial trades re-rank fetches for
-    * recall; (PqCodebookK=32, PqShortlist=100) is the `graft.PqTune`-swept
+    * recall; (PqCodebookK=32, PqShortlist=100) is the `graft.Tune pq`-swept
     * knee — recall@5 = 0.70 at 5.0% re-ranked at sf0.1, 0.84 at sf0.01
     * (docs/TUNING.md). Codebook size is the cheaper dial (it costs encode
     * work, not re-rank fetches): mean qerr drops 1.22e13 -> 7.9e12 from
@@ -2302,7 +2298,7 @@ object Similarity {
     annPqWith(spark, dir, PqShortlist)
 
   /** [[annPq]] at an explicit ADC shortlist width — the recall dial
-    * `graft.PqTune` sweeps.
+    * `graft.Tune pq` sweeps.
     */
   def annPqWith(spark: SparkSession, dir: String, shortlist: Int,
       codebookK: Int = PqCodebookK, source: String = "trained"): DataFrame = {
@@ -2544,7 +2540,7 @@ object Similarity {
     * "measure, don't guess" harness a pipeline runs before trusting a
     * sketch at scale: the width dials (NumTables/PlanesPerTable/ProbeDist,
     * CentroidMod, NProbe, TrainIters) are only safe to turn if this number
-    * is watched while turning them (`graft.LshTune` / `graft.IvfTune` are
+    * is watched while turning them (`graft.Tune lsh` / `graft.Tune ivf` are
     * the sweep drivers). One row per approximate method with its matched /
     * truth counts and recall fraction.
     *

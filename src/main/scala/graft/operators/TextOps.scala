@@ -1256,7 +1256,7 @@ object TextOps {
   val ChunkNProbe = 12
   /** Lloyd rounds for the TRAINED chunk-space quantizer (r14): the house
     * [[graft.operators.Similarity.TrainIters]] knee, re-measured on the
-    * chunk domain by `graft.ChunkAnnTune` seed-vs-trained.
+    * chunk domain by `graft.Tune chunkann` seed-vs-trained.
     */
   val ChunkTrainIters = 4
   /** Centroid coordinates live at 1e6× the raw hashing-trick scale:
@@ -1377,7 +1377,7 @@ object TextOps {
     chunkAnnWith(spark, dir, ChunkCentMod, ChunkNProbe, "trained")
 
   /** [[chunkAnn]] at an explicit `(centMod, nprobe, source)` — the dial
-    * surface `graft.ChunkAnnTune` sweeps (frontier in docs/TUNING.md;
+    * surface `graft.Tune chunkann` sweeps (frontier in docs/TUNING.md;
     * seed→trained quantizer is the r14 scale lever).
     */
   private[graft] def chunkAnnWith(spark: SparkSession, dir: String,

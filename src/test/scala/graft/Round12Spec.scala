@@ -23,8 +23,23 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *  4. `withGlobalRank` must assign exactly 1..n across range partitions.
   *  5. Finite stream replays use `CarbonStream.runToEnd` / `replay`; a
   *     source scan fails on a hand-rolled start/drain/stop block.
+  *  6. Mains build their session through `Harness.session` and tune
+  *     through the one `graft.Tune` main; a source scan fails on a new
+  *     hand-built session or a new `*Tune` main.
+  *  7. `Registry.select` rejects an empty or typo'd op filter, which
+  *     would otherwise run nothing and report that as a result.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
+
+  /** Trimmed code lines of one source file. Comment lines are stripped:
+    * scaladoc bodies and line comments may legitimately DISCUSS the
+    * pattern a census bans.
+    */
+  private def codeLines(p: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(p).asScala.toSeq.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+  }
 
   // ------------------------------------------------------------- window ban
 
@@ -54,12 +69,7 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     val hits = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
-        val code = java.nio.file.Files.readAllLines(p).asScala
-          .map(_.trim)
-          // strip comment lines: scaladoc bodies and line comments may
-          // legitimately DISCUSS the banned pattern
-          .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
-        val n = code.count(l =>
+        val n = codeLines(p).count(l =>
           l.contains("Window.orderBy(") || l.contains("Window.partitionBy()"))
         if (n == 0) None else Some(p.getFileName.toString -> n)
       }.toMap
@@ -88,10 +98,8 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     val hits = java.nio.file.Files.list(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { p =>
-        val code = java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
-          .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
         var enclosing = ""
-        code.flatMap { l =>
+        codeLines(p).flatMap { l =>
           defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
           patterns.filter(l.contains).map(pat => (p.getFileName.toString, enclosing, pat))
         }
@@ -104,6 +112,45 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       s"replay lifecycle census drifted: got $hits, want $want — run a finite " +
         "stream through CarbonStream.replay (memory sink) or runToEnd (any " +
         "other sink) instead of hand-rolling start/processAllAvailable/stop")
+  }
+
+  // ------------------------------------------- session + tuning-main census
+
+  /** Session conventions (local width, shuffle width, UTC, no UI, log
+    * level) are decided in `Harness.session`; the only other builder in
+    * `src/main` is ClusterSmoke's `local-cluster` master. Tuning sweeps
+    * are rows of `graft.Tune`'s dial table, not mains of their own.
+    */
+  test("mains build sessions through Harness and tune through graft.Tune") {
+    import scala.jdk.CollectionConverters._
+    val tuneObject = """\bobject\s+(\w*Tune)\b""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> codeLines(p))
+    val builders = sources.collect {
+      case (f, code) if code.exists(_.contains("SparkSession.builder")) => f
+    }.sorted
+    assert(builders.toSet.subsetOf(Set("ClusterSmoke.scala", "Harness.scala")),
+      s"SparkSession.builder outside Harness: $builders — build the session " +
+        "with Harness.session(cores, appName)")
+    val tunes = sources.flatMap { case (_, code) =>
+      code.flatMap(l => tuneObject.findAllMatchIn(l).map(_.group(1)))
+    }
+    assert(tunes == Seq("Tune"),
+      s"tuning mains: $tunes — add a sweep to graft.Tune's dial table instead")
+  }
+
+  test("Registry.select fails on unknown or empty op filters, keeps Registry order") {
+    val typo = intercept[IllegalArgumentException](
+      Registry.select(Set("rollup_multi", "dedup_clustr", "ann_ivff")))
+    assert(typo.getMessage.contains("dedup_clustr") && typo.getMessage.contains("ann_ivff"),
+      typo.getMessage)
+    assert(!typo.getMessage.contains("rollup_multi"), typo.getMessage)
+    intercept[IllegalArgumentException](Registry.select(Set.empty))
+    val names = Registry.ops.map(_.name)
+    assert(names.indexOf("rollup_multi") < names.indexOf("dedup_cluster"))
+    assert(Registry.select(Set("dedup_cluster", "rollup_multi")).map(_.name) ==
+      Seq("rollup_multi", "dedup_cluster"))
   }
 
   // ------------------------------------------------- rfm cut-point algebra
