@@ -18,7 +18,8 @@ import graft.streaming.CarbonStream
   *    Streaming query, one mergeable state slice appended to the store
   *    per flush cycle;
   *  - SERVE: `MetricsHttpServer` over a `StoreBackend` — every HTTP
-  *    answer is merge-on-read over whatever ingest has flushed so far;
+  *    answer is merge-on-read over whatever ingest has flushed so far,
+  *    from one cached view per store listing;
   *  - MAINTAIN: `RollupStore.compact` (fold accumulated slices) and
   *    `RollupStore.dropExpired` (physical TTL), safe to fire while the
   *    other two arms run: the compaction lease makes readers/appenders
@@ -33,8 +34,8 @@ final class Daemon(spark: SparkSession, store: String,
     nowSec: Option[Long] = None,
     healthCheckFile: Option[java.nio.file.Path] = None) {
 
-  private val httpd = new MetricsHttpServer(
-    new MetricsHttpServer.StoreBackend(spark, store, nowSec), healthCheckFile)
+  private[graft] val backend = new MetricsHttpServer.StoreBackend(spark, store, nowSec)
+  private val httpd = new MetricsHttpServer(backend, healthCheckFile)
   @volatile private var ingestQ: StreamingQuery = _
 
   /** Bind the API (port 0 = ephemeral); returns the bound port. */

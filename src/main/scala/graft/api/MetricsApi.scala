@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{RollupConfig, Tables}
 import graft.operators.{Index, MetricQuery, Rollups}
@@ -90,25 +91,25 @@ object MetricsApi {
     * ships the glob to its search backend with no tenant notion — a
     * wildcard first segment matches lexically across namespaces). Pass
     * `Some(tenant)` to execute AS a tenant (the r10 index model,
-    * `Index.globNodes`): the query then cannot see other tenants' nodes.
+    * `Index.globMatches`): the query then cannot see other tenants' nodes.
     */
   def getPaths(spark: SparkSession, dir: String, glob: String,
       tenant: Option[String] = None): Seq[PathEntry] =
     getPathsFrom(Index.build(spark, dir), glob, tenant)
 
   /** Glob over ANY prebuilt index frame — shared by the fixture endpoint
-    * above and `Daemon`'s store-fed index.
+    * above and `Daemon`'s store-fed index. The matches are collected and
+    * sorted on the driver with Spark's own string order (UTF-8 bytes,
+    * `UTF8String.compareTo`), which equals `orderBy("node")` without its
+    * range-sampling job and shuffle; index nodes are unique and non-null.
     */
   def getPathsFrom(idx: DataFrame, glob: String,
-      tenant: Option[String] = None): Seq[PathEntry] = {
-    val depth = glob.split("\\.").length
-    tenant.fold(
-      idx.filter(col("depth") === depth && col("node").rlike(Index.globToRegex(glob)))
-        .orderBy("node"))(t => Index.globNodes(idx, glob, t))
+      tenant: Option[String] = None): Seq[PathEntry] =
+    Index.globMatches(idx, glob, tenant)
       .collect()
       .map(r => PathEntry(r.getString(0), r.getInt(1), r.getBoolean(2)))
+      .sortBy(e => UTF8String.fromString(e.path))
       .toSeq
-  }
 
   /** `DELETE /paths?query=glob` (api/api.go:124-147; backend semantics =
     * the `index_delete` operator): drop the glob-matched leaf paths of the

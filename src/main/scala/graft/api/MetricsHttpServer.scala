@@ -22,10 +22,17 @@ import org.apache.spark.sql.SparkSession
   *
   * Serving model: queries the daemon answers from its in-memory rollup
   * accumulator are answered here by Spark jobs over the store — the API
-  * collects only the final small payload (MetricsApi's contract). One
-  * request at a time per server instance, matching the reference's
+  * collects only the final small payload (MetricsApi's contract). Each
+  * request lists the store once; requests that see the same listing share
+  * ONE merged view of it (cached on first use, dropped when the listing
+  * changes — see [[MetricsHttpServer.StoreBackend]]), so a repeated query
+  * costs a scan of the cached view, not a read and merge of every slice.
+  * A view built while a compaction swap was deleting its sources is never
+  * served after the swap: no later listing names the files it deleted.
+  * One request at a time per server instance, matching the reference's
   * channel-serialized index/metric managers; a production deployment
   * fronts the engine with whatever pool it needs, the routes don't change.
+  * [[stop]] closes the backend, which releases the cached view.
   */
 final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     healthCheckFile: Option[java.nio.file.Path] = None) {
@@ -84,7 +91,10 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    backend.close()
+  }
 
   // ------------------------------------------------------------ routing
 
@@ -265,6 +275,10 @@ object MetricsHttpServer {
     def getMetrics(paths: Seq[String], from: Long, to: Long): MetricsApi.MetricsResponse
     def deleteMetrics(paths: Seq[String], from: Long, to: Long,
         dryRun: Boolean): MetricsApi.DeleteResponse
+    /** Release what the backend holds (cached frames); the server calls
+      * it on [[MetricsHttpServer.stop]]. Stateless backends keep the no-op.
+      */
+    def close(): Unit = ()
   }
 
   /** Every answer derived from the raw fixture tables (the r10 server). */
@@ -288,34 +302,94 @@ object MetricsHttpServer {
     * additive swap never destroys a mid-flight append). `nowSec` defaults
     * to wall clock, the live daemon's table-selection age; tests pin it.
     *
+    * ONE LISTING PER REQUEST, ONE VIEW PER SNAPSHOT. Every request (and
+    * every retry attempt) takes a fresh [[RollupStore.snapshot]]. When it
+    * equals the token of the current [[View]], the route runs over that
+    * view's cached merged frame; otherwise the stale view is dropped and
+    * a new one is built from exactly the snapshot's files
+    * ([[RollupStore.readFinalizedResilient]]). A view is installed only
+    * after its first action succeeds. Its content is a function of its
+    * token, so any flush, compaction swap or TTL drop changes the next
+    * listing and the next request rebuilds. A view built inside a swap
+    * window (a listed fold source deleted before the scan) undercounts,
+    * the documented transient state, but its token names the deleted
+    * file, which no listing taken after the swap contains, so it is never
+    * served past the swap.
+    *
     * healthcheck reports the SERVICE, like the reference's healthHandler:
-    * ALIVE whenever the store read path works (an empty, pre-first-flush
-    * store answers queries with empty series), DEAD only when the session
-    * or filesystem is broken.
+    * ALIVE whenever the session is up and the store lists (an empty,
+    * pre-first-flush store answers queries with empty series), DEAD only
+    * when the session or filesystem is broken. It runs no Spark job, so
+    * a load-balancer poll never builds a view.
     */
   final class StoreBackend(spark: SparkSession, store: String,
       nowSec: Option[Long] = None) extends Backend {
-    private def finalized: org.apache.spark.sql.DataFrame =
-      graft.sources.RollupStore.readFinalizedResilient(spark, store)
-    private def pathCatalog = finalized.select("path").distinct()
-    // every route's ACTION runs under the store's optimistic read-retry:
-    // each attempt rebuilds the frame (def, not val), so a retry re-plans
-    // from a FRESH file listing after a maintenance swap window
-    private def retrying[A](f: => A): A =
-      graft.sources.RollupStore.retryTransientReads(() => f)
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import graft.operators.Index
+    import graft.sources.RollupStore
+
+    /** The merged, finalized store at one snapshot, cached on first use;
+      * the path index is built only when a `/paths` route asks for it.
+      */
+    private final class View(val token: Seq[RollupStore.SliceFile]) {
+      val finalized: DataFrame =
+        RollupStore.readFinalizedResilient(spark, store, token).persist(MEMORY_AND_DISK)
+      private var idx: DataFrame = _
+      def index: DataFrame = synchronized {
+        if (idx == null)
+          idx = Index.indexFrom(finalized.select("path").distinct()).persist(MEMORY_AND_DISK)
+        idx
+      }
+      def unpersist(): Unit = synchronized {
+        if (idx != null) idx.unpersist()
+        finalized.unpersist()
+      }
+    }
+
+    @volatile private var view: View = _
+    private var closed = false
+
+    private[graft] val viewsBuilt = new java.util.concurrent.atomic.AtomicLong
+
+    private def retire(): Unit = synchronized {
+      if (view != null) { view.unpersist(); view = null }
+    }
+
+    /** Run `f` over the view of a fresh listing, under the store's
+      * optimistic read-retry: each attempt lists again, so a retry after a
+      * swap-window read error re-plans from the new listing.
+      */
+    private def withView[A](f: View => A): A =
+      RollupStore.retryTransientReads { () =>
+        val token = RollupStore.snapshot(spark, store)
+        val current = view
+        if (current != null && current.token == token) f(current)
+        else {
+          retire() // first: one view's blocks in memory at a time
+          val fresh = new View(token)
+          viewsBuilt.incrementAndGet()
+          val out = try f(fresh) catch { case e: Throwable => fresh.unpersist(); throw e }
+          synchronized { if (closed) fresh.unpersist() else view = fresh }
+          out
+        }
+      }
+
     def healthcheck(): Boolean =
-      try retrying(finalized.limit(1).count()) >= 0 catch { case _: Throwable => false }
+      try { RollupStore.snapshot(spark, store); !spark.sparkContext.isStopped }
+      catch { case _: Throwable => false }
     def getPaths(glob: String, tenant: Option[String]): Seq[MetricsApi.PathEntry] =
-      retrying(MetricsApi.getPathsFrom(
-        graft.operators.Index.indexFrom(pathCatalog), glob, tenant))
+      withView(v => MetricsApi.getPathsFrom(v.index, glob, tenant))
     def deletePaths(glob: String): Long =
-      retrying(graft.operators.Index.deleteFrom(
-        pathCatalog, glob, glob.split("\\.")(0)).count())
+      withView(v => Index.deleteFrom(
+        v.finalized.select("path").distinct(), glob, glob.split("\\.")(0)).count())
     def getMetrics(paths: Seq[String], from: Long, to: Long): MetricsApi.MetricsResponse =
-      retrying(MetricsApi.getMetricsFrom(finalized, paths, from, to,
+      withView(v => MetricsApi.getMetricsFrom(v.finalized, paths, from, to,
         nowSec.getOrElse(System.currentTimeMillis() / 1000)))
     def deleteMetrics(paths: Seq[String], from: Long, to: Long,
         dryRun: Boolean): MetricsApi.DeleteResponse =
-      retrying(MetricsApi.deleteMetricsFrom(finalized, paths, from, to, dryRun)._1)
+      withView(v => MetricsApi.deleteMetricsFrom(v.finalized, paths, from, to, dryRun)._1)
+
+    override def close(): Unit = synchronized { closed = true; retire() }
   }
 }

@@ -96,18 +96,25 @@ object Index {
   val GlobQuery = "servers.*.u3"
   val GlobTenant = "servers"
 
-  /** Tenant-scoped glob over a built index: a query executes AS a tenant
-    * and can only see that tenant's namespace, even when the glob's first
-    * segment is a wildcard that would lexically match other tenants'
-    * nodes (Round10Spec drives exactly that cross-tenant case). The
+  /** The index nodes a glob matches at its depth, unordered. With a
+    * tenant the query executes AS that tenant and can only see its
+    * namespace, even when the glob's first segment is a wildcard that
+    * would lexically match other tenants' nodes (Round10Spec drives
+    * exactly that cross-tenant case); without one it matches across
+    * namespaces, like the reference endpoint.
+    */
+  private[graft] def globMatches(index: DataFrame, glob: String,
+      tenant: Option[String]): DataFrame = {
+    val atDepth = col("depth") === glob.split("\\.").length &&
+      col("node").rlike(globToRegex(glob))
+    index.filter(tenant.fold(atDepth)(t => col("tenant") === t && atDepth))
+  }
+
+  /** Tenant-scoped glob over a built index, sorted by node. The
     * registered op queries as [[GlobTenant]], the fixture's namespace.
     */
   private[graft] def globNodes(index: DataFrame, glob: String, tenant: String): DataFrame =
-    index
-      .filter(col("tenant") === tenant &&
-        col("depth") === glob.split("\\.").length &&
-        col("node").rlike(globToRegex(glob)))
-      .orderBy("node")
+    globMatches(index, glob, Some(tenant)).orderBy("node")
 
   def glob(spark: SparkSession, dir: String): DataFrame =
     globNodes(build(spark, dir), GlobQuery, GlobTenant)

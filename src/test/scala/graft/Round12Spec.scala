@@ -28,6 +28,9 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *     hand-built session or a new `*Tune` main.
   *  7. `Registry.select` rejects an empty or typo'd op filter, which
   *     would otherwise run nothing and report that as a result.
+  *  8. `RollupStore.readFinalizedResilient` is called only from the
+  *     daemon's serving view; a source scan fails on a new per-request
+  *     store read.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -138,6 +141,33 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     }
     assert(tunes == Seq("Tune"),
       s"tuning mains: $tunes — add a sweep to graft.Tune's dial table instead")
+  }
+
+  // ------------------------------------------------- serving-read census
+
+  /** The daemon's store reads go through ONE place: the serving view of
+    * `MetricsHttpServer.StoreBackend`, built once per store listing. Each
+    * call of `readFinalizedResilient` in `src/main` (comment lines
+    * stripped) is attributed to its enclosing `def` or `class`, so a new
+    * per-request read and merge of the store fails here.
+    */
+  test("readFinalizedResilient is called only from the serving view builder") {
+    import scala.jdk.CollectionConverters._
+    val owner = """\b(?:def|class)\s+(\w+)""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        var enclosing = ""
+        codeLines(p).flatMap { l =>
+          owner.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          if (l.contains("readFinalizedResilient(") && !l.contains("def readFinalizedResilient"))
+            Seq((p.getFileName.toString, enclosing))
+          else Nil
+        }
+      }.sorted
+    assert(hits == Seq(("MetricsHttpServer.scala", "View")),
+      s"serving-read census drifted: got $hits — answer store queries from " +
+        "StoreBackend's view (one merged frame per listing), not a fresh read per request")
   }
 
   test("Registry.select fails on unknown or empty op filters, keeps Registry order") {
@@ -680,6 +710,14 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       42
     }
     assert(got == 42 && n == 3)
+    // a file a serving snapshot listed, gone before the read was planned
+    var planned = 0
+    assert(RollupStore.retryTransientReads { () =>
+      planned += 1
+      if (planned == 1) throw new RuntimeException(
+        "[PATH_NOT_FOUND] Path does not exist: file:/store/tbl=t/stat_date=d/part-0.parquet")
+      7
+    } == 7 && planned == 2)
     // a non-read error is NOT swallowed — fails on the first attempt
     var m = 0
     intercept[IllegalStateException] {
