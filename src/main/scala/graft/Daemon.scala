@@ -80,66 +80,48 @@ final class Daemon(spark: SparkSession, store: String,
     loaded
   }
 
-  @volatile private var udp: UdpListener = _
+  @volatile private var wire: LineIngest = _
+  @volatile private var wireSrcDir: String = _
 
-  /** The real wire front door: bind a UDP socket whose datagrams are
-    * remainder-carry reassembled and parsed on the listener thread
-    * ([[UdpListener]]), with `srcDir` as the slice staging area the
-    * metric flush query drains — the full cassabon listener arm. Returns
-    * the bound port. `udpFlush(name)` drains accepted rows into one
-    * staged slice = one flush cycle.
+  /** The real wire front door: bind `listener`, whose accepted rows are
+    * staged as slices in `srcDir` for the metric flush query — the full
+    * cassabon listener arm. One wire arm per daemon; returns the bound port.
     */
-  def startUdpIngest(srcDir: String): Int = {
-    require(udp == null && tcp == null, "one wire arm per daemon")
-    udp = new UdpListener
+  private def startWire(listener: => LineIngest, srcDir: String): Int = {
+    require(wire == null, "one wire arm per daemon")
+    wire = listener
+    wireSrcDir = srcDir
     ingestQ = CarbonStream.startMetricRollupFlush(spark, srcDir, store,
       config = () => rollupDefs)
-    udpSrcDir = srcDir
-    udp.port
+    wire.port
   }
-  @volatile private var udpSrcDir: String = _
 
-  /** Drain the UDP listener's accepted rows into one flush slice; returns
-    * rows flushed (0 = nothing pending, no slice staged).
+  /** Drain the wire arm's accepted rows into one staged slice = one flush
+    * cycle; returns rows flushed (0 = nothing pending, no slice staged).
     */
-  def udpFlush(name: String): Int = {
-    require(udp != null, "startUdpIngest first")
-    udp.flush(spark, udpSrcDir, name)
+  private def wireFlush(name: String): Int = {
+    require(wire != null, "start a wire arm first")
+    wire.flush(spark, wireSrcDir, name)
   }
 
-  def listener: UdpListener = udp
-
-  @volatile private var tcp: TcpListener = _
-  @volatile private var tcpSrcDir: String = _
+  /** A UDP socket whose datagrams are remainder-carry reassembled
+    * ([[UdpListener]]).
+    */
+  def startUdpIngest(srcDir: String): Int = startWire(new UdpListener, srcDir)
+  def udpFlush(name: String): Int = wireFlush(name)
+  def listener: UdpListener = wire match { case u: UdpListener => u; case _ => null }
 
   /** The reference's PRIMARY wire transport (carbonTCP,
-    * carbon_plaintext.go:68-123): bind a TCP accept loop whose
-    * per-connection byte streams are line-scanned with the shared
-    * metricHandler ([[TcpListener]]); same staging/flush contract as the
-    * UDP arm. One wire arm per daemon — both share `ingestQ`.
+    * carbon_plaintext.go:68-123): a TCP accept loop whose per-connection
+    * byte streams are line-scanned ([[TcpListener]]).
     */
-  def startTcpIngest(srcDir: String): Int = {
-    require(udp == null && tcp == null, "one wire arm per daemon")
-    tcp = new TcpListener
-    ingestQ = CarbonStream.startMetricRollupFlush(spark, srcDir, store,
-      config = () => rollupDefs)
-    tcpSrcDir = srcDir
-    tcp.port
-  }
-
-  /** Drain the TCP listener's accepted rows into one flush slice; returns
-    * rows flushed (0 = nothing pending, no slice staged).
-    */
-  def tcpFlush(name: String): Int = {
-    require(tcp != null, "startTcpIngest first")
-    tcp.flush(spark, tcpSrcDir, name)
-  }
-
-  def tcpListener: TcpListener = tcp
+  def startTcpIngest(srcDir: String): Int = startWire(new TcpListener, srcDir)
+  def tcpFlush(name: String): Int = wireFlush(name)
+  def tcpListener: TcpListener = wire match { case t: TcpListener => t; case _ => null }
 
   private val reloadSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Peer the active wire arm: install the isMine split (owned lines
+  /** Peer the wire arm: install the isMine split (owned lines
     * buffer locally, non-owned ship to the owning peer — the reference's
     * live forwarding, carbon_plaintext.go:246-252) and wire the
     * flush-on-peerlist-change contract: a valid CHANGED
@@ -151,14 +133,12 @@ final class Daemon(spark: SparkSession, store: String,
     * `selfHostPort` among its values.
     */
   def enablePeering(peers: Map[String, String]): Unit = {
-    require(udp != null || tcp != null, "start a wire arm first")
-    val (h, srcDir) =
-      if (tcp != null) (tcp.handler, tcpSrcDir) else (udp.handler, udpSrcDir)
-    h.onPeerChange = _ => {
-      h.flush(spark, srcDir, s"peer_reload_${reloadSeq.incrementAndGet()}.parquet")
+    require(wire != null, "start a wire arm first")
+    wire.onPeerChange = _ => {
+      wireFlush(s"peer_reload_${reloadSeq.incrementAndGet()}.parquet")
       ()
     }
-    if (tcp != null) tcp.enablePeering(peers) else udp.enablePeering(peers)
+    wire.enablePeering(peers)
   }
 
   def ingestQuery: StreamingQuery = ingestQ
@@ -221,8 +201,7 @@ final class Daemon(spark: SparkSession, store: String,
       statsdTicker.join(2000)
       statsdTicker = null
     }
-    if (udp != null) udp.stop()
-    if (tcp != null) tcp.stop()
+    if (wire != null) wire.stop()
     if (ingestQ != null) ingestQ.stop()
     httpd.stop()
   }

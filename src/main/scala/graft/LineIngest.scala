@@ -6,8 +6,9 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 
-/** The listener-side metricHandler (carbon_plaintext.go:208-243), shared
-  * by the UDP and TCP front doors so the two transports cannot drift:
+/** The listener-side metricHandler (carbon_plaintext.go:208-243): the base
+  * of the UDP and TCP front doors, so the two transports cannot drift.
+  * A listener adds only its socket loop, [[port]] and [[stop]]. Rules:
   * peer wire-commands are inspected FIRST on the raw line and bump
   * neither receive counter; metrics tokenize with Fields (any whitespace
   * runs), need exactly 3 fields, value parses as float, ts parses as
@@ -26,7 +27,13 @@ import org.apache.spark.sql.SparkSession
   * slice under the OLD ring) and swaps the ring for subsequent lines
   * (processPeerCommand, carbon_plaintext.go:258-283).
   */
-private[graft] final class LineIngest {
+private[graft] abstract class LineIngest {
+
+  /** The bound receive port. */
+  def port: Int
+
+  /** Close the socket, join the reader threads, close the forwarder. */
+  def stop(): Unit
 
   /** received-ok / received-fail / peer-command counters — the listener's
     * statsd emissions (carbon_plaintext.go:219-243, logging/stats.go).
@@ -52,15 +59,21 @@ private[graft] final class LineIngest {
     */
   @volatile var onPeerChange: Map[String, String] => Unit = _
 
-  /** Install the isMine split: `self` must be this listener's advertised
-    * host:port and appear among `peers` values ([[graft.model.PeerList]]
-    * front-door rules).
+  /** This listener's advertised carbon address — peer FORWARDING is TCP
+    * in the reference whatever the receive transport, so the address a
+    * UDP node advertises in the peers map must be its TCP twin's; for
+    * the isMine split itself only ring membership matters.
     */
-  def enablePeering(self: String, peers: Map[String, String],
+  def selfHostPort: String = "127.0.0.1:" + port
+
+  /** Install the isMine split: [[selfHostPort]] must appear among `peers`
+    * values ([[graft.model.PeerList]] front-door rules).
+    */
+  def enablePeering(peers: Map[String, String],
       forwarder: PeerForwarder = new PeerForwarder()): Unit = {
-    graft.model.PeerList.validate(self, peers).left.foreach(e => throw new IllegalArgumentException(e))
+    graft.model.PeerList.validate(selfHostPort, peers).left.foreach(e => throw new IllegalArgumentException(e))
     fwd = forwarder
-    ring = new PeerRing(self, peers)
+    ring = new PeerRing(selfHostPort, peers)
   }
 
   def peerRing: Option[PeerRing] = Option(ring)
@@ -82,7 +95,7 @@ private[graft] final class LineIngest {
     case _ => None
   }
 
-  def dispatchLine(line: String): Unit = line match {
+  protected def dispatchLine(line: String): Unit = line match {
     case peerCmdRe(cmd, payload) =>
       peerCmds.incrementAndGet()
       lastPeerCmd.set((cmd, payload))

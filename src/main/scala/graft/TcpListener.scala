@@ -2,9 +2,7 @@ package graft
 
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
-
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
 
 /** The REAL TCP front door — the reference's primary carbon transport
   * (carbonTCP + getTCPData, carbon_plaintext.go:68-123): an accept loop
@@ -13,35 +11,15 @@ import org.apache.spark.sql.SparkSession
   * at `\n`, a trailing `\r` is stripped (ScanLines), and the final
   * unterminated token at EOF is still delivered as a line. Each
   * connection carries its OWN truncated tail (the per-conn state
-  * `stream_reassemble` models); parse and buffering are the shared
-  * [[LineIngest]] metricHandler, so TCP, UDP, and the batch/streaming
-  * reassembly operators all agree on what a line means.
+  * `stream_reassemble` models); parse, buffering, counters, peering and
+  * flush are the [[LineIngest]] base, so TCP, UDP, and the
+  * batch/streaming reassembly operators all agree on what a line means.
   *
   * Driver-side by design, like [[UdpListener]] (one goroutine per
   * connection in the reference too); distribution starts at the staged
   * flush slice.
   */
-final class TcpListener {
-
-  private val ingest = new LineIngest
-
-  def receivedOk: AtomicLong = ingest.receivedOk
-  def receivedFail: AtomicLong = ingest.receivedFail
-  def peerCmds: AtomicLong = ingest.peerCmds
-  def lastPeerCmd: AtomicReference[(String, String)] = ingest.lastPeerCmd
-
-  /** The shared metricHandler — peering/forwarding surfaces live there. */
-  private[graft] def handler: LineIngest = ingest
-
-  def selfHostPort: String = "127.0.0.1:" + port
-
-  /** Install the isMine peer split (see [[LineIngest.enablePeering]]):
-    * owned lines buffer here, non-owned lines ship to their owner's
-    * carbon socket over a [[StubbornConn]]. `peers` must include
-    * [[selfHostPort]] among its values.
-    */
-  def enablePeering(peers: Map[String, String]): Unit =
-    ingest.enablePeering(selfHostPort, peers)
+final class TcpListener extends LineIngest {
 
   /** Connections accepted so far (the reference's conns gauge). */
   val connections = new AtomicLong(0)
@@ -57,7 +35,7 @@ final class TcpListener {
     // reference's TCP stream never sends bare newlines, so we mirror the
     // UDP loop's skip to keep the two arms' counters comparable)
     val l = line.stripSuffix("\r")
-    if (l.nonEmpty) ingest.dispatchLine(l)
+    if (l.nonEmpty) dispatchLine(l)
   }
 
   private def handle(conn: Socket): Unit = {
@@ -111,23 +89,11 @@ final class TcpListener {
 
   def port: Int = server.getLocalPort
 
-  /** Number of metric rows accepted and not yet flushed. */
-  def pending: Int = ingest.pending
-
-  /** Unflushed accepted rows, in arrival order (spec surface). */
-  def snapshot: Vector[(String, Double, Long, Long)] = ingest.snapshot
-
-  /** Drain the accepted rows into ONE staged parquet slice in `srcDir`;
-    * returns rows flushed (see [[LineIngest.flush]]).
-    */
-  def flush(spark: SparkSession, srcDir: String, name: String): Int =
-    ingest.flush(spark, srcDir, name)
-
   def stop(): Unit = {
     running = false
     server.close()
     acceptor.join(2000)
     handlers.forEach(_.join(1000))
-    ingest.forwarder.foreach(_.close())
+    forwarder.foreach(_.close())
   }
 }

@@ -1,15 +1,12 @@
 package graft
 
 import java.net.{DatagramPacket, DatagramSocket, InetAddress}
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
-
-import org.apache.spark.sql.SparkSession
 
 /** The REAL UDP front door: a datagram socket receiving carbon plaintext,
   * reassembled with the reference listener's remainder-carry loop
   * (carbon_plaintext.go:149-207 — read a datagram, append to the carried
   * buffer, dispatch every complete line, keep the truncated tail), parsed
-  * per metricHandler's rules ([[LineIngest]], shared with
+  * per metricHandler's rules (the [[LineIngest]] base it shares with
   * [[TcpListener]]), and staged as one parquet metric slice per flush —
   * the socket-to-slice bridge in front of [[Daemon]]'s ingest stream.
   *
@@ -22,30 +19,7 @@ import org.apache.spark.sql.SparkSession
   * replays the same lines through `Carbon.withParsedLine` and asserts the
   * listener's accepted rows match exactly.
   */
-final class UdpListener {
-
-  private val ingest = new LineIngest
-
-  def receivedOk: AtomicLong = ingest.receivedOk
-  def receivedFail: AtomicLong = ingest.receivedFail
-  def peerCmds: AtomicLong = ingest.peerCmds
-  def lastPeerCmd: AtomicReference[(String, String)] = ingest.lastPeerCmd
-
-  /** The shared metricHandler — peering/forwarding surfaces live there. */
-  private[graft] def handler: LineIngest = ingest
-
-  /** This listener's advertised carbon address — peer FORWARDING is TCP
-    * in the reference whatever the receive transport, so the address a
-    * UDP node advertises in the peers map must be its TCP twin's; for
-    * the isMine split itself only ring membership matters.
-    */
-  def selfHostPort: String = "127.0.0.1:" + port
-
-  /** Install the isMine peer split (see [[LineIngest.enablePeering]]);
-    * `peers` must include [[selfHostPort]] among its values.
-    */
-  def enablePeering(peers: Map[String, String]): Unit =
-    ingest.enablePeering(selfHostPort, peers)
+final class UdpListener extends LineIngest {
 
   private val socket = new DatagramSocket(0, InetAddress.getByName("127.0.0.1"))
   socket.setSoTimeout(250)
@@ -62,7 +36,7 @@ final class UdpListener {
         // complete lines, keep the truncated tail for the next read
         val data = carry + new String(pkt.getData, 0, pkt.getLength, "UTF-8")
         val parts = data.split("\n", -1)
-        parts.dropRight(1).foreach(l => if (l.nonEmpty) ingest.dispatchLine(l))
+        parts.dropRight(1).foreach(l => if (l.nonEmpty) dispatchLine(l))
         carry = parts.last
       } catch {
         case _: java.net.SocketTimeoutException => // poll the running flag
@@ -75,24 +49,10 @@ final class UdpListener {
 
   def port: Int = socket.getLocalPort
 
-  /** Number of metric rows accepted and not yet flushed. */
-  def pending: Int = ingest.pending
-
-  /** Unflushed accepted rows, in arrival order (spec surface). */
-  def snapshot: Vector[(String, Double, Long, Long)] = ingest.snapshot
-
-  /** Drain the accepted rows into ONE staged parquet slice in `srcDir`
-    * (the flush-cycle unit [[Daemon.stageSlice]] documents) and return
-    * how many rows flushed. `event_id` is the arrival index — the LAST
-    * tiebreak key, mirroring the reference's arrival-order semantics.
-    */
-  def flush(spark: SparkSession, srcDir: String, name: String): Int =
-    ingest.flush(spark, srcDir, name)
-
   def stop(): Unit = {
     running = false
     socket.close()
     reader.join(2000)
-    ingest.forwarder.foreach(_.close())
+    forwarder.foreach(_.close())
   }
 }

@@ -28,6 +28,20 @@ final case class RollupWindow(windowSec: Long, retentionSec: Long) {
   def table: String = f"rollup_$retentionSec%09d"
 }
 
+object RollupWindow {
+  /** Inverse of [[RollupWindow.table]]: group 1 is the retention seconds.
+    * A store's TTL comes from the table names on disk, so any retention a
+    * yaml config declares expires, not only the reference ones.
+    */
+  val TablePattern = "^rollup_(\\d+)$"
+  private val tableRe = TablePattern.r
+
+  def retentionOf(table: String): Option[Long] = table match {
+    case tableRe(sec) => Some(sec.toLong)
+    case _ => None
+  }
+}
+
 final case class RollupDef(
     key: String,                 // the regex itself (or "default")
     method: RollupMethod,

@@ -13,97 +13,42 @@ import org.apache.spark.sql.functions._
   * accumulated slices behind the ingest frontier, probes keep serving
   * throughout).
   *
-  * Everything load-bearing is REUSED from [[RollupStore]] at depth 1
-  * (`c_id=*` instead of `tbl=… / stat_date=…`): the compaction lease (+
-  * heartbeat), the fold manifest written BEFORE the staged write, the
-  * additive per-directory swap (slices appended mid-compaction are not in
-  * the manifest and survive), and crash recovery keyed on
-  * `_compact/_SUCCESS`. The fold itself is simpler than the rollup
-  * store's: index rows are plain vectors (no merge algebra), so
-  * compaction is pure file-count folding — a multi-slice cell's rows
-  * rewritten as one file. Correctness is unchanged before/during/after by
-  * construction; what compaction buys is the probe's file-open count
-  * (nprobe cells × 1 file instead of × |flush cycles|).
+  * Appends and maintenance are [[RollupStore]]'s own, at one partition
+  * level (`c_id=*` instead of `tbl=… / stat_date=…`). Index rows are plain
+  * vectors (no merge algebra), so compaction is pure file-count folding: a
+  * multi-slice cell's rows rewritten as one file. What it buys is the
+  * probe's file-open count (nprobe cells × 1 file instead of × |flush
+  * cycles|).
   */
 object VecIndexStore {
 
-  private val Depth = 1 // c_id=* — one partition level
+  private val Partitions = Seq("c_id")
 
   /** Rows `(vec_id, v, nrm, c_id)` appended as one flush slice, clustered
-    * one file per touched cell directory (the [[RollupStore
-    * .appendStateSlice]] shape: partitioned-write cost scales with
-    * directories touched per flush, not rows).
+    * one file per touched cell directory ([[RollupStore.appendClustered]]).
     */
   def append(lists: DataFrame, path: String,
-      maxRowsPerFile: Long = RollupStore.DefaultMaxRowsPerFile): Unit = {
-    recoverIfNeeded(lists.sparkSession, path)
-    lists.select("vec_id", "v", "nrm", "c_id")
-      .repartition(col("c_id"))
-      .write
-      .mode("append")
-      .option("maxRecordsPerFile", maxRowsPerFile)
-      .partitionBy("c_id")
-      .parquet(path)
-  }
+      maxRowsPerFile: Long = RollupStore.DefaultMaxRowsPerFile): Unit =
+    RollupStore.appendClustered(lists.select("vec_id", "v", "nrm", "c_id"), path,
+      Partitions, maxRowsPerFile)
 
   /** The inverted lists, partition column restored to BIGINT (parquet
     * partition discovery infers `c_id=N` as INT where it fits).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    recoverIfNeeded(spark, path)
+    RollupStore.recoverIfNeeded(spark, path, Partitions.size)
     spark.read.parquet(path)
       .select(col("vec_id"), col("v"), col("nrm"),
         col("c_id").cast("long").as("c_id"))
   }
 
-  /** Selective fold: only cells holding >1 slice file are read and
-    * rewritten (maintenance scales with recently-flushed cells, not index
-    * size), staged through `_compact` + manifest + additive swap exactly
-    * like [[RollupStore.compact]].
+  /** Selective fold: only cells holding >1 slice file are rewritten, by
+    * the same [[RollupStore.rewrite]] pass as [[RollupStore.compact]].
     */
   def compact(spark: SparkSession, path: String): Unit =
     compact(spark, path, RollupStore.CompactLeaseMs)
 
   private[graft] def compact(spark: SparkSession, path: String,
-      leaseMs: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val staged = new org.apache.hadoop.fs.Path(root, "_compact")
-    if (RollupStore.leaseIsYoung(fs, root, leaseMs)) return
-    RollupStore.recover(fs, root, staged, leaseMs, Depth)
-    def parquets(d: org.apache.hadoop.fs.Path) =
-      fs.listStatus(d).filter(_.getPath.getName.endsWith(".parquet"))
-    val multi = RollupStore.partitionDirs(fs, root, Depth)
-      .filter(d => parquets(d).length > 1)
-    if (multi.isEmpty) return
-    if (!RollupStore.acquireLease(fs, root)) return
-    val heartbeat = RollupStore.startHeartbeat(fs, root, leaseMs)
-    try {
-      // fold set recorded FIRST, staged read consumes EXACTLY these files
-      // (RollupStore.compact's one-listing-one-truth contract)
-      val folded = multi.flatMap(d => parquets(d).map(f =>
-        s"${d.getName}/${f.getPath.getName}")).toSeq
-      RollupStore.writeManifest(fs, root, folded)
-      spark.read.option("basePath", path)
-        .parquet(folded.map(f => new org.apache.hadoop.fs.Path(root, f).toString): _*)
-        .repartition(col("c_id")) // one file per cell directory
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", RollupStore.DefaultMaxRowsPerFile)
-        .partitionBy("c_id").parquet(staged.toString)
-      RollupStore.swapInAdditive(fs, root, staged, Depth)
-    } finally {
-      heartbeat.interrupt()
-      fs.delete(RollupStore.leasePath(root), false)
-    }
-  }
-
-  private def recoverIfNeeded(spark: SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      RollupStore.recover(fs, root,
-        new org.apache.hadoop.fs.Path(root, "_compact"),
-        RollupStore.CompactLeaseMs, Depth)
-  }
+      leaseMs: Long): Unit =
+    RollupStore.rewrite(spark, path, Partitions, leaseMs)(RollupStore.multiFileDirs)(identity)
 }

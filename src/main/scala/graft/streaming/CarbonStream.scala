@@ -414,44 +414,42 @@ object CarbonStream {
       col("value"),
       expr("ts DIV 1000000000").as("ts"),
       col("event_id"))
+    appendEachBatch(metrics, store, config)
+  }
+
+  /** The flush cycle, the unit of ingest: each micro-batch of metric rows
+    * `(path, value, ts, event_id)` is reduced to its mergeable rollup state
+    * and appended to the store as ONE slice. `config()` is read PER FLUSH
+    * CYCLE — the daemon's SIGHUP reload swaps it between cycles, never
+    * inside one.
+    */
+  private def appendEachBatch(metrics: DataFrame, store: String,
+      config: () => Seq[graft.model.RollupDef])
+      : org.apache.spark.sql.streaming.StreamingQuery =
     metrics.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // config() is read PER FLUSH CYCLE — the daemon's SIGHUP reload
-        // swaps it between cycles, never inside one
         graft.sources.RollupStore.appendStateSlice(
           graft.operators.Rollups.mergeableWith(batch, config()), store)
       }
       .start()
-  }
 
-  /** The flush query over STAGED METRIC slices — the [[graft.UdpListener]]
-    * bridge: each staged `(path, value, ts, event_id)` parquet file is one
-    * flush cycle, appended to the store as mergeable state. Identical
-    * foreachBatch to [[startRollupFlush]]; the events→metrics mapping is
-    * simply absent because the socket already delivers metric rows.
+  /** The flush query over STAGED METRIC slices — the wire listeners'
+    * bridge ([[graft.LineIngest]]): each staged `(path, value, ts,
+    * event_id)` parquet file is one flush cycle. Same [[appendEachBatch]]
+    * as [[startRollupFlush]]; the events→metrics mapping is absent because
+    * the socket already delivers metric rows.
     */
   def startMetricRollupFlush(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet",
       config: () => Seq[graft.model.RollupDef] =
         () => graft.model.RollupConfig.reference)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType), StructField("value", DoubleType),
-      StructField("ts", LongType), StructField("event_id", LongType)))
-    spark.readStream.schema(schema)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    appendEachBatch(spark.readStream
+      .schema("path STRING, value DOUBLE, ts BIGINT, event_id BIGINT")
       .option("pathGlobFilter", glob)
       .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.RollupStore.appendStateSlice(
-          graft.operators.Rollups.mergeableWith(batch, config()), store)
-      }
-      .start()
-  }
+      .parquet(srcDir), store, config)
 
   /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle
     * (datastore/metricstore.go:85-185 — accumulate deltas per flush

@@ -109,13 +109,13 @@ class PeerForwardSpec extends AnyFunSuite with TestSpark {
       // ReceiveOK bumps on BOTH branches (go:254), fails only on malformed
       assert(a.receivedOk.get == paths.size.toLong)
       assert(a.receivedFail.get == malformed.size.toLong)
-      assert(a.handler.forwardedLines.get == wantFwd.size.toLong)
+      assert(a.forwardedLines.get == wantFwd.size.toLong)
       // an unknown command is counted AND rejected in peering mode (go:279-282)
-      assert(a.peerCmds.get == 1 && a.handler.peerCmdErrors.get == 1)
+      assert(a.peerCmds.get == 1 && a.peerCmdErrors.get == 1)
 
       // the delivery ledger reconciles with the BATCH split on the same
       // lines — the same pearson_hash8 % N expression peer_forward uses
-      val fwd = a.handler.forwarder.get
+      val fwd = a.forwarder.get
       assert(fwd.delivered.get == wantFwd.size.toLong && fwd.retried.get == 0 && fwd.dropped.get == 0)
       Pearson.register(spark)
       import spark.implicits._
@@ -134,11 +134,11 @@ class PeerForwardSpec extends AnyFunSuite with TestSpark {
       a.enablePeering(Map("a" -> a.selfHostPort)) // self-only: everything mine
       var flushes = 0
       var pendingAtFlush = -1
-      a.handler.onPeerChange = _ => { flushes += 1; pendingAtFlush = a.pending }
+      a.onPeerChange = _ => { flushes += 1; pendingAtFlush = a.pending }
       val pre = (1 to 4).map(i => s"servers.swap.p$i ${i}.0 ${1700000000 + i}")
       val newList = s"""{"a":"${a.selfHostPort}","b":"127.0.0.1:1"}"""
       sendLines(a.port, pre :+ s"<<peerlist=$newList>>")
-      eventually("the ring to swap")(a.handler.peerRing.exists(_.ring.length == 2))
+      eventually("the ring to swap")(a.peerRing.exists(_.ring.length == 2))
       assert(flushes == 1 && pendingAtFlush == 4,
         "the flush hook must fire BEFORE the swap, with the old-ring rows pending")
 
@@ -147,7 +147,7 @@ class PeerForwardSpec extends AnyFunSuite with TestSpark {
         """<<peerlist={"x":"10.0.0.9:2003"}>>""",
         s"<<peerlist=$newList>>")) // unchanged list: valid, NOT a change
       eventually("command counters")(a.peerCmds.get == 4)
-      assert(a.handler.peerCmdErrors.get == 2)
+      assert(a.peerCmdErrors.get == 2)
       assert(flushes == 1, "an unchanged or invalid list must not flush/swap (IsEqual gate)")
 
       // post-swap routing: non-owned paths try the dead peer and drop
@@ -158,7 +158,7 @@ class PeerForwardSpec extends AnyFunSuite with TestSpark {
       val wantFwd = post.count(owner(_) == 1)
       eventually("post-swap lines to route")(
         a.receivedOk.get == (4 + post.size).toLong)
-      assert(a.handler.forwarder.exists(_.dropped.get == wantFwd.toLong))
+      assert(a.forwarder.exists(_.dropped.get == wantFwd.toLong))
       assert(a.snapshot.count(r => r._1.startsWith("servers.post")) == post.size - wantFwd)
     } finally a.stop()
   }

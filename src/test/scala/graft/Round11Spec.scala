@@ -163,6 +163,39 @@ class Round11Spec extends AnyFunSuite with TestSpark {
     assert(rows(spark.read.parquet(store).drop("stat_date")).size < allBefore.size)
   }
 
+  test("TTL covers a table outside the reference config: dropExpired and readRetained agree") {
+    val store = Files.createTempDirectory("round11_ttl_yaml").toString
+    val weekTbl = "rollup_000604800" // a reference table (7 d)
+    val yamlTbl = graft.model.RollupWindow(60, 1209600).table // a yaml-only `1m:14d` arm
+    val week = Rollups.rollupsMergeable(spark, Sf).filter(col("tbl") === weekTbl)
+    RollupStore.appendStateSlice(
+      week.unionByName(week.withColumn("tbl", org.apache.spark.sql.functions.lit(yamlTbl))), store)
+    val times = week.select("stat_time").distinct().orderBy("stat_time")
+      .collect().map(_.getLong(0))
+    // "now" puts the 14-day horizon mid-fixture: both tables straddle their cutoff
+    val now = times(times.length / 2) + 1209600
+    def table(t: String, df: org.apache.spark.sql.DataFrame) =
+      rows(df.filter(col("tbl") === t).drop("stat_date"))
+    val live = RollupStore.read(spark, store)
+    val want = Map(
+      weekTbl -> table(weekTbl, live.filter(col("stat_time") > now - 604800)),
+      yamlTbl -> table(yamlTbl, live.filter(col("stat_time") > now - 1209600)))
+    Seq(weekTbl, yamlTbl).foreach { t =>
+      assert(want(t).nonEmpty && want(t).size < table(t, live).size,
+        s"fixture must straddle $t's horizon")
+      assert(table(t, RollupStore.readRetained(spark, store, now)) == want(t),
+        s"readRetained dropped or kept the wrong rows of $t")
+    }
+    RollupStore.dropExpired(spark, store, now)
+    Seq(weekTbl, yamlTbl).foreach { t =>
+      assert(table(t, RollupStore.read(spark, store)) == want(t),
+        s"expired rows of $t still physically present after dropExpired")
+    }
+    assert(rows(RollupStore.read(spark, store).drop("stat_date")) ==
+      rows(RollupStore.readRetained(spark, store, now).drop("stat_date")),
+      "after dropExpired, read != readRetained")
+  }
+
   // --------------------------------------------- peer wire payload (r10 advice)
 
   test("parseWirePayload: comma-in-value is legal, trailing comma is malformed") {

@@ -31,6 +31,9 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *  8. `RollupStore.readFinalizedResilient` is called only from the
   *     daemon's serving view; a source scan fails on a new per-request
   *     store read.
+  *  9. The store maintenance protocol (lease, heartbeat, manifest, swap)
+  *     runs only in `RollupStore.rewrite` and recovery; a source scan fails
+  *     on a hand-written maintenance pass.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -170,6 +173,36 @@ class Round12Spec extends AnyFunSuite with TestSpark {
         "StoreBackend's view (one merged frame per listing), not a fresh read per request")
   }
 
+  // ------------------------------------------------- maintenance census
+
+  /** The store maintenance protocol (lease, heartbeat, manifest, additive
+    * swap) is written once: `RollupStore.rewrite`, plus crash recovery's
+    * swap in `recover`. Each call in `src/main` (comment lines stripped,
+    * definitions excluded) is attributed to its enclosing `def`, so a
+    * hand-written maintenance pass fails here.
+    */
+  test("the maintenance protocol is called only from RollupStore.rewrite and recover") {
+    import scala.jdk.CollectionConverters._
+    val calls = Seq("acquireLease(", "startHeartbeat(", "writeManifest(", "swapInAdditive(")
+    val defName = """\bdef\s+(\w+)""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        var enclosing = ""
+        codeLines(p).flatMap { l =>
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          calls.filter(c => l.contains(c) && !l.contains("def " + c))
+            .map(c => (p.getFileName.toString, enclosing, c))
+        }
+      }.sorted
+    val want = (calls.map(("RollupStore.scala", "rewrite", _)) :+
+      (("RollupStore.scala", "recover", "swapInAdditive("))).sorted
+    assert(hits == want,
+      s"maintenance census drifted: got $hits, want $want — run a store " +
+        "rewrite through RollupStore.rewrite(partitionCols, pick, fold) instead " +
+        "of taking the lease and swapping by hand")
+  }
+
   test("Registry.select fails on unknown or empty op filters, keeps Registry order") {
     val typo = intercept[IllegalArgumentException](
       Registry.select(Set("rollup_multi", "dedup_clustr", "ann_ivff")))
@@ -269,9 +302,9 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       (1 to 3).foreach(i => send(s"servers.reload.p$i $i.0 ${600 * i}"))
       send(s"""<<peerlist={"a":"$self","b":"127.0.0.1:1"}>>""")
       val end = System.currentTimeMillis() + 8000
-      while (daemon.tcpListener.handler.peerRing.forall(_.ring.length != 2)
+      while (daemon.tcpListener.peerRing.forall(_.ring.length != 2)
         && System.currentTimeMillis() < end) Thread.sleep(20)
-      assert(daemon.tcpListener.handler.peerRing.exists(_.ring.length == 2),
+      assert(daemon.tcpListener.peerRing.exists(_.ring.length == 2),
         "the ring must swap to the wire-delivered list")
       assert(daemon.tcpListener.pending == 0,
         "pending rows accepted under the old ring must have flushed")
