@@ -19,7 +19,9 @@ import graft.streaming.CarbonStream
   *    per flush cycle;
   *  - SERVE: `MetricsHttpServer` over a `StoreBackend` — every HTTP
   *    answer is merge-on-read over whatever ingest has flushed so far,
-  *    from one cached view per store listing;
+  *    from one checkpointed view per store listing, with requests handled
+  *    concurrently on one handler thread per session core and tables
+  *    picked by the rollup config in force;
   *  - MAINTAIN: `RollupStore.compact` (fold accumulated slices) and
   *    `RollupStore.dropExpired` (physical TTL), safe to fire while the
   *    other two arms run: the compaction lease makes readers/appenders
@@ -34,12 +36,15 @@ final class Daemon(spark: SparkSession, store: String,
     nowSec: Option[Long] = None,
     healthCheckFile: Option[java.nio.file.Path] = None) {
 
-  private[graft] val backend = new MetricsHttpServer.StoreBackend(spark, store, nowSec)
+  private[graft] val backend =
+    new MetricsHttpServer.StoreBackend(spark, store, () => rollupDefs, nowSec)
   private val httpd = new MetricsHttpServer(backend, healthCheckFile)
   @volatile private var ingestQ: StreamingQuery = _
 
-  /** Bind the API (port 0 = ephemeral); returns the bound port. */
-  def startHttp(port: Int = 0): Int = httpd.start(port)
+  /** Bind the API (port 0 = ephemeral), one handler thread per core of
+    * the session; returns the bound port.
+    */
+  def startHttp(port: Int = 0): Int = httpd.start(port, spark.sparkContext.defaultParallelism)
 
   /** Start the live flush query over `srcDir` (the file-stream stand-in
     * for the carbon socket). Caller may `processAllAvailable()` to drain

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.{RollupConfig, Tables}
+import graft.model.{RollupConfig, RollupDef, Tables}
 import graft.operators.{Index, MetricQuery, Rollups}
 
 /** The cassabon HTTP API surface (reference api/api.go:44-51) as library
@@ -59,20 +59,25 @@ object MetricsApi {
     * the fixture-derived write set above, or a live store's merge-on-read
     * view (`Daemon`'s serving path). Columns are selected by NAME so the
     * two sources' physical column orders can't skew the positional reads.
+    * `config` picks each path's table and step (the daemon passes the
+    * config in force); only the chosen `(tbl, path)` rows in range are
+    * collected.
     */
   def getMetricsFrom(rollupsDf: DataFrame, paths: Seq[String],
-      from: Long, to: Long, now: Long): MetricsResponse = {
+      from: Long, to: Long, now: Long,
+      config: Seq[RollupDef] = RollupConfig.reference): MetricsResponse = {
+    val ageSec = math.max(now - from, 0L)
+    val windows = paths.map(p => p -> MetricQuery.chooseWindow(p, ageSec, config)._2)
     val rollups = rollupsDf
-      .filter(col("path").isin(paths: _*))
+      .filter(windows.map { case (p, w) => col("tbl") === w.table && col("path") === p }
+        .foldLeft(lit(false))(_ || _) && col("stat_time").between(from, to))
       .select(col("tbl"), col("path"), col("stat_time"), col("stat"))
-      .collect() // tiny: only the requested paths' rollup rows
+      .collect() // tiny: only the chosen (tbl, path) rows in range
       .groupBy(r => (r.getString(0), r.getString(1))) // (tbl, path)
       .map { case (k, rs) => k -> rs.map(r => r.getLong(2) -> (if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toMap }
     var step = 0L
     var normalFrom = 0L
-    val series = paths.map { path =>
-      val ageSec = math.max(now - from, 0L)
-      val (_, win) = MetricQuery.chooseWindow(path, ageSec)
+    val series = windows.map { case (path, win) =>
       step = win.windowSec
       normalFrom = from + (step - from % step)
       val byTime = rollups.getOrElse((win.table, path), Map.empty)
@@ -134,16 +139,19 @@ object MetricsApi {
       from: Long, to: Long, dryRun: Boolean): (DeleteResponse, Option[DataFrame]) =
     deleteMetricsFrom(Rollups.rollups(spark, dir), paths, from, to, dryRun)
 
-  /** Delete body over ANY rollup frame (see [[getMetricsFrom]]). */
+  /** Delete body over ANY rollup frame (see [[getMetricsFrom]]); the
+    * counts are zero-filled over `config`'s tables.
+    */
   def deleteMetricsFrom(rollupsDf: DataFrame, paths: Seq[String],
-      from: Long, to: Long, dryRun: Boolean): (DeleteResponse, Option[DataFrame]) = {
+      from: Long, to: Long, dryRun: Boolean,
+      config: Seq[RollupDef] = RollupConfig.reference): (DeleteResponse, Option[DataFrame]) = {
     val counts = rollupsDf
       .filter(col("path").isin(paths: _*) &&
         col("stat_time") >= from && col("stat_time") <= to)
       .groupBy("path", "tbl").count()
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val full = (for (p <- paths; t <- RollupConfig.tables)
+    val full = (for (p <- paths; t <- RollupConfig.tablesOf(config))
       yield (p, t) -> counts.getOrElse((p, t), 0L)).toMap
     val resp = DeleteResponse(dryRun, full, full.values.sum)
     val remaining = if (dryRun) None else Some(

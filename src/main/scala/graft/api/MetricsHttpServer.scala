@@ -24,15 +24,22 @@ import org.apache.spark.sql.SparkSession
   * accumulator are answered here by Spark jobs over the store — the API
   * collects only the final small payload (MetricsApi's contract). Each
   * request lists the store once; requests that see the same listing share
-  * ONE merged view of it (cached on first use, dropped when the listing
-  * changes — see [[MetricsHttpServer.StoreBackend]]), so a repeated query
-  * costs a scan of the cached view, not a read and merge of every slice.
+  * ONE merged view of it (checkpointed on first use, released when the
+  * listing changes and no request holds it — see
+  * [[MetricsHttpServer.StoreBackend]]), so a repeated query plans and runs
+  * one scan of that view, not a read and merge of every slice.
   * A view built while a compaction swap was deleting its sources is never
   * served after the swap: no later listing names the files it deleted.
-  * One request at a time per server instance, matching the reference's
-  * channel-serialized index/metric managers; a production deployment
-  * fronts the engine with whatever pool it needs, the routes don't change.
-  * [[stop]] closes the backend, which releases the cached view.
+  * Requests are handled concurrently on a fixed pool of `handlers`
+  * threads ([[start]]; the daemon passes its session's core count), like
+  * the goroutine per request of the reference's `net/http` server, and
+  * every connection runs with Nagle's algorithm off, `net/http`'s
+  * default: the JDK server writes a response's headers and body apart,
+  * and with Nagle on each keep-alive response waits for the client's
+  * delayed ACK (tens of ms). A query parameter that does not parse
+  * answers 400 naming it (a malformed %-escape never reaches a route: the
+  * JDK server refuses the request URI with its own 400). [[stop]] drains
+  * the pool, then closes the backend, which releases the cached views.
   */
 final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     healthCheckFile: Option[java.nio.file.Path] = None) {
@@ -42,6 +49,7 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     this(new MetricsHttpServer.FixtureBackend(spark, dir))
 
   private var server: HttpServer = _
+  private var pool: java.util.concurrent.ExecutorService = _
 
   /** Per-request access logging — the reference wraps every Goji route in
     * timing + status middleware (api/requestlogger.go:15-40: logs
@@ -82,17 +90,28 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     }
   }
 
-  /** Bind (port 0 = ephemeral) and serve; returns the bound port. */
-  def start(port: Int = 0): Int = {
+  /** Bind (port 0 = ephemeral) and serve on `handlers` threads; returns
+    * the bound port.
+    */
+  def start(port: Int = 0, handlers: Int = 1): Int = {
+    // the JDK server reads this once, when its first instance is created;
+    // the census in Round12Spec keeps every `HttpServer.create` in this file
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", handle _)
-    server.setExecutor(null) // caller-thread dispatch: serialized, like the reference's channels
+    pool = MetricsHttpServer.handlerPool(handlers)
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
+  /** Stop accepting, let in-flight requests finish, release the backend. */
   def stop(): Unit = {
     if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
     backend.close()
   }
 
@@ -114,6 +133,9 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
             "request" -> Json.str(ex.getRequestURI.toString)))
       }
     } catch {
+      case e: MetricsHttpServer.BadParam =>
+        send(ex, 400, Json.obj("status" -> Json.str("bad request"),
+          "parameter" -> Json.str(e.name), "message" -> Json.str(e.getMessage)))
       case e: Throwable =>
         send(ex, 500, Json.obj("status" -> Json.str("error"),
           "message" -> Json.str(Option(e.getMessage).getOrElse(e.getClass.getName))))
@@ -185,8 +207,7 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
 
   private def getMetrics(ex: HttpExchange): Unit = {
     val q = params(ex)
-    val r = backend.getMetrics(q.all("path"),
-      q.firstOr("from", "0").toLong, q.firstOr("to", "0").toLong)
+    val r = backend.getMetrics(q.all("path"), q.long("from"), q.long("to"))
     send(ex, 200, Json.obj(
       "from" -> Json.num(r.from),
       "to" -> Json.num(r.to),
@@ -201,8 +222,7 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
     // dryrun default TRUE; only explicit false/no disarms (api.go:186-190)
     val dr = q.firstOr("dryrun", "")
     val dryRun = !(dr.equalsIgnoreCase("false") || dr.equalsIgnoreCase("no"))
-    val resp = backend.deleteMetrics(q.all("path"),
-      q.firstOr("from", "0").toLong, q.firstOr("to", "0").toLong, dryRun)
+    val resp = backend.deleteMetrics(q.all("path"), q.long("from"), q.long("to"), dryRun)
     send(ex, 200, Json.obj(
       "dryrun" -> Json.bool(resp.dryrun),
       "total_deleted" -> Json.num(resp.totalDeleted),
@@ -216,6 +236,9 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
   private final case class Params(m: Map[String, Seq[String]]) {
     def all(k: String): Seq[String] = m.getOrElse(k, Nil)
     def firstOr(k: String, d: String): String = all(k).headOption.getOrElse(d)
+    /** An integer parameter, 0 when absent. */
+    def long(k: String): Long = all(k).headOption.fold(0L)(v => v.toLongOption
+      .getOrElse(throw new MetricsHttpServer.BadParam(k, s"$k: not an integer: $v")))
   }
 
   private def params(ex: HttpExchange): Params = Params(
@@ -263,6 +286,23 @@ final class MetricsHttpServer(backend: MetricsHttpServer.Backend,
 
 object MetricsHttpServer {
 
+  /** A query parameter that does not parse; answered 400 naming it. */
+  private final class BadParam(val name: String, message: String)
+      extends IllegalArgumentException(message)
+
+  /** `width` daemon threads that inherit no thread locals, so a request's
+    * Spark jobs never carry the job group of whichever thread started the
+    * server.
+    */
+  private def handlerPool(width: Int): java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(width, { r =>
+      val t = new Thread(null, r, s"graft-http-${n.incrementAndGet()}", 0, false)
+      t.setDaemon(true)
+      t
+    })
+  }
+
   /** What a route needs, source-agnostic: the five query surfaces. The
     * HTTP shell stays identical whichever backend answers — the
     * reference's api.go likewise doesn't care which manager goroutine
@@ -301,20 +341,25 @@ object MetricsHttpServer {
     * recovery and fold the not-yet-compacted slices themselves; the
     * additive swap never destroys a mid-flight append). `nowSec` defaults
     * to wall clock, the live daemon's table-selection age; tests pin it.
+    * `config` is the rollup config in force (the daemon's, which
+    * [[graft.Daemon.reload]] swaps): it picks each path's table and step.
     *
     * ONE LISTING PER REQUEST, ONE VIEW PER SNAPSHOT. Every request (and
     * every retry attempt) takes a fresh [[RollupStore.snapshot]]. When it
     * equals the token of the current [[View]], the route runs over that
-    * view's cached merged frame; otherwise the stale view is dropped and
-    * a new one is built from exactly the snapshot's files
-    * ([[RollupStore.readFinalizedResilient]]). A view is installed only
-    * after its first action succeeds. Its content is a function of its
-    * token, so any flush, compaction swap or TTL drop changes the next
-    * listing and the next request rebuilds. A view built inside a swap
-    * window (a listed fold source deleted before the scan) undercounts,
-    * the documented transient state, but its token names the deleted
-    * file, which no listing taken after the swap contains, so it is never
-    * served past the swap.
+    * view (a hit); otherwise the caller builds a new view from exactly
+    * the snapshot's files ([[RollupStore.readFinalizedResilient]]), while
+    * hits keep serving the current one. Concurrent misses on one token
+    * build it once: the others wait and then hit. A view is installed
+    * only after its first action succeeds; the one it replaces is
+    * released when the last request holding it finishes, and a new build
+    * waits while two views are live, so at most two are ever in memory.
+    * Its content is a function of its token, so any flush, compaction
+    * swap or TTL drop changes the next listing and the next request
+    * rebuilds. A view built inside a swap window (a listed fold source
+    * deleted before the scan) undercounts, the documented transient
+    * state, but its token names the deleted file, which no listing taken
+    * after the swap contains, so it is never served past the swap.
     *
     * healthcheck reports the SERVICE, like the reference's healthHandler:
     * ALIVE whenever the session is up and the store lists (an empty,
@@ -323,57 +368,108 @@ object MetricsHttpServer {
     * a load-balancer poll never builds a view.
     */
   final class StoreBackend(spark: SparkSession, store: String,
-      nowSec: Option[Long] = None) extends Backend {
+      config: () => Seq[graft.model.RollupDef], nowSec: Option[Long] = None)
+      extends Backend {
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     import graft.operators.Index
     import graft.sources.RollupStore
 
-    /** The merged, finalized store at one snapshot, cached on first use;
-      * the path index is built only when a `/paths` route asks for it.
+    /** The merged, finalized store at one snapshot. Each frame is a lazy
+      * local checkpoint: its first action computes it into the block
+      * manager, and every later query plans one scan of those blocks and
+      * never reads the slice files again. The path index is built only
+      * when a `/paths` route asks for it.
       */
     private final class View(val token: Seq[RollupStore.SliceFile]) {
-      val finalized: DataFrame =
-        RollupStore.readFinalizedResilient(spark, store, token).persist(MEMORY_AND_DISK)
-      private var idx: DataFrame = _
-      def index: DataFrame = synchronized {
-        if (idx == null)
-          idx = Index.indexFrom(finalized.select("path").distinct()).persist(MEMORY_AND_DISK)
-        idx
+      lazy val finalized: DataFrame =
+        checkpoint(RollupStore.readFinalizedResilient(spark, store, token))
+      lazy val index: DataFrame =
+        checkpoint(Index.indexFrom(finalized.select("path").distinct()))
+      /** Requests holding the view, plus one while it is current;
+        * guarded by the backend's `lock`.
+        */
+      var refs = 1
+      private var frames = List.empty[DataFrame]
+      private def checkpoint(df: DataFrame): DataFrame = synchronized {
+        val c = df.localCheckpoint(eager = false, storageLevel = MEMORY_AND_DISK)
+        frames ::= c
+        c
       }
-      def unpersist(): Unit = synchronized {
-        if (idx != null) idx.unpersist()
-        finalized.unpersist()
+      def release(): Unit = synchronized {
+        frames.foreach(_.queryExecution.logical
+          .collectFirst { case r: LogicalRDD => r.rdd.unpersist() })
+        frames = Nil
       }
     }
 
-    @volatile private var view: View = _
+    private val lock = new Object
+    private var current: View = _ // guarded by lock, as are the three below
+    private var live = 0          // views built or building, not yet released
+    private var building = false
     private var closed = false
 
     private[graft] val viewsBuilt = new java.util.concurrent.atomic.AtomicLong
 
-    private def retire(): Unit = synchronized {
-      if (view != null) { view.unpersist(); view = null }
+    /** Drop one reference; the last one releases the view's blocks. */
+    private def drop(v: View): Unit = lock.synchronized {
+      v.refs -= 1
+      if (v.refs == 0) { v.release(); live -= 1; lock.notifyAll() }
     }
+
+    private def retire(v: View): Unit = lock.synchronized {
+      if (current eq v) { current = null; drop(v) }
+    }
+
+    /** The current view when its token matches (one more holder), else
+      * `None`: the caller builds. Waits while another build runs or two
+      * views are live.
+      */
+    private def acquire(token: Seq[RollupStore.SliceFile]): Option[View] = lock.synchronized {
+      def hit = current != null && current.token == token
+      while (!closed && !hit && (building || live >= 2)) lock.wait()
+      if (closed) throw new IllegalStateException("the serving backend is closed")
+      if (hit) { current.refs += 1; Some(current) }
+      else { building = true; live += 1; None }
+    }
+
+    /** A lost checkpoint block (an executor gone on a cluster, or the
+      * blocks unpersisted from outside): the view cannot answer again.
+      */
+    private def lostBlock(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND")))
 
     /** Run `f` over the view of a fresh listing, under the store's
       * optimistic read-retry: each attempt lists again, so a retry after a
-      * swap-window read error re-plans from the new listing.
+      * swap-window read error re-plans from the new listing, and one after
+      * a lost block rebuilds the view it retired.
       */
     private def withView[A](f: View => A): A =
-      RollupStore.retryTransientReads { () =>
+      RollupStore.retryTransientReads(() => {
         val token = RollupStore.snapshot(spark, store)
-        val current = view
-        if (current != null && current.token == token) f(current)
-        else {
-          retire() // first: one view's blocks in memory at a time
-          val fresh = new View(token)
-          viewsBuilt.incrementAndGet()
-          val out = try f(fresh) catch { case e: Throwable => fresh.unpersist(); throw e }
-          synchronized { if (closed) fresh.unpersist() else view = fresh }
-          out
+        acquire(token) match {
+          case Some(v) =>
+            try f(v)
+            catch { case e: Throwable if lostBlock(e) => retire(v); throw e }
+            finally drop(v)
+          case None =>
+            val fresh = new View(token)
+            viewsBuilt.incrementAndGet()
+            try {
+              val out = f(fresh)
+              lock.synchronized {
+                if (!closed) {
+                  if (current != null) retire(current)
+                  fresh.refs += 1
+                  current = fresh
+                }
+              }
+              out
+            } finally lock.synchronized { building = false; drop(fresh); lock.notifyAll() }
         }
-      }
+      }, lostBlock)
 
     def healthcheck(): Boolean =
       try { RollupStore.snapshot(spark, store); !spark.sparkContext.isStopped }
@@ -385,11 +481,15 @@ object MetricsHttpServer {
         v.finalized.select("path").distinct(), glob, glob.split("\\.")(0)).count())
     def getMetrics(paths: Seq[String], from: Long, to: Long): MetricsApi.MetricsResponse =
       withView(v => MetricsApi.getMetricsFrom(v.finalized, paths, from, to,
-        nowSec.getOrElse(System.currentTimeMillis() / 1000)))
+        nowSec.getOrElse(System.currentTimeMillis() / 1000), config()))
     def deleteMetrics(paths: Seq[String], from: Long, to: Long,
         dryRun: Boolean): MetricsApi.DeleteResponse =
-      withView(v => MetricsApi.deleteMetricsFrom(v.finalized, paths, from, to, dryRun)._1)
+      withView(v => MetricsApi.deleteMetricsFrom(v.finalized, paths, from, to, dryRun, config())._1)
 
-    override def close(): Unit = synchronized { closed = true; retire() }
+    override def close(): Unit = lock.synchronized {
+      closed = true
+      if (current != null) retire(current)
+      lock.notifyAll()
+    }
   }
 }

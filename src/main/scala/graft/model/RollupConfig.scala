@@ -47,6 +47,8 @@ final case class RollupDef(
     method: RollupMethod,
     windows: Seq[RollupWindow]) {
   def isCatchall: Boolean = key == RollupConfig.Catchall
+  /** The key compiled once per definition, so once per config. */
+  @transient lazy val pattern: java.util.regex.Pattern = java.util.regex.Pattern.compile(key)
 }
 
 object RollupConfig {
@@ -98,8 +100,11 @@ object RollupConfig {
       Seq(w(600, 86400), w(3600, 2592000), w(86400, 31536000)))
   ))
 
-  /** All distinct rollup tables, cassabon's `G.RollupTables`. */
-  val tables: Seq[String] = reference.flatMap(_.windows.map(_.table)).distinct.sorted
+  /** All distinct rollup tables of a config, cassabon's `G.RollupTables`. */
+  def tablesOf(config: Seq[RollupDef]): Seq[String] =
+    config.flatMap(_.windows.map(_.table)).distinct.sorted
+
+  val tables: Seq[String] = tablesOf(reference)
 
   /** (def, window) arms in priority order — the full write fan-out of one
     * incoming metric (reference datastore/metricstore.go:85-185).

@@ -15,14 +15,14 @@ import graft.model.{RollupConfig, RollupDef, Tables}
   */
 object MetricQuery {
 
-  /** Which rollup table serves a (path, age) query: the path's expression,
-    * then the first window whose retention still covers the age
-    * (metricquery.go:107-121).
+  /** Which rollup table serves a (path, age) query under `config`: the
+    * path's expression, then the first window whose retention still covers
+    * the age (metricquery.go:107-121).
     */
-  def chooseWindow(path: String, ageSec: Long): (RollupDef, graft.model.RollupWindow) = {
-    val d = RollupConfig.reference
-      .find(r => !r.isCatchall && java.util.regex.Pattern.compile(r.key).matcher(path).find())
-      .getOrElse(RollupConfig.reference.last)
+  def chooseWindow(path: String, ageSec: Long,
+      config: Seq[RollupDef] = RollupConfig.reference): (RollupDef, graft.model.RollupWindow) = {
+    val d = config.find(r => !r.isCatchall && r.pattern.matcher(path).find())
+      .getOrElse(config.last)
     (d, d.windows.find(ageSec < _.retentionSec).getOrElse(d.windows.last))
   }
 

@@ -120,29 +120,61 @@ object RollupStore {
     * skipped at every level, the rule Spark's own listing applies, so the
     * staged `_compact`, in-flight `_temporary` output, the lease, the
     * manifest and checksum files never appear. A missing store (or a
-    * directory a swap removed mid-walk) lists as empty. Recovers first,
+    * directory maintenance removed mid-walk) lists as empty. Recovers first,
     * like every other entry point.
     *
     * Walks with `listStatus`, not `listFiles`: on the local filesystem
     * `listFiles` builds a `LocatedFileStatus` per file and loads its
     * permissions. On a 4-core host a 481-file store lists in about 2 s
     * that way and in 25 ms with this walk.
+    *
+    * Never a listing from inside a live maintenance swap: [[rewrite]]
+    * deletes nothing before its swap, and the swap deletes its manifest's
+    * files and renames the rewritten ones in one directory at a time, so
+    * a walk that overlaps it can miss rows of both. A walk that saw a
+    * manifest file missing, or saw the manifest come or go, is taken
+    * again until the swap is done (at most [[SwapWaitAttempts]] walks,
+    * 10 ms apart; past that, e.g. a pass that crashed mid-swap under a
+    * young lease, the last walk is returned).
     */
   def snapshot(spark: SparkSession, path: String): Seq[SliceFile] = {
     recoverIfNeeded(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifest = manifestPath(root)
     def walk(dir: Path, rel: String): Seq[SliceFile] =
       (try fs.listStatus(dir).toSeq
-       catch { case _: java.io.FileNotFoundException => Nil })
+       catch {
+         // gone since its parent was listed: a FileNotFoundException, or on
+         // the local filesystem an IOException "Invalid directory"
+         case _: java.io.IOException if !fs.exists(dir) => Nil
+       })
         .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
         .flatMap { s =>
           val r = rel + s.getPath.getName
           if (s.isDirectory) walk(s.getPath, r + "/")
           else Seq(SliceFile(r, s.getLen, s.getModificationTime))
         }
-    walk(root, "").sortBy(_.path)
+    def midSwap(before: Boolean, files: Seq[SliceFile]): Boolean =
+      if (!fs.exists(manifest)) before
+      else try {
+        val listed = files.map(_.path).toSet
+        !before || !readManifest(fs, root).forall(listed)
+      } catch { case _: java.io.FileNotFoundException => true }
+    var attempt = 1
+    var before = fs.exists(manifest)
+    var files = walk(root, "")
+    while (midSwap(before, files) && attempt < SwapWaitAttempts) {
+      Thread.sleep(10)
+      attempt += 1
+      before = fs.exists(manifest)
+      files = walk(root, "")
+    }
+    files.sortBy(_.path)
   }
+
+  /** Walks [[snapshot]] takes at most while a maintenance swap runs. */
+  val SwapWaitAttempts = 100
 
   /** The SERVING-PATH variant of [[readFinalized]]: reads EXACTLY the
     * files of one [[snapshot]] (the way [[rewrite]] reads its manifest),
@@ -188,7 +220,8 @@ object RollupStore {
     * production answer is the optimistic one: re-plan from a fresh file
     * listing and try again.
     * Anything still failing after [[ReadRetryAttempts]] attempts is real
-    * corruption and propagates loudly.
+    * corruption and propagates loudly. `alsoRetry` names the caller's own
+    * retryable failures (the serving view's lost checkpoint blocks).
     */
   val ReadRetryAttempts = 3
 
@@ -202,13 +235,15 @@ object RollupStore {
     }
   }
 
-  private[graft] def retryTransientReads[A](f: () => A): A = {
+  private[graft] def retryTransientReads[A](f: () => A,
+      alsoRetry: Throwable => Boolean = _ => false): A = {
     var attempt = 1
     var out: Option[A] = None
     while (out.isEmpty) {
       try out = Some(f())
       catch {
-        case e: Throwable if attempt < ReadRetryAttempts && isTransientReadRace(e) =>
+        case e: Throwable if attempt < ReadRetryAttempts &&
+            (isTransientReadRace(e) || alsoRetry(e)) =>
           attempt += 1
           Thread.sleep(20L * attempt)
       }
@@ -278,24 +313,28 @@ object RollupStore {
     *     "later" is always safe); otherwise [[recover]] finishes or
     *     discards a crashed predecessor;
     *  2. `pick` sorts the partition directories (`partitionCols.size`
-    *     levels deep) into ones to delete whole and ones to fold; with
+    *     levels deep) into ones to drop whole and ones to fold; with
     *     neither, no lease is taken;
     *  3. [[acquireLease]] (a lost race bails), then [[startHeartbeat]]: a
     *     staged write's duration grows with the store, so a once-written
     *     lease would age out mid-flight, while a crashed pass's lease stops
     *     refreshing and ages out as intended;
-    *  4. whole directories are deleted;
-    *  5. the fold set — every parquet file now in the fold directories —
-    *     is recorded as the manifest BEFORE the staged write, so
-    *     `_compact/_SUCCESS` implies the manifest;
-    *  6. `fold` transforms a read of EXACTLY those files: a directory read
-    *     re-lists at scan time, and a slice landing between the listing and
-    *     the scan would be folded AND survive the swap — a double count.
-    *     One listing, one truth;
-    *  7. the output is staged under `_compact`, one file per directory (a
+    *  4. the manifest — every parquet file now in the drop and fold
+    *     directories — is recorded BEFORE the staged write, so
+    *     `_compact/_SUCCESS` implies the manifest. Nothing is deleted
+    *     before the swap, so a listing sees the store as it was before the
+    *     pass until the swap starts ([[snapshot]] waits out the swap);
+    *  5. `fold` transforms a read of EXACTLY the fold files: a directory
+    *     read re-lists at scan time, and a slice landing between the
+    *     listing and the scan would be folded AND survive the swap — a
+    *     double count. One listing, one truth;
+    *  6. the output is staged under `_compact`, one file per directory (a
     *     write READING the directories it replaces would race its own
-    *     listing), then [[swapInAdditive]] deletes only the manifest's
-    *     files and renames the staged ones in, so ingest never quiesces;
+    *     listing); a pass that only drops stages an empty committed
+    *     `_compact`;
+    *  7. [[swapInAdditive]] deletes only the manifest's files (tidying
+    *     directories they emptied) and renames the staged ones in, so
+    *     ingest never quiesces;
     *  8. the lease is released in `finally`.
     *
     * A crash anywhere leaves state the next entry point's [[recover]]
@@ -318,15 +357,20 @@ object RollupStore {
     if ((drop.isEmpty && folds.isEmpty) || !acquireLease(fs, root)) return
     val heartbeat = startHeartbeat(fs, root, leaseMs)
     try {
-      drop.foreach(d => require(fs.delete(d, true), s"maintenance: cannot delete $d"))
-      val folded = folds.flatMap(d =>
+      val filesOf = (dirs: Seq[Path]) => dirs.flatMap(d =>
         parquets(fs, d).map(f => s"${relDirName(d, depth)}/${f.getPath.getName}"))
-      if (folded.nonEmpty) {
-        writeManifest(fs, root, folded)
-        val sources = spark.read.option("basePath", path)
-          .parquet(folded.map(f => new Path(root, f).toString): _*)
-        clustered(fold(sources), partitionCols, DefaultMaxRowsPerFile)
-          .mode("overwrite").parquet(staged.toString)
+      val (dropped, folded) = (filesOf(drop), filesOf(folds))
+      if (dropped.nonEmpty || folded.nonEmpty) {
+        writeManifest(fs, root, dropped ++ folded)
+        if (folded.nonEmpty) {
+          val sources = spark.read.option("basePath", path)
+            .parquet(folded.map(f => new Path(root, f).toString): _*)
+          clustered(fold(sources), partitionCols, DefaultMaxRowsPerFile)
+            .mode("overwrite").parquet(staged.toString)
+        } else {
+          require(fs.mkdirs(staged), s"maintenance: cannot create $staged")
+          fs.create(new Path(staged, "_SUCCESS"), true).close()
+        }
         swapInAdditive(fs, root, staged, depth)
       }
     } finally {
@@ -467,9 +511,9 @@ object RollupStore {
           s"compact swap: rename ${f.getPath} -> $dest failed (concurrent writer?)")
       }
     }
-    // fold sources whose partition vanished from the staged output (a TTL
-    // rewrite can filter a boundary partition down to zero rows): still
-    // deleted, and an emptied directory is tidied away
+    // dropped directories, and fold sources whose partition vanished from
+    // the staged output (a TTL rewrite can filter a boundary partition down
+    // to zero rows): still deleted, and an emptied directory is tidied away
     byDir.keys.filterNot(covered).foreach { relDir =>
       dropFolded(relDir)
       val dir = new Path(root, relDir)
@@ -592,8 +636,8 @@ object RollupStore {
     * recovered, and a slice appended mid-pass survives):
     *
     *  1. every `(tbl, stat_date)` directory STRICTLY older than its
-    *     table's cutoff date is dropped wholesale — a directory delete per
-    *     expired day, no data read (the no-tombstone promise of the layout);
+    *     table's cutoff date is dropped wholesale — its files deleted in
+    *     the swap, no data read (the no-tombstone promise of the layout);
     *  2. each table's BOUNDARY directory (`stat_date` == the cutoff's own
     *     date) can hold both expired and live rows, so it is folded through
     *     a filter keeping only rows newer than the cutoff.

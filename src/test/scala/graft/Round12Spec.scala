@@ -34,6 +34,8 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *  9. The store maintenance protocol (lease, heartbeat, manifest, swap)
   *     runs only in `RollupStore.rewrite` and recovery; a source scan fails
   *     on a hand-written maintenance pass.
+  * 10. `HttpServer.create` appears only in `MetricsHttpServer.scala`,
+  *     which turns Nagle's algorithm off before it.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -201,6 +203,23 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       s"maintenance census drifted: got $hits, want $want — run a store " +
         "rewrite through RollupStore.rewrite(partitionCols, pick, fold) instead " +
         "of taking the lease and swapping by hand")
+  }
+
+  // ------------------------------------------------- http server census
+
+  /** The JDK server reads `sun.net.httpserver.nodelay` once, when its
+    * first instance is created. `MetricsHttpServer.start` sets it right
+    * before its `HttpServer.create`; a second creation site could create
+    * the first server with Nagle's algorithm on for the whole JVM.
+    */
+  test("HttpServer.create appears only in MetricsHttpServer.scala") {
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => codeLines(p).filter(_.contains("HttpServer.create("))
+        .map(_ => p.getFileName.toString))
+    assert(hits == Seq("MetricsHttpServer.scala"),
+      s"http server census drifted: got $hits — serve HTTP through MetricsHttpServer")
   }
 
   test("Registry.select fails on unknown or empty op filters, keeps Registry order") {

@@ -10,19 +10,25 @@ import org.apache.spark.sql.functions.{col, lit, max, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{MetricsApi, MetricsHttpServer}
-import graft.model.Tables
+import graft.model.{RollupConfig, RollupDef, Tables}
 import graft.operators.{Index, Rollups}
 import graft.sources.RollupStore
 
 /** The daemon's serving view: `StoreBackend` answers every request that
-  * sees the same store listing from one cached merged frame.
+  * sees the same store listing from one checkpointed merged frame.
   *
   *  - Invalidation: repeated GETs build one view; an appended slice or a
   *    compaction changes the listing and the next GET rebuilds; every
   *    answer is byte-equal to a server that reads and merges the store
   *    afresh per request.
+  *  - Concurrency: four clients racing appends, a compaction and a TTL
+  *    pass only ever see answers of a store state the test passed through.
   *  - `/healthcheck` runs no Spark job.
-  *  - `daemon.stop()` releases every cached block and cache entry.
+  *  - `daemon.stop()` releases every checkpointed block and cache entry;
+  *    a view whose blocks are lost is rebuilt.
+  *  - `/metrics` picks tables and steps by the daemon's live rollup config.
+  *  - A query parameter that does not parse answers 400, and keep-alive
+  *    responses do not wait on a delayed ACK.
   *  - `getPathsFrom`'s driver-side sort equals `orderBy("node")` on
   *    non-ASCII and supplementary characters, where UTF-8 byte order and
   *    UTF-16 (`String.compareTo`) order disagree.
@@ -34,9 +40,25 @@ class ServeViewSpec extends AnyFunSuite with TestSpark {
   private def send(port: Int, method: String, p: String): (Int, String) = {
     val r = http.send(java.net.http.HttpRequest.newBuilder(
         java.net.URI.create(s"http://127.0.0.1:$port$p"))
+        .timeout(java.time.Duration.ofSeconds(60)) // a hung server fails the spec
         .method(method, java.net.http.HttpRequest.BodyPublishers.noBody()).build(),
       java.net.http.HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), r.body())
+  }
+
+  /** One request over a raw socket, so the target may be a URI the JDK
+    * client refuses to build.
+    */
+  private def sendRaw(port: Int, method: String, target: String): (Int, String) = {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(60000)
+      sock.getOutputStream.write(
+        s"$method $target HTTP/1.1\r\nHost: 127.0.0.1\r\nConnection: close\r\n\r\n"
+          .getBytes("UTF-8"))
+      val reply = new String(sock.getInputStream.readAllBytes(), "UTF-8")
+      (reply.split(" ")(1).toInt, reply.substring(reply.indexOf("\r\n\r\n") + 4))
+    } finally sock.close()
   }
 
   private def now: Long = Tables.metrics(spark, Sf).agg(max("ts")).head().getLong(0)
@@ -76,6 +98,34 @@ class ServeViewSpec extends AnyFunSuite with TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The reference answer: a server that reads and merges `store` afresh
+    * on every request, under rollup config `config`.
+    */
+  private def freshServer(store: String, t: Long,
+      config: Seq[RollupDef] = RollupConfig.reference): MetricsHttpServer = {
+    def merged = RollupStore.readFinalized(spark, store)
+    new MetricsHttpServer(new MetricsHttpServer.Backend {
+      def healthcheck(): Boolean = true
+      def getPaths(glob: String, tenant: Option[String]): Seq[MetricsApi.PathEntry] =
+        MetricsApi.getPathsFrom(Index.indexFrom(merged.select("path").distinct()), glob, tenant)
+      def deletePaths(glob: String): Long =
+        Index.deleteFrom(merged.select("path").distinct(), glob, glob.split("\\.")(0)).count()
+      def getMetrics(paths: Seq[String], from: Long, to: Long): MetricsApi.MetricsResponse =
+        MetricsApi.getMetricsFrom(merged, paths, from, to, t, config)
+      def deleteMetrics(paths: Seq[String], from: Long, to: Long,
+          dryRun: Boolean): MetricsApi.DeleteResponse =
+        MetricsApi.deleteMetricsFrom(merged, paths, from, to, dryRun, config)._1
+    })
+  }
+
+  /** One request of every route shape over the fixture at `now` = `t`. */
+  private def requests(t: Long): Seq[(String, String)] = Seq(
+    "GET" -> s"/metrics?path=servers.view.u5&path=servers.click.u2&from=${t - 172800}&to=$t",
+    "GET" -> "/paths?query=servers.*.u3",
+    "GET" -> "/paths?query=*.*&tenant=servers",
+    "DELETE" -> s"/metrics?path=servers.view.u5&from=${t - 172800}&to=$t",
+    "DELETE" -> "/paths?query=servers.view.*")
+
   test("serving view: one build per listing; append and compact rebuild; " +
       "answers byte-equal a fresh read-and-merge per request") {
     val store = Files.createTempDirectory("serve_view_store").toString
@@ -83,28 +133,9 @@ class ServeViewSpec extends AnyFunSuite with TestSpark {
     appendSlice(store, 0)
     val daemon = new Daemon(spark, store, Some(t))
     val port = daemon.startHttp()
-    // the reference answer: read and merge the store on every request
-    def merged = RollupStore.readFinalized(spark, store)
-    val fresh = new MetricsHttpServer(new MetricsHttpServer.Backend {
-      def healthcheck(): Boolean = true
-      def getPaths(glob: String, tenant: Option[String]): Seq[MetricsApi.PathEntry] =
-        MetricsApi.getPathsFrom(Index.indexFrom(merged.select("path").distinct()), glob, tenant)
-      def deletePaths(glob: String): Long =
-        Index.deleteFrom(merged.select("path").distinct(), glob, glob.split("\\.")(0)).count()
-      def getMetrics(paths: Seq[String], from: Long, to: Long): MetricsApi.MetricsResponse =
-        MetricsApi.getMetricsFrom(merged, paths, from, to, t)
-      def deleteMetrics(paths: Seq[String], from: Long, to: Long,
-          dryRun: Boolean): MetricsApi.DeleteResponse =
-        MetricsApi.deleteMetricsFrom(merged, paths, from, to, dryRun)._1
-    })
+    val fresh = freshServer(store, t)
     val freshPort = fresh.start()
-    val metricsQ = s"/metrics?path=servers.view.u5&path=servers.click.u2&from=${t - 172800}&to=$t"
-    val requests = Seq(
-      "GET" -> metricsQ,
-      "GET" -> "/paths?query=servers.*.u3",
-      "GET" -> "/paths?query=*.*&tenant=servers",
-      "DELETE" -> s"/metrics?path=servers.view.u5&from=${t - 172800}&to=$t",
-      "DELETE" -> "/paths?query=servers.view.*")
+    val requests = this.requests(t)
     /** Serve every request twice; each answer must equal the fresh one. */
     def serveAll(): Seq[String] = (requests ++ requests).map { case (m, p) =>
       val (code, body) = send(port, m, p)
@@ -165,13 +196,216 @@ class ServeViewSpec extends AnyFunSuite with TestSpark {
       assert(send(port, "GET", "/paths?query=servers.*")._1 == 200)
       appendSlice(store, 1) // the next request replaces the view
       assert(send(port, "GET", "/paths?query=servers.*")._1 == 200)
-      assert(cacheEntries == entriesBefore + 2,
-        "the live view should cache its merged frame and its index")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).size == 2,
+        "the live view should checkpoint its merged frame and its index")
     } finally daemon.stop()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
     assert(leaked.isEmpty, s"serving view leaked persistent RDDs: $leaked")
     assert(cacheEntries == entriesBefore,
       "serving view left cache entries behind")
+  }
+
+  test("concurrent clients across appends, compaction and TTL: every answer is a " +
+      "state's fresh answer; stop releases everything") {
+    val store = Files.createTempDirectory("serve_view_concurrent").toString
+    val t = now
+    appendSlice(store, 0)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val entriesBefore = cacheEntries
+    val daemon = new Daemon(spark, store, Some(t))
+    val port = daemon.startHttp()
+    val fresh = freshServer(store, t)
+    val freshPort = fresh.start()
+    val reqs = requests(t)
+    def freshAnswers(): Map[(String, String), String] =
+      reqs.map { case (m, p) => (m, p) -> send(freshPort, m, p)._2 }.toMap
+    val states = scala.collection.mutable.ArrayBuffer(freshAnswers())
+    val answers = new ConcurrentLinkedQueue[((String, String), Int, String)]()
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // single flight: four simultaneous misses on one listing build one view
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val misses = (0 until 4).map { _ =>
+      val th = new Thread(() => try {
+        go.await()
+        val (m, p) = reqs.head
+        val (code, body) = send(port, m, p)
+        answers.add(((m, p), code, body))
+      } catch { case e: Throwable => errors.add(e) })
+      th.start()
+      th
+    }
+    go.countDown()
+    misses.foreach(_.join(120000))
+    assert(misses.forall(!_.isAlive), "a first request never returned")
+    assert(daemon.backend.viewsBuilt.get == 1, "concurrent misses on one listing built twice")
+    // at most two views (two checkpointed frames each) are ever live
+    var maxLive = 0
+    val sampler = new Thread(() => while (!done.get) {
+      maxLive = math.max(maxLive,
+        (spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).size)
+      Thread.sleep(5)
+    })
+    sampler.setDaemon(true)
+    sampler.start()
+    val clients = (0 until 4).map { c =>
+      val th = new Thread(() => {
+        var k = c
+        try while (!done.get) {
+          val (m, p) = reqs(k % reqs.size)
+          val (code, body) = send(port, m, p)
+          answers.add(((m, p), code, body))
+          k += 1
+        } catch { case e: Throwable => errors.add(e) }
+      }, s"serve-view-client-$c")
+      th.setDaemon(true)
+      th.start()
+      th
+    }
+    /** Let the clients finish `n` more requests in the current state. */
+    def served(n: Int): Unit = {
+      val want = answers.size + n
+      val deadline = System.currentTimeMillis() + 120000
+      while (answers.size < want && errors.isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(errors.isEmpty, s"client failed: ${errors.peek()}")
+      assert(answers.size >= want, "clients stalled")
+    }
+    try {
+      served(8)
+      appendSlice(store, 1); states += freshAnswers(); served(8)
+      appendSlice(store, 2); states += freshAnswers(); served(8)
+      RollupStore.compact(spark, store); states += freshAnswers(); served(8)
+      RollupStore.dropExpired(spark, store, t); states += freshAnswers(); served(8)
+    } finally {
+      done.set(true)
+      clients.foreach(_.join(120000))
+      sampler.join(10000)
+      fresh.stop()
+      daemon.stop()
+    }
+    assert(clients.forall(!_.isAlive), "a client thread never returned")
+    assert(maxLive <= 4, s"$maxLive checkpointed frames live at once: more than two views")
+    assert(errors.isEmpty, s"client failed: ${errors.peek()}")
+    answers.asScala.foreach { case (req, code, body) =>
+      assert(code == 200, s"$req: $code $body")
+      assert(states.exists(_(req) == body), s"$req: answer matches no store state: $body")
+    }
+    assert(states.map(_(reqs.head)).distinct.size > 1, "the appends must change GET /metrics")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(leaked.isEmpty, s"serving view leaked persistent RDDs: $leaked")
+    assert(cacheEntries == entriesBefore, "serving view left cache entries behind")
+  }
+
+  test("a view whose checkpoint blocks are lost is rebuilt on the next request") {
+    val store = Files.createTempDirectory("serve_view_lost").toString
+    val t = now
+    appendSlice(store, 0)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val daemon = new Daemon(spark, store, Some(t))
+    val port = daemon.startHttp()
+    val fresh = freshServer(store, t)
+    val freshPort = fresh.start()
+    val (m, p) = requests(t).head
+    try {
+      assert(send(port, m, p) == send(freshPort, m, p))
+      assert(daemon.backend.viewsBuilt.get == 1)
+      // what an executor loss does on a cluster: the view's blocks are gone
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!rddsBefore(id)) rdd.unpersist()
+      }
+      assert(send(port, m, p) == send(freshPort, m, p), "no correct answer after the loss")
+      assert(daemon.backend.viewsBuilt.get == 2, "the lost view must be rebuilt")
+      assert(send(port, m, p) == send(freshPort, m, p))
+      assert(daemon.backend.viewsBuilt.get == 2, "the rebuilt view must be served again")
+    } finally { fresh.stop(); daemon.stop() }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore).isEmpty)
+  }
+
+  test("GET and DELETE /metrics follow the daemon's reloaded rollup config") {
+    val store = Files.createTempDirectory("serve_view_config").toString
+    val cfg = Files.createTempDirectory("serve_view_config_yaml").resolve("rollups.yaml")
+    Files.writeString(cfg,
+      "rollups:\n  default:\n    retention: [ 1m:14d ]\n    aggregation: average\n")
+    val t = now
+    val daemon = new Daemon(spark, store, Some(t))
+    val port = daemon.startHttp()
+    assert(daemon.reload(cfg.toString).clean)
+    val defs = daemon.rollupConfig
+    RollupStore.appendStateSlice(Rollups.mergeableWith(Tables.metrics(spark, Sf), defs), store)
+    // the two paths with the newest points, over the last three days
+    val paths = Tables.metrics(spark, Sf).orderBy(col("ts").desc).limit(50)
+      .collect().map(_.getString(0)).distinct.take(2).toSeq
+    val from = t - 259200
+    val want = MetricsApi.getMetricsFrom(RollupStore.readFinalized(spark, store),
+      paths, from, t, t, defs)
+    assert(want.step == 60 && want.series.values.exists(_.exists(_.isDefined)),
+      "the fixture must hold points in range")
+    val fresh = freshServer(store, t, defs)
+    val freshPort = fresh.start()
+    try {
+      val q = s"/metrics?${paths.map("path=" + _).mkString("&")}&from=$from&to=$t"
+      val (code, body) = send(port, "GET", q)
+      assert(code == 200 && body.contains("\"step\":60,"), s"the 1m:14d step: $body")
+      assert(body == send(freshPort, "GET", q)._2, "values diverge from the config's table")
+      val dq = s"/metrics?path=${paths.head}&from=$from&to=$t"
+      val (dcode, dbody) = send(port, "DELETE", dq)
+      assert(dcode == 200 && dbody.contains(s"${paths.head}|rollup_001209600"), dbody)
+      assert(dbody == send(freshPort, "DELETE", dq)._2)
+    } finally { fresh.stop(); daemon.stop() }
+  }
+
+  test("a query parameter that does not parse answers 400 naming it, logged as [400]") {
+    val httpd = new MetricsHttpServer(spark, Sf)
+    val logged = new ConcurrentLinkedQueue[String]()
+    httpd.accessLogSink = l => logged.add(l)
+    val port = httpd.start()
+    try {
+      Seq("from" -> "/metrics?path=a.b&from=abc&to=10",
+        "to" -> "/metrics?path=a.b&from=0&to=1x",
+        "from" -> "/metrics?path=a.b&from=&to=10").foreach { case (param, q) =>
+        Seq("GET", "DELETE").foreach { m =>
+          val (code, body) = sendRaw(port, m, q)
+          assert(code == 400, s"$m $q: $code $body")
+          assert(body.contains(s"\"parameter\":\"$param\""), s"$m $q: $body")
+        }
+      }
+      assert(logged.asScala.count(_.startsWith("[400] ")) == 6, logged.asScala.mkString("\n"))
+      // a malformed %-escape: the JDK server refuses the URI before any route
+      assert(sendRaw(port, "GET", "/metrics?path=%zz&from=0&to=10")._1 == 400)
+    } finally httpd.stop()
+  }
+
+  test("50 sequential keep-alive GET / on one connection finish in under 1 s") {
+    val httpd = new MetricsHttpServer(spark, Sf)
+    httpd.accessLogSink = _ => ()
+    val port = httpd.start()
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(10000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      val length = "(?i)content-length: *(\\d+)".r
+      def get(): String = {
+        out.write("GET / HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n".getBytes("UTF-8"))
+        out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) {
+          val b = in.read()
+          assert(b >= 0, "the server closed the connection")
+          head += b.toChar
+        }
+        val n = length.findFirstMatchIn(head).map(_.group(1).toInt).getOrElse(0)
+        assert(in.readNBytes(n).length == n)
+        head.takeWhile(_ != '\r').toString
+      }
+      assert(get().endsWith(" 200 OK"))
+      val t0 = System.nanoTime()
+      (1 to 50).foreach(_ => assert(get().endsWith(" 200 OK")))
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 1000, s"50 keep-alive requests took $ms ms: a Nagle / delayed-ACK stall")
+    } finally { sock.close(); httpd.stop() }
   }
 
   test("getPathsFrom sorts like orderBy(node) on non-ASCII and supplementary nodes") {
