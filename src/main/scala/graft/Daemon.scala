@@ -16,7 +16,11 @@ import graft.streaming.CarbonStream
   *
   *  - INGEST: `CarbonStream.startRollupFlush` — a live Structured
   *    Streaming query, one mergeable state slice appended to the store
-  *    per flush cycle;
+  *    per flush cycle. The wire arms stage each cycle's accepted rows
+  *    from the driver as one file (no Spark job), and the flush batch
+  *    writes its store files directly and publishes each by rename (no
+  *    Hadoop commit protocol); the metric flush query deletes each
+  *    staged slice once its batch has committed;
   *  - SERVE: `MetricsHttpServer` over a `StoreBackend` — every HTTP
   *    answer is merge-on-read over whatever ingest has flushed so far,
   *    from one checkpointed view per store listing, with requests handled
@@ -252,25 +256,14 @@ object Daemon {
 
   /** Stage one events slice as a single parquet FILE in `srcDir` — the
     * unit the flush query turns into one micro-batch (one file = one
-    * flush cycle, `maxFilesPerTrigger = 1`).
+    * flush cycle, `maxFilesPerTrigger = 1`). One task writes the file to a
+    * hidden temp in `srcDir` and the driver renames it to `name`
+    * ([[graft.sources.ParquetFiles.stage]]): the rename is atomic on any
+    * filesystem, so the stream never lists a half-written slice, and
+    * nothing is created outside `srcDir`.
     */
-  def stageSlice(slice: DataFrame, srcDir: String, name: String): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_slice")
-    slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = java.nio.file.Files.list(tmp).iterator()
-    var moved = false
-    while (part.hasNext && !moved) {
-      val f = part.next()
-      if (f.getFileName.toString.endsWith(".parquet")) {
-        java.nio.file.Files.move(f,
-          java.nio.file.Paths.get(srcDir, name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        moved = true
-      }
-    }
-    require(moved, s"no parquet part produced for slice $name")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-  }
+  def stageSlice(slice: DataFrame, srcDir: String, name: String): Unit =
+    graft.sources.ParquetFiles.stage(slice, srcDir, name)
 
   /** `runMain graft.Daemon [sfDir]`: the serve-while-ingesting lifecycle
     * on real sockets — three flush cycles dripped into a live daemon,

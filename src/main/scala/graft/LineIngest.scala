@@ -5,6 +5,9 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The listener-side metricHandler (carbon_plaintext.go:208-243): the base
   * of the UDP and TCP front doors, so the two transports cannot drift.
@@ -164,7 +167,9 @@ private[graft] abstract class LineIngest {
 
   /** Drain the accepted rows into ONE staged parquet slice in `srcDir`
     * (the flush-cycle unit [[Daemon.stageSlice]] documents) and return
-    * how many rows flushed.
+    * how many rows flushed. The rows are already on the driver, so they
+    * are written there, with no Spark job: to a hidden temp in `srcDir`,
+    * then renamed to `name` ([[graft.sources.ParquetFiles.stageRows]]).
     */
   def flush(spark: SparkSession, srcDir: String, name: String): Int = {
     val rows = buffered.synchronized {
@@ -172,11 +177,18 @@ private[graft] abstract class LineIngest {
       buffered.clear()
       snap
     }
-    if (rows.nonEmpty) {
-      import spark.implicits._
-      Daemon.stageSlice(
-        rows.toDF("path", "value", "ts", "event_id"), srcDir, name)
-    }
+    if (rows.nonEmpty)
+      graft.sources.ParquetFiles.stageRows(spark, LineIngest.SliceSchema,
+        rows.iterator.map { case (path, value, ts, id) =>
+          InternalRow(UTF8String.fromString(path), value, ts, id)
+        }, srcDir, name)
     rows.size
   }
+}
+
+private[graft] object LineIngest {
+  /** A staged slice's columns: the metric rows the flush query reads. */
+  val SliceSchema: StructType =
+    StructType.fromDDL("path STRING, value DOUBLE NOT NULL, ts BIGINT NOT NULL, " +
+      "event_id BIGINT NOT NULL")
 }

@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.functions._
 
 import graft.model.RollupWindow
@@ -22,7 +23,9 @@ import graft.model.RollupWindow
   *
   * Every maintenance write of a partitioned append-only store — rollup
   * compaction, TTL expiry, and [[VecIndexStore]]'s cell folding — is one
-  * [[rewrite]] pass; every append is one [[appendClustered]] write.
+  * [[rewrite]] pass; every append is one [[appendClustered]] write, whose
+  * files are published by rename ([[ParquetFiles]]) with no commit
+  * protocol.
   */
 object RollupStore {
 
@@ -54,13 +57,13 @@ object RollupStore {
   /** batchwriter.go's size-triggered flush pacing (datastore/
     * batchwriter.go:44-52: `Append` accumulates statements and flushes
     * the batch the moment `stmtCount >= batchSize`) re-expressed as the
-    * store's write-batching knob: Spark's `maxRecordsPerFile` caps each
-    * committed parquet file at the batch size, so one oversized flush
-    * lands as SEVERAL bounded files in its partition directory — the
-    * same bounded-unit-of-write property (a reader never waits on, and a
-    * retry never redoes, more than one batch) the reference's Cassandra
-    * batches provide. The default keeps files row-group-sized; tighten it
-    * where the downstream consumer wants smaller commit units.
+    * store's write-batching knob: it caps each published parquet file at
+    * the batch size, so one oversized flush lands as SEVERAL bounded
+    * files in its partition directory — the same bounded-unit-of-write
+    * property (a reader never waits on, and a retry never redoes, more
+    * than one batch) the reference's Cassandra batches provide. The
+    * default keeps files row-group-sized; tighten it where the downstream
+    * consumer wants smaller commit units.
     */
   val DefaultMaxRowsPerFile = 5000000L
 
@@ -79,20 +82,41 @@ object RollupStore {
   /** Append `rows` as one slice of a store partitioned on `partitionCols`,
     * recovering first. Rows are clustered onto their partition before the
     * write: without it every hash-partitioned task scatters a few rows
-    * into EVERY partition directory, so each flush commits tasks ×
+    * into EVERY partition directory, so each flush writes tasks ×
     * directories tiny files and every later read/compaction pays the
     * listing+open cost. One file per directory per slice is the right
-    * shape for state slices at any scale, and `maxRecordsPerFile` still
-    * splits a pathological directory. (What this does NOT remove is the
-    * per-directory writer open/commit cost itself — a flush's wall time
-    * scales with how many partitions it touches, which is why flush cycles
-    * should be time-contiguous; see `Rollups.storeLifecycle`.)
+    * shape for state slices at any scale, and `maxRowsPerFile` still
+    * splits a pathological directory.
+    *
+    * The write is [[ParquetFiles.append]]: each task sorts its rows by
+    * the partition columns and writes them as hidden temps in their final
+    * directories, and the driver publishes each file by rename. No Hadoop
+    * commit protocol runs, so an append costs its tasks plus one rename
+    * per file, whatever the number of directories it touches. Rows
+    * planned as one partition skip the clustering shuffle
+    * ([[singlePartition]]).
     */
   private[graft] def appendClustered(rows: DataFrame, path: String,
       partitionCols: Seq[String], maxRowsPerFile: Long): Unit = {
     recoverIfNeeded(rows.sparkSession, path, partitionCols.size)
-    clustered(rows, partitionCols, maxRowsPerFile).mode("append").parquet(path)
+    val keys = partitionCols.map(col)
+    val inPlace = rows.sortWithinPartitions(keys: _*)
+    ParquetFiles.append(
+      if (singlePartition(inPlace)) inPlace
+      else rows.repartition(keys: _*).sortWithinPartitions(keys: _*),
+      path, partitionCols, maxRowsPerFile)
   }
+
+  /** Whether `df` is planned as one partition (a flush batch over one
+    * staged file): its rows are clustered already, and the append runs as
+    * one job with no shuffle. Judged on the physical plan before
+    * exchanges are placed — under adaptive execution the final plan
+    * reports an unknown partitioning — which an aggregate over one
+    * partition keeps as `SinglePartition`, since one partition satisfies
+    * any clustering.
+    */
+  private def singlePartition(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.outputPartitioning == SinglePartition
 
   /** One file per partition directory (split past `maxRowsPerFile`). */
   private def clustered(rows: DataFrame, partitionCols: Seq[String],
@@ -311,7 +335,8 @@ object RollupStore {
     *  1. a missing store or a young lease skips the pass (another writer
     *     is mid-maintenance; the store stays correct unmaintained, so
     *     "later" is always safe); otherwise [[recover]] finishes or
-    *     discards a crashed predecessor;
+    *     discards a crashed predecessor and [[sweepOrphanTemps]] deletes
+    *     the old temps of dead appends;
     *  2. `pick` sorts the partition directories (`partitionCols.size`
     *     levels deep) into ones to drop whole and ones to fold; with
     *     neither, no lease is taken;
@@ -353,7 +378,9 @@ object RollupStore {
     val depth = partitionCols.size
     val staged = new Path(root, "_compact")
     recover(fs, root, staged, leaseMs, depth)
-    val (drop, folds) = pick(fs, partitionDirs(fs, root, depth).toSeq)
+    val dirs = partitionDirs(fs, root, depth).toSeq
+    sweepOrphanTemps(fs, dirs)
+    val (drop, folds) = pick(fs, dirs)
     if ((drop.isEmpty && folds.isEmpty) || !acquireLease(fs, root)) return
     val heartbeat = startHeartbeat(fs, root, leaseMs)
     try {
@@ -399,6 +426,22 @@ object RollupStore {
       graft.operators.Rollups.mergeAll(state.drop("stat_date"))
         .withColumn("stat_date", statDate)
     }
+
+  /** Delete the hidden temps ([[ParquetFiles.isTemp]]) older than
+    * [[CompactLeaseMs]] from `dirs`: what an append task that failed or
+    * was killed left before its driver published. A younger temp may
+    * belong to an append still running and is never touched. Run by
+    * maintenance only, not by every entry point's recovery: it lists
+    * every partition directory, which the serving path must not pay per
+    * request.
+    */
+  private def sweepOrphanTemps(fs: FileSystem, dirs: Seq[Path]): Unit = {
+    val horizon = System.currentTimeMillis() - CompactLeaseMs
+    dirs.foreach(d => fs.listStatus(d).foreach { s =>
+      if (ParquetFiles.isTemp(s.getPath.getName) && s.getModificationTime < horizon)
+        fs.delete(s.getPath, false)
+    })
+  }
 
   /** The compaction pick: fold every directory holding more than one file. */
   private[graft] def multiFileDirs(fs: FileSystem, dirs: Seq[Path]): (Seq[Path], Seq[Path]) =

@@ -419,9 +419,9 @@ object CarbonStream {
 
   /** The flush cycle, the unit of ingest: each micro-batch of metric rows
     * `(path, value, ts, event_id)` is reduced to its mergeable rollup state
-    * and appended to the store as ONE slice. `config()` is read PER FLUSH
-    * CYCLE — the daemon's SIGHUP reload swaps it between cycles, never
-    * inside one.
+    * ([[flushState]]) and appended to the store as ONE slice. `config()` is
+    * read PER FLUSH CYCLE — the daemon's SIGHUP reload swaps it between
+    * cycles, never inside one.
     */
   private def appendEachBatch(metrics: DataFrame, store: String,
       config: () => Seq[graft.model.RollupDef])
@@ -429,16 +429,29 @@ object CarbonStream {
     metrics.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.RollupStore.appendStateSlice(
-          graft.operators.Rollups.mergeableWith(batch, config()), store)
+        graft.sources.RollupStore.appendStateSlice(flushState(batch, config()), store)
       }
       .start()
+
+  /** One flush batch's mergeable state. A batch is one staged file, so
+    * the aggregation runs over one partition: it plans no exchange, and
+    * the append clusters the state in place, so a cycle is one Spark job.
+    */
+  private[graft] def flushState(batch: DataFrame,
+      config: Seq[graft.model.RollupDef]): DataFrame =
+    graft.operators.Rollups.mergeableWith(batch.coalesce(1), config)
 
   /** The flush query over STAGED METRIC slices — the wire listeners'
     * bridge ([[graft.LineIngest]]): each staged `(path, value, ts,
     * event_id)` parquet file is one flush cycle. Same [[appendEachBatch]]
     * as [[startRollupFlush]]; the events→metrics mapping is absent because
     * the socket already delivers metric rows.
+    *
+    * `srcDir` holds only staged slices, so the source deletes each slice
+    * once its batch has committed (`cleanSource=delete`): the directory
+    * it re-lists on every idle poll stays a couple of files long instead
+    * of growing by one file per cycle. [[startRollupFlush]] never sets
+    * it: its directory may be a fixture.
     */
   def startMetricRollupFlush(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet",
@@ -449,6 +462,7 @@ object CarbonStream {
       .schema("path STRING, value DOUBLE, ts BIGINT, event_id BIGINT")
       .option("pathGlobFilter", glob)
       .option("maxFilesPerTrigger", "1")
+      .option("cleanSource", "delete")
       .parquet(srcDir), store, config)
 
   /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle

@@ -559,12 +559,12 @@ object DedupStream {
             val wtok = words.select("word").distinct()
               .withColumn("n_sym",
                 expr(s"cast(size(split(trim($chain), '  ')) as bigint)"))
-            words.join(broadcast(wtok), "word")
+            val tokens = words.join(broadcast(wtok), "word")
               .groupBy("doc_id")
               .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_tokens"))
               .select(col("doc_id"), col("n_words"), col("n_tokens"),
                 round(col("n_tokens") / col("n_words"), 6).as("tokens_per_word"))
-              .write.mode("append").parquet(out)
+            graft.sources.ParquetFiles.append(tokens, out, Nil, Long.MaxValue)
           }
           .outputMode("append")
           .start()

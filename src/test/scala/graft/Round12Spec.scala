@@ -36,6 +36,8 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *     on a hand-written maintenance pass.
   * 10. `HttpServer.create` appears only in `MetricsHttpServer.scala`,
   *     which turns Nagle's algorithm off before it.
+  * 11. No parquet append in `src/main` goes through Spark's commit
+  *     protocol (`.mode("append")`); appends publish by rename.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -220,6 +222,24 @@ class Round12Spec extends AnyFunSuite with TestSpark {
         .map(_ => p.getFileName.toString))
     assert(hits == Seq("MetricsHttpServer.scala"),
       s"http server census drifted: got $hits — serve HTTP through MetricsHttpServer")
+  }
+
+  // ------------------------------------------------- append write census
+
+  /** Parquet appends publish their files by rename
+    * (`graft.sources.ParquetFiles`); none goes through Spark's
+    * commit-protocol append. The committer form lives on only as the test
+    * reference (`CommitterReference`, in `src/test`).
+    */
+  test("no commit-protocol append write in src/main") {
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => codeLines(p)
+        .filter(l => l.contains(".mode(\"append\")") || l.contains("SaveMode.Append"))
+        .map(l => s"${p.getFileName}: $l"))
+    assert(hits.isEmpty,
+      s"append census drifted: $hits — append through ParquetFiles.append or RollupStore.appendClustered")
   }
 
   test("Registry.select fails on unknown or empty op filters, keeps Registry order") {

@@ -24,8 +24,9 @@ import graft.sources.RollupStore
   *  - Concurrency: four clients racing appends, a compaction and a TTL
   *    pass only ever see answers of a store state the test passed through.
   *  - `/healthcheck` runs no Spark job.
-  *  - `daemon.stop()` releases every checkpointed block and cache entry;
-  *    a view whose blocks are lost is rebuilt.
+  *  - `daemon.stop()` releases every checkpointed block and cache entry,
+  *    and a replaced view releases its own with no warning logged; a
+  *    view whose blocks are lost is rebuilt.
   *  - `/metrics` picks tables and steps by the daemon's live rollup config.
   *  - A query parameter that does not parse answers 400, and keep-alive
   *    responses do not wait on a delayed ACK.
@@ -406,6 +407,45 @@ class ServeViewSpec extends AnyFunSuite with TestSpark {
       val ms = (System.nanoTime() - t0) / 1000000
       assert(ms < 1000, s"50 keep-alive requests took $ms ms: a Nagle / delayed-ACK stall")
     } finally { sock.close(); httpd.stop() }
+  }
+
+  test("replacing a view logs no warning for the checkpoints it releases") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("serve-view-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val store = Files.createTempDirectory("serve_view_release_log").toString
+    appendSlice(store, 0)
+    val t = now
+    val daemon = new Daemon(spark, store, Some(t))
+    try {
+      val port = daemon.startHttp()
+      assert(send(port, "GET", s"/metrics?path=servers.view.u5&from=${t - 7200}&to=$t")._1 == 200)
+      assert(send(port, "GET", "/paths?query=servers.*")._1 == 200)
+      appendSlice(store, 1) // the next request replaces the view, releasing both frames
+      assert(send(port, "GET", "/paths?query=servers.*")._1 == 200)
+      assert(daemon.backend.viewsBuilt.get == 2)
+      org.apache.logging.log4j.LogManager.getLogger("graft.serve-view-spec").warn("capture-check")
+    } finally {
+      daemon.stop()
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val seen = lines.asScala.toSeq
+    assert(seen.exists(_.contains("capture-check")), "the capture saw no WARN at all")
+    assert(!seen.exists(_.contains("locally checkpointed")),
+      s"an intended release logged: ${seen.filter(_.contains("locally checkpointed"))}")
   }
 
   test("getPathsFrom sorts like orderBy(node) on non-ASCII and supplementary nodes") {
