@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.{SerializableWritable, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -34,6 +34,12 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *
   * A writer that dies between the two leaves a hidden temp behind; store
   * maintenance sweeps the old ones (`RollupStore.rewrite`).
+  *
+  * Three writes: [[stageRows]] (driver rows, no Spark job: the wire
+  * listeners' flush slices), [[stage]] (frames as one file each, all in
+  * one job: the daemon's staged slices and every stream replay's
+  * fixture, `CarbonStream.replaySlices`) and [[append]] (a partitioned
+  * store append or maintenance's staged fold output).
   */
 object ParquetFiles {
 
@@ -82,11 +88,19 @@ object ParquetFiles {
   private def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Run `f` over the rows of `df` as one SQL execution. */
-  private def onRows[A](df: DataFrame)(f: RDD[InternalRow] => A): A = {
-    val qe = df.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("parquet files"))(f(qe.toRdd))
-  }
+  /** Run `f` over the rows of each of `dfs`, each frame planned in its own
+    * SQL execution (nested, so `f` runs inside all of them).
+    */
+  private def onRows[A](dfs: Seq[DataFrame])(f: Seq[RDD[InternalRow]] => A): A =
+    dfs match {
+      case Seq() => f(Nil)
+      case df +: rest =>
+        val qe = df.queryExecution
+        SQLExecution.withNewExecutionId(qe, Some("parquet files")) {
+          val rdd = qe.toRdd
+          onRows(rest)(rdds => f(rdd +: rdds))
+        }
+    }
 
   /** Rename each temp to its final name, checking every result: Hadoop
     * reports a failed rename by returning `false`, not by throwing. A
@@ -100,43 +114,58 @@ object ParquetFiles {
       require(fs.rename(temp, dest), s"publish: rename $temp -> $dest failed")
     }
 
-  /** Publish one file `dir/name` that `write` writes to the hidden temp
-    * it is given; a failed write leaves no temp behind.
-    */
-  private def writeOne(spark: SparkSession, dir: String, name: String)(
-      write: Path => Unit): Unit = {
-    val dest = new Path(dir, name)
-    val temp = tempOf(dest)
-    val fs = fsOf(spark, dir)
-    try write(temp) catch { case e: Throwable => fs.delete(temp, false); throw e }
-    publish(fs, Seq(temp -> dest))
-  }
-
   /** Write `rows` as one file `dir/name` on the calling thread, with no
     * Spark job: the rows are written to the hidden temp in `dir`, which is
-    * then renamed to `name`. Nothing is created outside `dir`.
+    * then renamed to `name`. Nothing is created outside `dir`; a failed
+    * write leaves no temp behind.
     */
   def stageRows(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
       dir: String, name: String): Unit = {
     val w = writer(spark, schema)
-    writeOne(spark, dir, name)(w.writeFile(rows, _, w.context(0, 0)))
+    val dest = new Path(dir, name)
+    val temp = tempOf(dest)
+    val fs = fsOf(spark, dir)
+    try w.writeFile(rows, temp, w.context(0, 0))
+    catch { case e: Throwable => fs.delete(temp, false); throw e }
+    publish(fs, Seq(temp -> dest))
   }
 
-  /** [[stageRows]] for a frame: one task writes all of `df` to the hidden
-    * temp in `dir` (one Spark job), and the driver renames it to `name`.
+  /** [[stageRows]] for a frame: the one-slice [[stage]]. */
+  def stage(df: DataFrame, dir: String, name: String): Unit =
+    stage(Seq(df), dir, Seq(name))
+
+  /** Write each of `slices` as one file `dir/names(i)`, in ONE Spark job
+    * with one task per slice, and publish each by rename once all are
+    * written. The job runs over the slices' `coalesce(1)` RDDs joined by
+    * a `UnionRDD`, whose partitions are its inputs' partitions in order
+    * (a Dataset `union` may merge single-partition children), so task `t`
+    * writes the `t`-th non-empty slice. A slice planned as no partition
+    * is written by the driver as an empty file that still carries its
+    * schema. A failed write leaves no temp behind.
     */
-  def stage(df: DataFrame, dir: String, name: String): Unit = {
-    val one = df.coalesce(1)
-    val w = writer(df.sparkSession, one.schema)
-    writeOne(df.sparkSession, dir, name) { temp =>
-      onRows(one) { rdd =>
-        if (rdd.getNumPartitions == 0) w.writeFile(Iterator.empty, temp, w.context(0, 0))
-        else rdd.foreachPartition { rows =>
+  def stage(slices: Seq[DataFrame], dir: String, names: Seq[String]): Unit = {
+    require(slices.nonEmpty && slices.size == names.size,
+      s"stage: ${slices.size} slices for ${names.size} names")
+    val spark = slices.head.sparkSession
+    val ones = slices.map(_.coalesce(1))
+    val writerOf = ones.map(_.schema).distinct.map(s => s -> writer(spark, s)).toMap
+    val writers = ones.map(s => writerOf(s.schema))
+    val dests = names.map(new Path(dir, _))
+    val temps = dests.map(tempOf)
+    val fs = fsOf(spark, dir)
+    try onRows(ones) { rdds =>
+      val (empty, full) = rdds.indices.partition(rdds(_).getNumPartitions == 0)
+      empty.foreach(i => writers(i).writeFile(Iterator.empty, temps(i), writers(i).context(0, 0)))
+      if (full.nonEmpty) {
+        val tasks = full.map(i => (writers(i), temps(i).toString))
+        new UnionRDD(spark.sparkContext, full.map(rdds)).foreachPartition { rows =>
           val tc = TaskContext.get()
-          w.writeFile(rows, temp, w.context(tc.partitionId(), tc.attemptNumber()))
+          val (w, temp) = tasks(tc.partitionId())
+          w.writeFile(rows, new Path(temp), w.context(tc.partitionId(), tc.attemptNumber()))
         }
       }
-    }
+    } catch { case e: Throwable => temps.foreach(fs.delete(_, false)); throw e }
+    publish(fs, temps.zip(dests))
   }
 
   /** Append `rows` under `path`, in `partitionCols` directories named the
@@ -164,7 +193,7 @@ object ParquetFiles {
     val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
     val uuid = UUID.randomUUID().toString
     def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
-    val temps = onRows(rows)(_.mapPartitionsWithIndex { (task, it) =>
+    val temps = onRows(Seq(rows))(_.head.mapPartitionsWithIndex { (task, it) =>
       val ctx = w.context(task, TaskContext.get().attemptNumber())
       val ext = w.extension(ctx)
       val data = UnsafeProjection.create(dataIdx.map(ref))

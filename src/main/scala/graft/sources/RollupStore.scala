@@ -3,7 +3,7 @@ package graft.sources
 import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.functions._
 
@@ -99,6 +99,15 @@ object RollupStore {
   private[graft] def appendClustered(rows: DataFrame, path: String,
       partitionCols: Seq[String], maxRowsPerFile: Long): Unit = {
     recoverIfNeeded(rows.sparkSession, path, partitionCols.size)
+    writeClustered(rows, path, partitionCols, maxRowsPerFile)
+  }
+
+  /** [[ParquetFiles.append]] of `rows` clustered onto `partitionCols`
+    * (the write of [[appendClustered]], with no recovery: maintenance
+    * stages its fold output this way, under its own lease).
+    */
+  private def writeClustered(rows: DataFrame, path: String,
+      partitionCols: Seq[String], maxRowsPerFile: Long): Unit = {
     val keys = partitionCols.map(col)
     val inPlace = rows.sortWithinPartitions(keys: _*)
     ParquetFiles.append(
@@ -117,14 +126,6 @@ object RollupStore {
     */
   private def singlePartition(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.outputPartitioning == SinglePartition
-
-  /** One file per partition directory (split past `maxRowsPerFile`). */
-  private def clustered(rows: DataFrame, partitionCols: Seq[String],
-      maxRowsPerFile: Long): DataFrameWriter[Row] =
-    rows.repartition(partitionCols.map(col): _*)
-      .write
-      .option("maxRecordsPerFile", maxRowsPerFile)
-      .partitionBy(partitionCols: _*)
 
   /** Merge-on-read over an append-only state store: collapse all flush
     * cycles' slices and finalize to (tbl, path, stat_time, stat) — by the
@@ -355,7 +356,9 @@ object RollupStore {
     *     double count. One listing, one truth;
     *  6. the output is staged under `_compact`, one file per directory (a
     *     write READING the directories it replaces would race its own
-    *     listing); a pass that only drops stages an empty committed
+    *     listing), by the same rename-published write as an append
+    *     ([[writeClustered]]), and committed by creating `_compact/_SUCCESS`
+    *     after its last file; a pass that only drops commits an empty
     *     `_compact`;
     *  7. [[swapInAdditive]] deletes only the manifest's files (tidying
     *     directories they emptied) and renames the staged ones in, so
@@ -389,15 +392,13 @@ object RollupStore {
       val (dropped, folded) = (filesOf(drop), filesOf(folds))
       if (dropped.nonEmpty || folded.nonEmpty) {
         writeManifest(fs, root, dropped ++ folded)
+        require(fs.mkdirs(staged), s"maintenance: cannot create $staged")
         if (folded.nonEmpty) {
           val sources = spark.read.option("basePath", path)
             .parquet(folded.map(f => new Path(root, f).toString): _*)
-          clustered(fold(sources), partitionCols, DefaultMaxRowsPerFile)
-            .mode("overwrite").parquet(staged.toString)
-        } else {
-          require(fs.mkdirs(staged), s"maintenance: cannot create $staged")
-          fs.create(new Path(staged, "_SUCCESS"), true).close()
+          writeClustered(fold(sources), staged.toString, partitionCols, DefaultMaxRowsPerFile)
         }
+        fs.create(new Path(staged, "_SUCCESS"), true).close()
         swapInAdditive(fs, root, staged, depth)
       }
     } finally {

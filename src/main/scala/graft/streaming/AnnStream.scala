@@ -91,10 +91,10 @@ object AnnStream {
     * (selective compaction behind the ingest frontier) and the readoff
     * is the partition-pruned routed probe — `ann_ivf_stored`'s serve
     * path over a streamed-in index. The corpus replays as three
-    * vec_id-tertile mtime-ordered files = three flush cycles; slices
-    * are row-disjoint and the probe algebra is append-order-immune, so
-    * the converged index equals the batch build bit-for-bit and the
-    * oracle is `ann_ivf_trained`'s SQL verbatim.
+    * `vec_id mod 3` slices ([[CarbonStream.replaySlices]]) = three flush
+    * cycles; slices are row-disjoint and the probe algebra is
+    * append-order-immune, so the converged index equals the batch build
+    * bit-for-bit and the oracle is `ann_ivf_trained`'s SQL verbatim.
     */
   def annStoredQuery(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -106,16 +106,8 @@ object AnnStream {
     fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(fsRoot, true) // fresh lifecycle per run
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
-    val src = java.nio.file.Files.createTempDirectory("stream_ann_stored_src").toString
-    DedupStream.writeFiles((0 until 3).map { i =>
-      (raw.filter(pmod(col("vec_id"), lit(3)) === i),
-        s"$src/slice$i.parquet", (3 - i) * 60000L)
-    }: _*)
-    try {
-      val stream = spark.readStream
-        .schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    CarbonStream.replaySlices(
+        (0 until 3).map(i => raw.filter(pmod(col("vec_id"), lit(3)) === i))) { stream =>
       CarbonStream.runToEnd(spark) {
         Similarity.fixedVecsFrom(stream)
           .writeStream
@@ -127,16 +119,14 @@ object AnnStream {
           .outputMode("append")
           .start()
       }
-      VecIndexStore.compact(spark, idx)
-      val probeLists = Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)
-      val routed = probeLists.select("c_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-      val lists = VecIndexStore.read(spark, idx)
-        .filter(col("c_id").isin(routed: _*))
-      Similarity.topKFromCands(Similarity.ivfCandsFromAssigned(lists, probeLists))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
     }
+    VecIndexStore.compact(spark, idx)
+    val probeLists = Similarity.ivfProbeLists(batchVecs, cents, Similarity.NProbe)
+    val routed = probeLists.select("c_id").distinct()
+      .collect().map(_.getLong(0)).sorted
+    val lists = VecIndexStore.read(spark, idx)
+      .filter(col("c_id").isin(routed: _*))
+    Similarity.topKFromCands(Similarity.ivfCandsFromAssigned(lists, probeLists))
   }
 
   def ops: Seq[Op] = Seq(

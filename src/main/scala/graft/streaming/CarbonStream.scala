@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -109,6 +109,46 @@ object CarbonStream {
       df.writeStream.format("memory").queryName(sink).outputMode(mode).start()
     }
     drainMemorySink(spark, sink)
+  }
+
+  /** Replay `slices` as a finite stream of one micro-batch per slice, in
+    * slice order, so state crosses batch boundaries: the slices are staged
+    * as one file each in a fresh temp dir ([[graft.sources.ParquetFiles.stage]],
+    * one Spark job), given ascending mtimes in slice order (the file
+    * source reads the oldest unread file first), and `run` gets the file
+    * stream over them, one file per trigger, in the first slice's schema.
+    * `run` drains it ([[replay]] or [[runToEnd]]); the dir is deleted
+    * when `run` returns. The dir holds a replay fixture for one process,
+    * not operator state (state that must outlive it goes through
+    * [[graft.model.Spill]]).
+    */
+  def replaySlices[A](slices: Seq[DataFrame])(run: DataFrame => A): A = {
+    val src = java.nio.file.Files.createTempDirectory("graft_replay")
+    try {
+      val names = slices.indices.map(i => f"slice$i%03d.parquet")
+      graft.sources.ParquetFiles.stage(slices, src.toString, names)
+      val t0 = System.currentTimeMillis() - 1000L * slices.size
+      names.zipWithIndex.foreach { case (n, i) =>
+        java.nio.file.Files.setLastModifiedTime(src.resolve(n),
+          java.nio.file.attribute.FileTime.fromMillis(t0 + 1000L * i))
+      }
+      run(slices.head.sparkSession.readStream.schema(slices.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(src.toString))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(src.toFile)
+  }
+
+  /** `df` cut on `key` at ascending `cuts`: `key <= cuts(0)`, then
+    * `cuts(i-1) < key <= cuts(i)`, then `key > cuts.last`.
+    */
+  private[streaming] def cutAt(df: DataFrame, key: Column, cuts: Seq[Long]): Seq[DataFrame] =
+    (Long.MinValue +: cuts :+ Long.MaxValue).sliding(2).toSeq
+      .map { case Seq(a, b) => df.filter(key > a && key <= b) }
+
+  /** `df` cut into thirds of `key`'s `[min, max]` range ([[cutAt]]). */
+  private[streaming] def thirds(df: DataFrame, key: Column): Seq[DataFrame] = {
+    val r = df.agg(min(key), max(key)).head()
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    cutAt(df, key, Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3))
   }
 
   /** The canonical events schema with `ts` ALREADY in the epoch-nanos

@@ -78,60 +78,15 @@ object DedupStream {
                       // leaves every keep/drop inequality invariant, so the
                       // oracle needs no ts at all.
 
-  /** Write `df` as ONE parquet file at `target`, with a controlled
-    * modification time so the file stream source replays files in a fixed
-    * order (it lists unread files oldest-mtime-first).
-    */
-  private[streaming] def writeOneFile(df: DataFrame, target: String, ageMs: Long): Unit = {
-    // Harness-local BY DESIGN (here and in dedupWatermarkQuery below):
-    // these temp dirs stage the deterministic micro-batch replay fixture
-    // for a single-process verification run — they are test plumbing, not
-    // operator state. A real deployment's
-    // source/sink/checkpoint all live on shared storage; operator state
-    // that must survive distribution goes through graft.model.Spill.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_onefile")
-    df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/out")
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/out"))
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get()
-    val dst = java.nio.file.Paths.get(target)
-    java.nio.file.Files.move(part, dst)
-    java.nio.file.Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-  }
-
-  /** A replay fixture's files written CONCURRENTLY from a small pool —
-    * each [[writeOneFile]] is one tiny coalesce(1) job whose task tail
-    * leaves the other cores idle, and every replay stages 3-7 of them
-    * back to back (the §2.6 driver-thread overlap pattern, same as
-    * curate's gate construction). Order cannot matter by construction:
-    * targets are distinct paths and the replay ORDER rides the explicit
-    * `ageMs` mtimes, not write completion order; slices come off frames
-    * whose blocks the caller already materialized (min/max collects), so
-    * concurrent jobs read cached blocks.
-    */
-  private[streaming] def writeFiles(files: (DataFrame, String, Long)*): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(files.size)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      val fs = files.map { case (df, target, age) =>
-        Future(writeOneFile(df, target, age))
-      }
-      fs.foreach(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
-  }
-
   /** The STATE-BOUNDED form — the only dedup that can run FOREVER:
     * `dropDuplicatesWithinWatermark` keeps a key only until the watermark
     * passes its expiry (event time + horizon), so state is ingest-rate x
     * horizon, independent of total stream length; the complete-mode
     * aggregation above grows with the distinct-document count instead.
     *
-    * A three-micro-batch replay makes every keep/drop decision a pure
-    * function of the data (the stream_rollup_append determinism trick):
+    * A three-micro-batch replay ([[CarbonStream.replaySlices]]) makes
+    * every keep/drop decision a pure function of the data (the
+    * stream_rollup_append determinism trick):
     * batch 1 is the dup-free base corpus at event time ts = doc_id +
     * [[TsOffset]]; batch 2
     * is a single sentinel (a re-send of doc mx at ts = mx — always an
@@ -166,45 +121,35 @@ object DedupStream {
     // whose keys are unique per batch — so pre-collapsing the base loses
     // nothing and makes the emitted rows a pure function of the data.
     // persist: the md5-over-full-text aggregation is the expensive part of
-    // this operator, and the fixture build otherwise recomputes it four
-    // times (base file, replay file, sentinel file, max collect); freed
-    // (blocking) before the stream runs, so the op returns leak-free.
+    // this operator, and staging otherwise recomputes it four times (base,
+    // sentinel and replay slices, max collect); freed (blocking) once the
+    // stream has run, so the op returns leak-free.
     val deduped = graft.model.Tables.documents(spark, dir)
       .groupBy(md5Hex(col("text")).as("text_hash"))
       .agg(min("doc_id").as("doc_id"))
       .persist()
-    val base = deduped.select(col("doc_id"), col("text_hash"),
-      (col("doc_id") + TsOffset).as("ts"))
-    val replay = deduped.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text_hash"),
-        (col("doc_id") + TsOffset + ReplayGap).as("ts"))
-    val mx = deduped.agg(max("doc_id")).head().getLong(0)
-    val sentinel = deduped.filter(col("doc_id") === mx)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        col("text_hash"), (col("doc_id") + TsOffset).as("ts"))
-    val src = java.nio.file.Files.createTempDirectory("stream_dedup_wm_src").toString
-    writeFiles(
-      (base, s"$src/batch0.parquet", 120000L),
-      (sentinel, s"$src/batch1.parquet", 90000L),
-      (replay, s"$src/batch2.parquet", 60000L))
-    deduped.unpersist(blocking = true)
-
-    val streamSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text_hash", StringType),
-      StructField("ts", LongType)))
-    // Memory sink, like every other streaming entry: the semantics under
-    // test are the watermark/state-eviction rules, and a file sink adds a
-    // per-micro-batch parquet commit (8 files + _spark_metadata per batch
-    // at the bound partition count) that only measures sink IO.
-    CarbonStream.replay(spark.readStream
-      .schema(streamSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("tts", timestamp_seconds(col("ts")))
-      .withWatermark("tts", s"$Horizon seconds")
-      .dropDuplicatesWithinWatermark("text_hash")
-      .select("doc_id", "text_hash"), "append")
+    try {
+      val base = deduped.select(col("doc_id"), col("text_hash"),
+        (col("doc_id") + TsOffset).as("ts"))
+      val replay = deduped.filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text_hash"),
+          (col("doc_id") + TsOffset + ReplayGap).as("ts"))
+      val mx = deduped.agg(max("doc_id")).head().getLong(0)
+      val sentinel = deduped.filter(col("doc_id") === mx)
+        .select((col("doc_id") + 2000000L).as("doc_id"),
+          col("text_hash"), (col("doc_id") + TsOffset).as("ts"))
+      // Memory sink, like every other streaming entry: the semantics under
+      // test are the watermark/state-eviction rules, and a file sink adds a
+      // per-micro-batch parquet commit (8 files + _spark_metadata per batch
+      // at the bound partition count) that only measures sink IO.
+      CarbonStream.replaySlices(Seq(base, sentinel, replay)) { docs =>
+        CarbonStream.replay(docs
+          .withColumn("tts", timestamp_seconds(col("ts")))
+          .withWatermark("tts", s"$Horizon seconds")
+          .dropDuplicatesWithinWatermark("text_hash")
+          .select("doc_id", "text_hash"), "append")
+      }
+    } finally deduped.unpersist(blocking = true)
   }
 
   private val dedupWatermarkSql: String =
@@ -430,9 +375,10 @@ object DedupStream {
   /** The LIVE form of `pack_sequences` — the pre-training batch packer
     * running on the ingest path: a trainer's data loader consumes bins as
     * documents arrive instead of re-packing the corpus nightly. The
-    * document fixture replays as three doc_id-tertile mtime-ordered files
-    * so a shard's running fill genuinely carries across micro-batch
-    * boundaries (a 128-doc shard straddles a tertile cut at every SF).
+    * document fixture replays as three doc_id-tertile slices
+    * ([[CarbonStream.replaySlices]]) so a shard's running fill genuinely
+    * carries across micro-batch boundaries (a 128-doc shard straddles a
+    * tertile cut at every SF).
     * Under in-order ingest the emitted assignments equal the batch
     * cumsum's row-for-row; oracle = `pack_sequences`' SQL verbatim.
     */
@@ -444,36 +390,10 @@ object DedupStream {
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
         expr(s"doc_id div $PackShardSize").as("shard"))
-      .as[PackDoc].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_pack_src").toString
-    try {
-      val (lo, hi) = {
-        val r = docs.agg(min("doc_id"), max("doc_id")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      writeFiles(
-        (docs.filter(col("doc_id") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (docs.filter(col("doc_id") > c1 && col("doc_id") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (docs.filter(col("doc_id") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
+      .persist()
+    try CarbonStream.replaySlices(CarbonStream.thirds(docs, col("doc_id"))) { s =>
+      CarbonStream.replay(packMachine(s.as[PackDoc]).toDF(), "append")
     } finally docs.unpersist(blocking = true)
-
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_tok", LongType),
-      StructField("shard", LongType)))
-    try {
-      CarbonStream.replay(packMachine(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src).as[PackDoc]).toDF(), "append")
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
   }
 
   // ------------------------------------------------------------ stream_phash
@@ -520,7 +440,8 @@ object DedupStream {
     * counts are APPENDED to shared storage (foreachBatch, the
     * `stream_ann_stored` zero-state pattern: the tokenized corpus lives
     * on disk, streaming state is ZERO). A document is whole within its
-    * micro-batch (file replay = 3 doc_id-tertile files), so per-batch
+    * micro-batch (3 doc_id-tertile slices, [[CarbonStream.replaySlices]]),
+    * so per-batch
     * per-doc aggregation is exact; batches are doc-disjoint, so the
     * accumulated store equals the batch encode row-for-row and the
     * oracle is `bpe_encode`'s SQL verbatim.
@@ -533,26 +454,9 @@ object DedupStream {
     outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(outRoot, true) // fresh run
     val docs = graft.model.Tables.documents(spark, dir).persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_bpe_src").toString
-    try {
-      val (lo, hi) = {
-        val r = docs.agg(min("doc_id"), max("doc_id")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      writeFiles(
-        (docs.filter(col("doc_id") <= c1), s"$src/batch0.parquet", 120000L),
-        (docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-          s"$src/batch1.parquet", 90000L),
-        (docs.filter(col("doc_id") > c2), s"$src/batch2.parquet", 60000L))
-    } finally docs.unpersist(blocking = true)
-    try {
+    try CarbonStream.replaySlices(CarbonStream.thirds(docs, col("doc_id"))) { s =>
       CarbonStream.runToEnd(spark) {
-        spark.readStream
-          .schema(documentsSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src)
-          .writeStream
+        s.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val words = batch.select(col("doc_id"), explode(
               expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
@@ -569,10 +473,8 @@ object DedupStream {
           .outputMode("append")
           .start()
       }
-      spark.read.parquet(out)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+    } finally docs.unpersist(blocking = true)
+    spark.read.parquet(out)
   }
 
   def ops: Seq[Op] = Seq(

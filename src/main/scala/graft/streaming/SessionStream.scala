@@ -210,10 +210,11 @@ object SessionStream {
     * the stream: each event completes one transition as it arrives, the
     * pair stream accumulates in append mode, and the matrix/probability
     * readoff is the SAME [[graft.operators.Analytics.transitionProbFrom]]
-    * the batch op runs. Events replay as three time-tertile mtime-ordered
-    * files so transitions genuinely cross micro-batch boundaries; under
-    * in-order ingest the emitted pairs equal the batch lag-window's
-    * row-for-row. Oracle = `event_transitions`' SQL verbatim.
+    * the batch op runs. Events replay as three time-tertile slices
+    * ([[CarbonStream.replaySlices]]) so transitions genuinely cross
+    * micro-batch boundaries; under in-order ingest the emitted pairs
+    * equal the batch lag-window's row-for-row. Oracle =
+    * `event_transitions`' SQL verbatim.
     */
   def transitionsQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val te = Encoders.product[TransEvent]
@@ -221,40 +222,11 @@ object SessionStream {
     val ev = graft.model.Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-      .as[TransEvent].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_trans_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min("k"), max("k")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      DedupStream.writeFiles(
-        (ev.filter(col("k") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (ev.filter(col("k") > c1 && col("k") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (ev.filter(col("k") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
-    } finally ev.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType)))
-    try {
+      .persist()
+    try CarbonStream.replaySlices(CarbonStream.thirds(ev, col("k"))) { s =>
       graft.operators.Analytics.transitionProbFrom(CarbonStream.replay(
-        transitionsMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[TransEvent]).toDF(), "append"))
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+        transitionsMachine(s.as[TransEvent]).toDF(), "append"))
+    } finally ev.unpersist(blocking = true)
   }
 
   // ---------------------------------------------- stream_transitions_buffered
@@ -311,6 +283,43 @@ object SessionStream {
         })
   }
 
+  /** Replay the deliberately-DISORDERED stream both buffered live twins
+    * ingest ([[CarbonStream.replaySlices]]): six time slices pairwise
+    * swapped (s2 s1 s4 s3 s6 s5) — every other micro-batch delivers
+    * events BELOW the previous batch's high-water mark — plus a
+    * far-future sentinel row (reserved user -1, a type no analysis
+    * matches) that advances the closing watermark past every real event
+    * so all buffers flush. `run` gets the stream already watermarked on
+    * `et` with a delay of 2 slice spans, which covers the constructed
+    * disorder.
+    */
+  private def replaySwapped[A](spark: SparkSession, dir: String)(
+      run: DataFrame => A): A = {
+    val shift = graft.model.RollupConfig.LastKeyShift
+    val ev = graft.model.Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"),
+        expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
+      .withColumn("et", expr(s"timestamp_seconds(k DIV $shift)"))
+      .persist()
+    try {
+      val r = ev.agg(min("k"), max("k")).head()
+      val (lo, hi) = (r.getLong(0), r.getLong(1))
+      val slices = CarbonStream.cutAt(ev, col("k"), (1 to 5).map(i => lo + (hi - lo) * i / 6))
+      val spanSec = ((hi / shift) - (lo / shift)) / 6 + 1
+      // sentinel: one far-future row for a reserved user advances the
+      // closing watermark past every real event, flushing all buffers
+      val sentinelSec = hi / shift + 10 * spanSec
+      val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
+        lit("sentinel").as("event_type"),
+        lit(sentinelSec * shift).as("k"),
+        expr(s"timestamp_seconds($sentinelSec)").as("et"))
+      // pairwise-swapped ingest order: s2 s1 s4 s3 s6 s5
+      CarbonStream.replaySlices(Seq(1, 0, 3, 2, 5, 4).map(slices) :+ sentinel) { s =>
+        run(s.withWatermark("et", s"${2 * spanSec + 1} seconds"))
+      }
+    } finally ev.unpersist(blocking = true)
+  }
+
   /** The LIVE out-of-order form of `event_transitions`: the SAME matrix
     * readoff, but the replay is deliberately DISORDERED — six time-slice
     * files ingested pairwise swapped (s2 s1 s4 s3 s6 s5), so every other
@@ -322,72 +331,11 @@ object SessionStream {
     * stream equals the batch lag-window's row-for-row. Oracle =
     * `event_transitions`' SQL verbatim.
     */
-  /** Writes the deliberately-DISORDERED replay both buffered live twins
-    * ingest: six time-slice files pairwise swapped (s2 s1 s4 s3 s6 s5) —
-    * every other micro-batch delivers events BELOW the previous batch's
-    * high-water mark — plus a far-future sentinel row (reserved user -1,
-    * a type no analysis matches) that advances the closing watermark past
-    * every real event so all buffers flush. Returns the watermark delay
-    * (2 slice spans) that covers the constructed disorder.
-    */
-  private def writeSwappedReplay(spark: SparkSession, dir: String,
-      src: String): Long = {
-    val shift = graft.model.RollupConfig.LastKeyShift
-    val ev = graft.model.Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"),
-        expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-      .withColumn("et", expr(s"timestamp_seconds(k DIV $shift)"))
-      .persist()
-    try {
-      val r = ev.agg(min("k"), max("k")).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val cuts = (1 to 5).map(i => lo + (hi - lo) * i / 6)
-      val slices = (Long.MinValue +: cuts :+ Long.MaxValue).sliding(2).toSeq
-        .map { case Seq(a, b) => ev.filter(col("k") > a && col("k") <= b) }
-      // pairwise-swapped ingest order: s2 s1 s4 s3 s6 s5
-      val order = Seq(1, 0, 3, 2, 5, 4)
-      val spanSec = ((hi / shift) - (lo / shift)) / 6 + 1
-      // sentinel: one far-future row for a reserved user advances the
-      // closing watermark past every real event, flushing all buffers
-      val sentinelSec = hi / shift + 10 * spanSec
-      DedupStream.writeFiles(
-        order.zipWithIndex.map { case (sliceIdx, fileIdx) =>
-          (slices(sliceIdx).toDF(),
-            f"$src/batch$fileIdx%02d.parquet", 130000L - fileIdx * 10000L)
-        } :+ ((
-          spark.range(1).select(lit(-1L).as("user_id"),
-            lit("sentinel").as("event_type"),
-            lit(sentinelSec * shift).as("k"),
-            expr(s"timestamp_seconds($sentinelSec)").as("et")),
-          s"$src/batch99.parquet", 50000L)): _*)
-      2 * spanSec + 1
-    } finally ev.unpersist(blocking = true)
-  }
-
-  private val bufEventSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("user_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("event_type",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("k",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("et",
-      org.apache.spark.sql.types.TimestampType)))
-
   def transitionsBufferedQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val be = Encoders.product[BufEvent]
-    val src = java.nio.file.Files.createTempDirectory("stream_btrans_src").toString
-    val delaySec = writeSwappedReplay(spark, dir, src)
-    try {
+    replaySwapped(spark, dir) { s =>
       graft.operators.Analytics.transitionProbFrom(CarbonStream.replay(
-        transitionsBufferedMachine(
-          spark.readStream.schema(bufEventSchema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent]).toDF(), "append"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+        transitionsBufferedMachine(s.as[BufEvent]).toDF(), "append"))
     }
   }
 
@@ -452,10 +400,10 @@ object SessionStream {
     * shape (the reference never sees "all events at once"): state = ONE
     * write-once key triple per user, independent of stream length (the
     * `stream_sessionize` contract). The events fixture is replayed as
-    * three time-tertile mtime-ordered files so stage transitions genuinely
-    * cross micro-batch boundaries (a user's view can land in batch 0 and
-    * the click that converts them in batch 2). Readoff = per-user max of
-    * the write-once columns, then the SAME
+    * three time-tertile slices ([[CarbonStream.replaySlices]]) so stage
+    * transitions genuinely cross micro-batch boundaries (a user's view
+    * can land in batch 0 and the click that converts them in batch 2).
+    * Readoff = per-user max of the write-once columns, then the SAME
     * [[graft.operators.Analytics.funnelAggFrom]] closing aggregate the
     * batch op runs; oracle = `funnel_steps`' SQL verbatim (in-order
     * ingest == the batch min-based definition).
@@ -466,45 +414,22 @@ object SessionStream {
     val ev = graft.model.Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         expr(s"(ts DIV 1000000000) * $shift + event_id").as("k"))
-      .as[FunnelEvent].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_funnel_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min("k"), max("k")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      DedupStream.writeFiles(
-        (ev.filter(col("k") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (ev.filter(col("k") > c1 && col("k") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (ev.filter(col("k") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
+      .persist()
+    try CarbonStream.replaySlices(CarbonStream.thirds(ev, col("k"))) { s =>
+      funnelReadoff(CarbonStream.replay(funnelMachine(s.as[FunnelEvent]), "append"))
     } finally ev.unpersist(blocking = true)
+  }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType)))
-    try {
-      val fin = CarbonStream.replay(funnelMachine(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src).as[FunnelEvent]), "append")
-        .groupBy("user_id")
-        .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
-      graft.operators.Analytics.funnelAggFrom(
-        fin.filter(col("k1").isNotNull).select("user_id", "k1"),
-        fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
-        fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
+  /** A funnel machine's drained `(user_id, k1, k2, k3)` rows → the per-user
+    * max of each write-once column → the batch op's closing aggregate.
+    */
+  private def funnelReadoff(drained: DataFrame): DataFrame = {
+    val fin = drained.groupBy("user_id")
+      .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
+    graft.operators.Analytics.funnelAggFrom(
+      fin.filter(col("k1").isNotNull).select("user_id", "k1"),
+      fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
+      fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
   }
 
   // ---------------------------------------------- stream_funnel_buffered
@@ -581,23 +506,8 @@ object SessionStream {
     */
   def funnelBufferedQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val be = Encoders.product[BufEvent]
-    val src = java.nio.file.Files.createTempDirectory("stream_bfunnel_src").toString
-    val delaySec = writeSwappedReplay(spark, dir, src)
-    try {
-      val fin = CarbonStream.replay(funnelBufferedMachine(
-          spark.readStream.schema(bufEventSchema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("et", s"$delaySec seconds")
-            .as[BufEvent]), "append")
-        .groupBy("user_id")
-        .agg(max("k1").as("k1"), max("k2").as("k2"), max("k3").as("k3"))
-      graft.operators.Analytics.funnelAggFrom(
-        fin.filter(col("k1").isNotNull).select("user_id", "k1"),
-        fin.filter(col("k2").isNotNull).select("user_id", "k1", "k2"),
-        fin.filter(col("k3").isNotNull).select("user_id", "k2", "k3"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
+    replaySwapped(spark, dir) { s =>
+      funnelReadoff(CarbonStream.replay(funnelBufferedMachine(s.as[BufEvent]), "append"))
     }
   }
 
@@ -656,8 +566,9 @@ object SessionStream {
     * monitoring, the shape a carbon daemon's alerting actually runs
     * (every arriving point immediately yields its forecast; the deviation
     * test consumes the stream of (actual, forecast) pairs). The metric
-    * fixture replays as three time-tertile mtime-ordered files so the
-    * trailing window genuinely carries across micro-batch boundaries.
+    * fixture replays as three time-tertile slices
+    * ([[CarbonStream.replaySlices]]) so the trailing window genuinely
+    * carries across micro-batch boundaries.
     * Oracle = `series_holt_forecast`'s SQL verbatim: in-order ingest
     * emits the batch output row-for-row.
     */
@@ -668,40 +579,11 @@ object SessionStream {
         graft.model.Tables.events(spark, dir), keepId = true)
       .select(col("path"), col("ts"), col("event_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      .as[HoltEvt].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_holt_src").toString
-    try {
-      val (lo, hi) = {
-        val r = ev.agg(min(expr(s"ts * $shift + event_id")),
-          max(expr(s"ts * $shift + event_id"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      def k = expr(s"ts * $shift + event_id")
-      DedupStream.writeFiles(
-        (ev.filter(k <= c1).toDF(), s"$src/batch0.parquet", 120000L),
-        (ev.filter(k > c1 && k <= c2).toDF(), s"$src/batch1.parquet", 90000L),
-        (ev.filter(k > c2).toDF(), s"$src/batch2.parquet", 60000L))
+      .persist()
+    try CarbonStream.replaySlices(
+        CarbonStream.thirds(ev, expr(s"ts * $shift + event_id"))) { s =>
+      CarbonStream.replay(holtMachine(s.as[HoltEvt]).toDF(), "append")
     } finally ev.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cents",
-        org.apache.spark.sql.types.LongType)))
-    try {
-      CarbonStream.replay(holtMachine(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src).as[HoltEvt]).toDF(), "append")
-    } finally {
-      // the drained memory sink holds the rows; the replay files are done
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src))
-    }
   }
 
   // ------------------------------------------------------ stream_attribution

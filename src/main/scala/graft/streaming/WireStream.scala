@@ -57,10 +57,11 @@ object WireStream {
   }
 
   /** Driver-oracled replay: the SAME packet fixture the batch op builds,
-    * split into three mtime-ordered parquet files on packet-index
-    * tertiles and replayed one file per trigger — so the carried tail
-    * genuinely crosses micro-batch boundaries (packet cuts don't align
-    * to newlines, so most connections end a batch mid-line). The memory
+    * cut into three slices at `max(p) / 3` and `2 * max(p) / 3` and
+    * replayed one slice per trigger ([[CarbonStream.replaySlices]]) — so
+    * the carried tail genuinely crosses micro-batch boundaries (packet
+    * cuts don't align to newlines, so most connections end a batch
+    * mid-line). The memory
     * sink holds raw reassembled lines; the wire-format parse is applied
     * to the drained frame with the SAME shared [[Carbon.withParsedLine]]
     * the batch op uses. Oracle = `carbon_reassemble`'s SQL verbatim: a
@@ -69,31 +70,13 @@ object WireStream {
   def reassembleQuery(spark: SparkSession, dir: String): DataFrame = {
     implicit val pe = Encoders.product[Packet]
     val pkts = Wire.packets(spark, dir)
-      .select(col("conn"), col("p"), col("payload")).as[Packet].persist()
-    val src = java.nio.file.Files.createTempDirectory("stream_reassemble_src").toString
-    try {
+      .select(col("conn"), col("p"), col("payload")).persist()
+    val relines = try {
       val mx = pkts.agg(max("p")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      DedupStream.writeFiles(
-        (pkts.filter(col("p") <= c1).toDF(),
-          s"$src/batch0.parquet", 120000L),
-        (pkts.filter(col("p") > c1 && col("p") <= c2).toDF(),
-          s"$src/batch1.parquet", 90000L),
-        (pkts.filter(col("p") > c2).toDF(),
-          s"$src/batch2.parquet", 60000L))
+      CarbonStream.replaySlices(CarbonStream.cutAt(pkts, col("p"), Seq(mx / 3, 2 * mx / 3))) { s =>
+        CarbonStream.replay(reassemble(s.as[Packet]).toDF(), "append")
+      }
     } finally pkts.unpersist(blocking = true)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("conn",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("payload",
-        org.apache.spark.sql.types.StringType)))
-    val relines = CarbonStream.replay(reassemble(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src).as[Packet]).toDF(), "append")
     Carbon.withParsedLine(relines, "line")
       .select(
         col("conn"), col("line_no"), col("valid"), col("peer_cmd"),

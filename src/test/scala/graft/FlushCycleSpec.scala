@@ -40,20 +40,6 @@ class FlushCycleSpec extends AnyFunSuite with TestSpark {
     try s.iterator().asScala.map(_.getFileName.toString).toVector finally s.close()
   }
 
-  /** Names `body` created directly in `java.io.tmpdir`, even ones it
-    * deleted again before returning.
-    */
-  private def createdInTmpdir(body: => Unit): Seq[String] = {
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ws = dir.getFileSystem.newWatchService()
-    try {
-      dir.register(ws, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
-      body
-      Option(ws.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS)).toSeq
-        .flatMap(_.pollEvents().asScala.map(_.context().toString))
-    } finally ws.close()
-  }
-
   private def send(port: Int, lines: Seq[String]): Unit = {
     val sock = new java.net.Socket("127.0.0.1", port)
     try sock.getOutputStream.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))

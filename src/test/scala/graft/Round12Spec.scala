@@ -92,6 +92,24 @@ class Round12Spec extends AnyFunSuite with TestSpark {
 
   // ----------------------------------------------- replay lifecycle census
 
+  /** `(file, enclosing def, pattern)` for every code line of the
+    * streaming package that contains one of `patterns`, one per match.
+    */
+  private def streamingHits(patterns: Seq[String]): Seq[(String, String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val defName = """\bdef\s+(\w+)""".r
+    val root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    java.nio.file.Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        var enclosing = ""
+        codeLines(p).flatMap { l =>
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          patterns.filter(l.contains).map(pat => (p.getFileName.toString, enclosing, pat))
+        }
+      }
+  }
+
   /** The finite-replay lifecycle lives in ONE place: in the streaming
     * package (comment lines stripped), `processAllAvailable`, a memory
     * sink and a `withStreamPartitions(` call appear only inside the
@@ -100,20 +118,9 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     * block in any operator body fails here.
     */
   test("finite stream replays go through CarbonStream.runToEnd / replay") {
-    import scala.jdk.CollectionConverters._
     val patterns = Seq("processAllAvailable", ".format(\"memory\")",
       "withStreamPartitions(")
-    val defName = """\bdef\s+(\w+)""".r
-    val root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
-    val hits = java.nio.file.Files.list(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap { p =>
-        var enclosing = ""
-        codeLines(p).flatMap { l =>
-          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
-          patterns.filter(l.contains).map(pat => (p.getFileName.toString, enclosing, pat))
-        }
-      }.sorted
+    val hits = streamingHits(patterns).sorted
     val want = Seq(
       ("CarbonStream.scala", "replay", ".format(\"memory\")"),
       ("CarbonStream.scala", "runToEnd", "processAllAvailable"),
@@ -122,6 +129,30 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       s"replay lifecycle census drifted: got $hits, want $want — run a finite " +
         "stream through CarbonStream.replay (memory sink) or runToEnd (any " +
         "other sink) instead of hand-rolling start/processAllAvailable/stop")
+  }
+
+  /** Staged replays go through `CarbonStream.replaySlices`: in the
+    * streaming package (comment lines stripped) a `maxFilesPerTrigger`
+    * read, a `createTempDirectory(` and a `writeFiles(` appear only in
+    * the helper, the live flush queries' sources and
+    * `rollupAppendQuery`'s sink dir. Each hit is attributed to the
+    * nearest enclosing `def`, so an operator that stages and replays its
+    * own files fails here.
+    */
+  test("staged stream replays go through CarbonStream.replaySlices") {
+    val patterns = Seq("maxFilesPerTrigger", "createTempDirectory(", "writeFiles(")
+    val hits = streamingHits(patterns).distinct.sorted
+    val want = Seq(
+      ("CarbonStream.scala", "replaySlices", "maxFilesPerTrigger"),
+      ("CarbonStream.scala", "replaySlices", "createTempDirectory("),
+      ("CarbonStream.scala", "eventsStream", "maxFilesPerTrigger"),
+      ("CarbonStream.scala", "startRollupFlush", "maxFilesPerTrigger"),
+      ("CarbonStream.scala", "startMetricRollupFlush", "maxFilesPerTrigger"),
+      ("CarbonStream.scala", "rollupAppendQuery", "createTempDirectory(")).sorted
+    assert(hits == want,
+      s"replay staging census drifted: got $hits, want $want — stage a finite " +
+        "replay's slices with CarbonStream.replaySlices instead of writing and " +
+        "reading its files by hand")
   }
 
   // ------------------------------------------- session + tuning-main census

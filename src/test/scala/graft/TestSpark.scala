@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
@@ -11,6 +13,20 @@ trait TestSpark extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = TestSpark.session
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** Names `body` created directly in `java.io.tmpdir`, even ones it
+    * deleted again before returning.
+    */
+  def createdInTmpdir(body: => Unit): Seq[String] = {
+    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val ws = dir.getFileSystem.newWatchService()
+    try {
+      dir.register(ws, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+      body
+      Option(ws.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS)).toSeq
+        .flatMap(_.pollEvents().asScala.map(_.context().toString))
+    } finally ws.close()
+  }
 }
 
 object TestSpark {
