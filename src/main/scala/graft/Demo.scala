@@ -199,7 +199,8 @@ object Demo {
 
     // 8. continuous ingest twin: bounded-state streaming dedup (the
     //    RocksDB state store is one conf away for unbounded key spaces:
-    //    CarbonStream.RocksDbFlag)
+    //    Spark's spark.sql.streaming.stateStore.providerClass, set when
+    //    the session is built)
     val kept = DedupStream.dedupWatermarkQuery(spark, dir).count()
     println(s"[demo] stream_dedup_watermark: $kept docs admitted within the horizon")
 

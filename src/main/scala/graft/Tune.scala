@@ -43,7 +43,7 @@ object Tune {
     val spark = Harness.session(8, s"graft-$name-tune")
     // the sem truth calls vec_dot in its own SQL, before any operator
     // has registered the vector functions
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     body(spark, args.lift(1).getOrElse(defaultDir), args.drop(2).toSeq)
     spark.stop()
   }

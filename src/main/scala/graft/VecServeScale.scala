@@ -31,7 +31,7 @@ object VecServeScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Harness.session(8, "graft-vec-serve-scale")
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     import graft.operators.Similarity
     import graft.sources.VecIndexStore
 

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pearson hashing (Pearson, CACM 33(6), 1990) — cassabon routes each metric
@@ -91,16 +89,6 @@ object Pearson {
        |    - CAST(9223372036854775808 AS HUGEINT)
        |AS BIGINT) END""".stripMargin
   }
-
-  /** Register `pearson_hash8` / `pearson_hash64` as SQL functions on an
-    * existing session (the programmatic twin of [[GraftExtensions]]).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pearson_hash8", args => PearsonHash8(args.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pearson_hash64", args => PearsonHash64(args.head), "built-in")
-  }
 }
 
 /** Native Catalyst expression with codegen: stays inside whole-stage codegen
@@ -127,36 +115,4 @@ case class PearsonHash64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): PearsonHash64 =
     copy(child = newChild)
   override def prettyName: String = "pearson_hash64"
-}
-
-/** `SparkSessionExtensions` hook: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  * makes the functions available to pure-SQL users.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("pearson_hash8"),
-      new ExpressionInfo("graft.functions.PearsonHash8", "pearson_hash8"),
-      (args: Seq[Expression]) => PearsonHash8(args.head)))
-    e.injectFunction((
-      FunctionIdentifier("pearson_hash64"),
-      new ExpressionInfo("graft.functions.PearsonHash64", "pearson_hash64"),
-      (args: Seq[Expression]) => PearsonHash64(args.head)))
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo("graft.functions.VecDot", "vec_dot"),
-      (args: Seq[Expression]) => VecDot(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_signbits"),
-      new ExpressionInfo("graft.functions.VecSignBits", "vec_signbits"),
-      (args: Seq[Expression]) => VecSignBits.fromArgs(args)))
-    e.injectFunction((
-      FunctionIdentifier("vec_top_cells"),
-      new ExpressionInfo("graft.functions.VecTopCells", "vec_top_cells"),
-      (args: Seq[Expression]) => VecTopCells.fromArgs(args)))
-    e.injectFunction((
-      FunctionIdentifier("vec_best_code"),
-      new ExpressionInfo("graft.functions.VecBestCode", "vec_best_code"),
-      (args: Seq[Expression]) => VecBestCode.fromArgs(args)))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -182,25 +181,6 @@ object VecMath {
     }
     if (!has) null
     else org.apache.spark.sql.catalyst.InternalRow(bestCode, bestD2)
-  }
-
-  /** Register `vec_dot` / `vec_signbits` as SQL functions on an existing
-    * session (the programmatic twin of [[GraftExtensions]], same pattern
-    * as [[Pearson.register]]). `vec_signbits(v, array(m0, m1, ...))`
-    * requires a foldable mask array — it is evaluated once at plan-build
-    * time and baked into the expression as config, not a child.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", args => VecDot(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_signbits", args => VecSignBits.fromArgs(args), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_hashbin", args => VecHashBin.fromArgs(args), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_top_cells", args => VecTopCells.fromArgs(args), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_best_code", args => VecBestCode.fromArgs(args), "built-in")
   }
 }
 

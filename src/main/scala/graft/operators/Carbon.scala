@@ -195,7 +195,7 @@ object Carbon {
   val PeerCount = 5
 
   def peerRoute(spark: SparkSession, dir: String): DataFrame = {
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     Tables.metrics(spark, dir)
       .withColumn("peer", expr(s"pearson_hash8(path) % $PeerCount"))
       .groupBy("peer")
@@ -231,7 +231,7 @@ object Carbon {
   val ShardCount = 16
 
   def peerRoute64(spark: SparkSession, dir: String): DataFrame = {
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     Tables.metrics(spark, dir)
       .withColumn("shard", expr(s"pmod(pearson_hash64(path), $ShardCount)"))
       .groupBy("shard")
@@ -269,7 +269,7 @@ object Carbon {
   val NewPeerCount = 6
 
   def peerRebalance(spark: SparkSession, dir: String): DataFrame = {
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     Tables.metrics(spark, dir)
       .groupBy("path").agg(count(lit(1)).as("pts"))
       .withColumn("h", expr("pearson_hash8(path)"))
@@ -331,7 +331,7 @@ object Carbon {
   }
 
   def peerReload(spark: SparkSession, dir: String): DataFrame = {
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val cmd = withParsedLine(lines(spark, dir), "line")
       .filter(col("peer_cmd") === "peerlist")
       .select(regexp_extract(col("line"), "^<<peerlist=(.*)>>$", 1).as("payload"))

@@ -559,53 +559,54 @@ object Dedup {
       (r.getDecimal(0), r.getLong(1))
     }
     var (prevSum, nVerts) = labelStats(labels)
-    // The per-round frames are |V| rows of two longs, but every loop
-    // join/groupBy inherited the SESSION shuffle width (cores-derived —
-    // 32 buckets of a few KB each at bench scale; the r15 scaling block
-    // measured the loop FASTER on 8 cores than 32 for exactly this
-    // reason). Scale the loop's width to the label frame instead —
+    // The per-round frames are |V| rows of two longs, but the loop's
+    // label aggregation inherited the SESSION shuffle width
+    // (cores-derived — 32 buckets of a few KB each at bench scale; the
+    // r15 scaling block measured the loop FASTER on 8 cores than 32 for
+    // exactly this reason). Scale its width to the label frame instead —
     // ~100k rows per partition, capped at the session value so a
-    // 100 TB-scale vertex set keeps its full parallelism — and restore
-    // the session value whatever happens (guide §2: partitioning must be
-    // scale-adaptive, not host-tuned).
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(sessionParts.toLong,
-      nVerts / 100000L + 1L))
+    // 100 TB-scale vertex set keeps its full parallelism (guide §2:
+    // partitioning must be scale-adaptive, not host-tuned). The width is
+    // a property of the aggregation's input frame, not of the session,
+    // so a query planned concurrently on the same session keeps the
+    // session width. The joins stay Spark's to plan: AQE broadcasts the
+    // small side or coalesces the exchange, and a sort-merge join over two
+    // narrower repartitioned inputs is planned at the session width anyway.
+    val loopParts = math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toLong,
+      nVerts / 100000L + 1L)).toInt
     var converged = false
     var iter = 0
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      while (!converged && iter < 50) {
-        // min-label propagation: one hop along the edges per round …
-        val prop = edges.join(labels, edges("u") === labels("vid"))
-          .select(edges("v").as("vid"), labels("lbl"))
-        val hop = labels.select(col("vid"), col("lbl")).union(prop)
-          .groupBy("vid").agg(min("lbl").as("lbl")).localCheckpoint()
-        // … then POINTER DOUBLING: shortcut each vertex to its label's own
-        // label (l(v) := min(l(v), l(l(v))) — a self-join of the label table,
-        // sound because l(v) is always a vertex of v's component). Hop alone
-        // needs O(diameter) rounds — a chain-shaped component at 100× scale
-        // means hundreds of fixed-cost rounds; with the shortcut the covered
-        // distance better-than-doubles per round, so convergence is
-        // O(log diameter) (Round12Spec pins a 64-vertex path converging in
-        // ≤ 2·log₂ rounds). `hop` stays materialized: r16 measured the
-        // lazy form (ptr's self-join re-running the groupBy on both
-        // sides under AQE) ~1 s/key SLOWER than the extra checkpoint job
-        // — per-round AQE stage re-planning costs more than a tiny-frame
-        // materialization.
-        val ptr = hop.select(col("vid").as("pvid"), col("lbl").as("plbl"))
-        val next = hop.join(ptr, hop("lbl") === ptr("pvid"), "left")
-          .select(hop("vid"),
-            least(hop("lbl"), coalesce(col("plbl"), hop("lbl"))).as("lbl"))
-          .localCheckpoint()
-        val (nextSum, _) = labelStats(next)
-        labels = next
-        converged = (prevSum == null && nextSum == null) ||
-          (prevSum != null && nextSum != null && prevSum.compareTo(nextSum) == 0)
-        prevSum = nextSum
-        iter += 1
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
+    while (!converged && iter < 50) {
+      // min-label propagation: one hop along the edges per round …
+      val prop = edges.join(labels, col("u") === col("vid"))
+        .select(col("v").as("vid"), col("lbl"))
+      val hop = labels.select(col("vid"), col("lbl")).union(prop)
+        .repartition(loopParts, col("vid"))
+        .groupBy("vid").agg(min("lbl").as("lbl")).localCheckpoint()
+      // … then POINTER DOUBLING: shortcut each vertex to its label's own
+      // label (l(v) := min(l(v), l(l(v))) — a self-join of the label table,
+      // sound because l(v) is always a vertex of v's component). Hop alone
+      // needs O(diameter) rounds — a chain-shaped component at 100× scale
+      // means hundreds of fixed-cost rounds; with the shortcut the covered
+      // distance better-than-doubles per round, so convergence is
+      // O(log diameter) (Round12Spec pins a 64-vertex path converging in
+      // ≤ 2·log₂ rounds). `hop` stays materialized: r16 measured the
+      // lazy form (ptr's self-join re-running the groupBy on both
+      // sides under AQE) ~1 s/key SLOWER than the extra checkpoint job
+      // — per-round AQE stage re-planning costs more than a tiny-frame
+      // materialization.
+      val ptr = hop.select(col("vid").as("pvid"), col("lbl").as("plbl"))
+      val next = hop.join(ptr, col("lbl") === col("pvid"), "left")
+        .select(col("vid"), least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
+        .localCheckpoint()
+      val (nextSum, _) = labelStats(next)
+      labels = next
+      converged = (prevSum == null && nextSum == null) ||
+        (prevSum != null && nextSum != null && prevSum.compareTo(nextSum) == 0)
+      prevSum = nextSum
+      iter += 1
+    }
     lastIterations.set(iter)
     require(converged, s"$spillName: not converged after $iter iterations")
     val spill = graft.model.Spill.path(spark, spillName, dir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Pearson
+import graft.functions.GraftExtensions
 
 /** cassabon's peer placement contract as a Spark partitioning: the daemon
   * routes each path to peer `Hash8(path) % N` over the wire
@@ -16,11 +16,10 @@ import graft.functions.Pearson
 object Partitioning {
 
   /** Repartition a metric stream by Pearson peer ownership. Requires a
-    * `path` column; `spark` session functions must include pearson_hash8
-    * (call [[Pearson.register]] or install [[graft.functions.GraftExtensions]]).
+    * `path` column.
     */
   def byPeer(metrics: DataFrame, peers: Int): DataFrame = {
-    Pearson.register(metrics.sparkSession)
+    GraftExtensions.register(metrics.sparkSession)
     metrics.repartition(peers, expr(s"pearson_hash8(path) % $peers"))
   }
 

@@ -52,7 +52,7 @@ object Similarity {
     * vectors (`stream_ann`'s ingest path).
     */
   private[graft] def fixedVecsFrom(raw: DataFrame): DataFrame = {
-    graft.functions.VecMath.register(raw.sparkSession)
+    graft.functions.GraftExtensions.register(raw.sparkSession)
     raw.select(col("vec_id"), expr(toFixed).as("v"))
       .withColumn("nrm", expr(dotExpr("v", "v")))
   }
@@ -815,10 +815,13 @@ object Similarity {
     */
   private[graft] def withTopCells(df: DataFrame, cents: DataFrame,
       vCol: String, nCol: String, nprobe: Int): DataFrame = {
-    graft.functions.VecMath.register(df.sparkSession)
+    graft.functions.GraftExtensions.register(df.sparkSession)
     df.crossJoin(broadcast(cents.agg(
         sort_array(collect_list(struct(col("c_id"), col("cv"), col("cn"))))
           .as("_cents"))))
+      // an empty quantizer picks no cell: no rows, as in [[assignNearest]]
+      // (the filter lands on the one-row side, so the kernel runs once)
+      .filter(size(col("_cents")) > 0)
       .withColumn("_top", expr(s"vec_top_cells($vCol, $nCol, _cents, $nprobe)"))
       .drop("_cents")
   }
@@ -1690,7 +1693,7 @@ object Similarity {
 
   /** Driver-held centroids back to a `(c_id, cv, cn)` frame. */
   private[graft] def mkCentsDf(spark: SparkSession, cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     import spark.implicits._
     cents.toDF("c_id", "cv").withColumn("cn", expr("vec_dot(cv, cv)"))
   }
@@ -2087,7 +2090,7 @@ object Similarity {
     * exact integers, so codes/qerr are bit-equal (Round16Spec).
     */
   private def withBestCode(subVecs: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.VecMath.register(subVecs.sparkSession)
+    graft.functions.GraftExtensions.register(subVecs.sparkSession)
     subVecs.crossJoin(broadcast(cb
         .groupBy("sub")
         .agg(sort_array(collect_list(struct(col("code"), col("cv"), col("cn"))))

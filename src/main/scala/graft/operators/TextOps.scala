@@ -937,7 +937,7 @@ object TextOps {
     // embedHashing-composed reference. The sparse (doc_id, dim, val)
     // OPERATOR `embed_hashing` keeps the groupBy form (that row shape
     // is its contract and its oracle).
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     Tables.documents(spark, dir)
       // generator boundary (see chunkDenseRowLocal): keeps the hashing
       // chain out of the pushed `nrm > 0` filter — one pass per doc
@@ -1060,7 +1060,7 @@ object TextOps {
     * production path rides it since r16.
     */
   private[graft] def chunkDenseGroupBy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val stride = ChunkTokens - ChunkOverlap
     val toks = Tables.documents(spark, dir)
       .withColumn("t", split(lower(coalesce(col("text"), lit(""))), " "))
@@ -1096,7 +1096,7 @@ object TextOps {
     * Round14Spec pins the two frames identical.
     */
   private[graft] def chunkDenseRowLocal(docs: DataFrame): DataFrame = {
-    graft.functions.VecMath.register(docs.sparkSession)
+    graft.functions.GraftExtensions.register(docs.sparkSession)
     val stride = ChunkTokens - ChunkOverlap
     docs
       .withColumn("t", split(lower(coalesce(col("text"), lit(""))), " "))
@@ -1288,7 +1288,7 @@ object TextOps {
   /** Driver-held chunk centroids back to a `(c_id, cv, cn)` frame. */
   private[graft] def mkChunkCentsDf(spark: SparkSession,
       cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     import spark.implicits._
     cents.toDF("c_id", "cv").withColumn("cn", expr("vec_dot(cv, cv)"))
   }

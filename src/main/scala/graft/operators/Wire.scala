@@ -220,7 +220,7 @@ object Wire {
     * `valid`-guarded sum — one parse pass, nothing to push.
     */
   def peerForward(spark: SparkSession, dir: String): DataFrame = {
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val ok = col("valid")
     Carbon.parsedFull(spark, dir)
       .withColumn("owner", expr(s"pearson_hash8(path) % ${Carbon.PeerCount}"))

@@ -108,7 +108,7 @@ object AnnStream {
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
     CarbonStream.replaySlices(
         (0 until 3).map(i => raw.filter(pmod(col("vec_id"), lit(3)) === i))) { stream =>
-      CarbonStream.runToEnd(spark) {
+      CarbonStream.runToEnd {
         Similarity.fixedVecsFrom(stream)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -23,55 +23,6 @@ import graft.model.Tables
   */
 object CarbonStream {
 
-  /** Stateful streaming queries get one state-store instance PER shuffle
-    * partition, and every micro-batch commits a delta file per instance —
-    * so partition count is a per-commit IO cost, not just parallelism. The
-    * batch default (32, matched to local[32]) wastes 4x the checkpoint IO
-    * these key cardinalities (~10k) need; on a real cluster this knob is
-    * sized to executor count x a small factor, exactly as here.
-    */
-  val StreamShufflePartitions = 8
-
-  /** The default HDFS-backed state store keeps every state version ON-HEAP
-    * per executor — fine for the ~10k-key fixtures, but at a 100 TB
-    * ingest the keyed-state working set is what bounds how long a
-    * stateful query can run. RocksDB keeps state off-heap/on-disk with
-    * changelog checkpointing, so state size is bounded by executor DISK,
-    * not heap — the run-forever posture. Opt in per session with
-    * `spark.graft.stateStore.rocksdb=true` (or env
-    * `SPARK_GRAFT_ROCKSDB=1`); the flag is read at `start()` time by
-    * [[withStreamPartitions]], so batch plans and existing benchmarks are
-    * untouched.
-    */
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  val RocksDbFlag = "spark.graft.stateStore.rocksdb"
-  private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-
-  private def rocksDbEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(RocksDbFlag)
-      .orElse(sys.env.get("SPARK_GRAFT_ROCKSDB"))
-      .exists(v => v == "true" || v == "1")
-
-  /** Run `body` with the session's shuffle partitions temporarily lowered
-    * to [[StreamShufflePartitions]] and, when [[RocksDbFlag]] is set, the
-    * RocksDB state-store provider selected (streaming plans bind both
-    * values at `start()`), restoring the batch settings afterwards. Only
-    * EXPLICIT settings are saved (`getAll`; `getOption` would return the
-    * default and pin it), so a key unset before is unset again after.
-    */
-  def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
-    val partitionsConf = "spark.sql.shuffle.partitions"
-    val explicit = spark.conf.getAll
-    val saved = Seq(partitionsConf, ProviderConf).map(k => k -> explicit.get(k))
-    spark.conf.set(partitionsConf, StreamShufflePartitions.toString)
-    if (rocksDbEnabled(spark)) spark.conf.set(ProviderConf, RocksDbProvider)
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Resolve a drained memory-sink table and DROP its temp view: Dataset
     * analysis is eager, so the returned frame stays bound to the sink's
     * rows, while the catalog entry (and with it the only long-lived
@@ -86,17 +37,19 @@ object CarbonStream {
   }
 
   /** The one lifecycle of a FINITE replay: `start` builds and starts the
-    * query inside [[withStreamPartitions]] (streaming plans bind its confs
-    * at `start()`), the query runs to the end of the available input, and
-    * it stops whether or not that succeeded.
-    * The live daemon queries ([[startRollupFlush]]) own their lifetime
-    * instead.
+    * query, the query runs to the end of the available input, and it
+    * stops whether or not that succeeded. The query plans at the session's
+    * own width and state-store provider: a replay always starts from a
+    * fresh checkpoint, so the session's `spark.sql.shuffle.partitions` is
+    * its state-partition count, and RocksDB state is Spark's own
+    * `spark.sql.streaming.stateStore.providerClass`, set where the session
+    * is built. The live daemon queries ([[startRollupFlush]]) own their
+    * lifetime instead.
     */
-  def runToEnd(spark: SparkSession)(start: => StreamingQuery): Unit =
-    withStreamPartitions(spark) {
-      val q = start
-      try q.processAllAvailable() finally q.stop()
-    }
+  def runToEnd(start: => StreamingQuery): Unit = {
+    val q = start
+    try q.processAllAvailable() finally q.stop()
+  }
 
   /** Replay `df` to the end of its input into a fresh memory sink in
     * output `mode` (`complete` or `append`) and return the drained rows
@@ -105,7 +58,7 @@ object CarbonStream {
   def replay(df: DataFrame, mode: String): DataFrame = {
     val spark = df.sparkSession
     val sink = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    runToEnd(spark) {
+    runToEnd {
       df.writeStream.format("memory").queryName(sink).outputMode(mode).start()
     }
     drainMemorySink(spark, sink)
@@ -406,19 +359,21 @@ object CarbonStream {
     // file-sink target for a single-process run, not operator state — a
     // real deployment points the file sink + checkpointLocation at shared
     // storage. (Contrast dedup_cluster's label spill, which IS operator
-    // state and therefore goes through graft.model.Spill.)
-    val out = java.nio.file.Files
-      .createTempDirectory("stream_rollup_append").toString
-    runToEnd(spark) {
-      windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .start()
-    }
-    spark.read.parquet(s"$out/data")
+    // state and therefore goes through graft.model.Spill.) The sink's
+    // rows are materialized before the dir is deleted.
+    val out = java.nio.file.Files.createTempDirectory("stream_rollup_append")
+    try {
+      runToEnd {
+        windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
+          .writeStream
+          .format("parquet")
+          .option("path", s"$out/data")
+          .option("checkpointLocation", s"$out/chk")
+          .outputMode("append")
+          .start()
+      }
+      spark.read.parquet(s"$out/data").localCheckpoint()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
   private val rollupAppendSql: String =
@@ -528,7 +483,7 @@ object CarbonStream {
     */
   def streamRollupsToStore(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet"): Unit =
-    runToEnd(spark)(startRollupFlush(spark, srcDir, store, glob))
+    runToEnd(startRollupFlush(spark, srcDir, store, glob))
 
   /** The LIVE form of `series_fill`: the dashboard gap-repaired range read
     * served from stream state instead of a batch aggregation. The state is

@@ -455,7 +455,7 @@ object DedupStream {
       .delete(outRoot, true) // fresh run
     val docs = graft.model.Tables.documents(spark, dir).persist()
     try CarbonStream.replaySlices(CarbonStream.thirds(docs, col("doc_id"))) { s =>
-      CarbonStream.runToEnd(spark) {
+      CarbonStream.runToEnd {
         s.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val words = batch.select(col("doc_id"), explode(

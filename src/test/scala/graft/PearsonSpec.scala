@@ -31,7 +31,7 @@ class PearsonSpec extends AnyFunSuite with TestSpark {
 
   test("catalyst expression evaluates through codegen in a DataFrame") {
     import spark.implicits._
-    Pearson.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val out = Seq("sample string to be hashed", "another sample string to be hashed", "")
       .toDF("s")
       .selectExpr("pearson_hash8(s) AS h8", "pearson_hash64(s) AS h64")

@@ -117,7 +117,7 @@ class PeerForwardSpec extends AnyFunSuite with TestSpark {
       // lines — the same pearson_hash8 % N expression peer_forward uses
       val fwd = a.forwarder.get
       assert(fwd.delivered.get == wantFwd.size.toLong && fwd.retried.get == 0 && fwd.dropped.get == 0)
-      Pearson.register(spark)
+      graft.functions.GraftExtensions.register(spark)
       import spark.implicits._
       val batch = paths.toDF("path")
         .groupBy(expr("pearson_hash8(path) % 2").as("peer")).count()

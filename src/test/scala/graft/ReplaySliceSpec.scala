@@ -21,14 +21,18 @@ import graft.streaming.CarbonStream
   *    name left behind;
   *  - `CarbonStream.replaySlices` replays one micro-batch per slice, in
   *    slice order;
-  *  - no replay operator leaves anything it created in `java.io.tmpdir`.
+  *  - no replay operator (nor `stream_rollup_append`'s file sink) leaves
+  *    anything it created in `java.io.tmpdir`.
   */
 class ReplaySliceSpec extends AnyFunSuite with TestSpark {
 
-  /** The ten operators that replay staged slices. */
-  private val ReplayOps = Set("stream_transitions", "stream_transitions_buffered",
+  /** The ten operators that replay staged slices, and `stream_rollup_append`,
+    * whose file sink writes to a temp dir.
+    */
+  private val TmpdirOps = Set("stream_transitions", "stream_transitions_buffered",
     "stream_funnel", "stream_funnel_buffered", "stream_holt", "stream_dedup_watermark",
-    "stream_pack", "stream_bpe", "stream_reassemble", "stream_ann_stored")
+    "stream_pack", "stream_bpe", "stream_reassemble", "stream_ann_stored",
+    "stream_rollup_append")
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
@@ -98,7 +102,7 @@ class ReplaySliceSpec extends AnyFunSuite with TestSpark {
     val seen = new ConcurrentLinkedQueue[(Long, Seq[Long])]()
     val created = createdInTmpdir {
       CarbonStream.replaySlices(slices) { stream =>
-        CarbonStream.runToEnd(spark) {
+        CarbonStream.runToEnd {
           stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
             seen.add(id -> batch.select("marker").distinct().collect().map(_.getLong(0)).toSeq)
             ()
@@ -114,8 +118,8 @@ class ReplaySliceSpec extends AnyFunSuite with TestSpark {
 
   test("no replay operator leaves anything in java.io.tmpdir") {
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    val ops = Registry.select(ReplayOps)
-    assert(ops.size == ReplayOps.size)
+    val ops = Registry.select(TmpdirOps)
+    assert(ops.size == TmpdirOps.size)
     ops.foreach { op =>
       val created = createdInTmpdir {
         op.run(spark, Sf).write.format("noop").mode("overwrite").save()

@@ -377,14 +377,12 @@ class Round11Spec extends AnyFunSuite with TestSpark {
     })
     val in = MemoryStream[(String, Long)]
     val sink = "r11_hll_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = OpsStats.hllRegisterRows(in.toDF().toDF("event_type", "user_id"))
-        .groupBy(col("event_type"), col("r")).agg(max("rank").as("m"))
-        .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-      try {
-        chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-      } finally q.stop()
-    }
+    val q = OpsStats.hllRegisterRows(in.toDF().toDF("event_type", "user_id"))
+      .groupBy(col("event_type"), col("r")).agg(max("rank").as("m"))
+      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
+    try {
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+    } finally q.stop()
     val streamed = rows(CarbonStream.drainMemorySink(spark, sink))
     val batch = rows(OpsStats.hllRegisterRows(graft.model.Tables.events(spark, Sf))
       .groupBy("event_type", "r").agg(max("rank").as("m")))
@@ -399,17 +397,15 @@ class Round11Spec extends AnyFunSuite with TestSpark {
     import spark.implicits._
     val in = MemoryStream[String]
     val sink = "r11_idx_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    CarbonStream.withStreamPartitions(spark) {
-      val q = graft.operators.Index.indexFrom(in.toDF().toDF("path"))
-        .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-      try {
-        // batch 1: "a.b" exists only as a PREFIX of a deeper path
-        in.addData("a.b.c"); q.processAllAvailable()
-        // batch 2: the same node arrives as a FULL path — leaf must flip
-        // to true by max-merge, never flop back
-        in.addData("a.b"); q.processAllAvailable()
-      } finally q.stop()
-    }
+    val q = graft.operators.Index.indexFrom(in.toDF().toDF("path"))
+      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
+    try {
+      // batch 1: "a.b" exists only as a PREFIX of a deeper path
+      in.addData("a.b.c"); q.processAllAvailable()
+      // batch 2: the same node arrives as a FULL path — leaf must flip
+      // to true by max-merge, never flop back
+      in.addData("a.b"); q.processAllAvailable()
+    } finally q.stop()
     val leaf = CarbonStream.drainMemorySink(spark, sink).collect()
       .map(r => r.getAs[String]("node") -> r.getAs[Boolean]("leaf")).toMap
     assert(leaf == Map("a" -> false, "a.b" -> true, "a.b.c" -> true))

@@ -38,6 +38,8 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *     which turns Nagle's algorithm off before it.
   * 11. No parquet append in `src/main` goes through Spark's commit
   *     protocol (`.mode("append")`); appends publish by rename.
+  * 12. No operator writes session conf (only the `nanosAsLong` read flag
+  *     is set), and native functions are registered in one place.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -92,14 +94,13 @@ class Round12Spec extends AnyFunSuite with TestSpark {
 
   // ----------------------------------------------- replay lifecycle census
 
-  /** `(file, enclosing def, pattern)` for every code line of the
-    * streaming package that contains one of `patterns`, one per match.
+  /** `(file, enclosing def, pattern)` for every code line under `root`
+    * that contains one of `patterns`, one per match.
     */
-  private def streamingHits(patterns: Seq[String]): Seq[(String, String, String)] = {
+  private def codeHits(root: String, patterns: Seq[String]): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
     val defName = """\bdef\s+(\w+)""".r
-    val root = java.nio.file.Paths.get("src/main/scala/graft/streaming")
-    java.nio.file.Files.list(root).iterator().asScala
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { p =>
         var enclosing = ""
@@ -111,20 +112,18 @@ class Round12Spec extends AnyFunSuite with TestSpark {
   }
 
   /** The finite-replay lifecycle lives in ONE place: in the streaming
-    * package (comment lines stripped), `processAllAvailable`, a memory
-    * sink and a `withStreamPartitions(` call appear only inside the
-    * `CarbonStream.runToEnd` / `replay` definitions. Each hit is attributed
-    * to the nearest enclosing `def`, so a hand-rolled start/drain/stop
-    * block in any operator body fails here.
+    * package (comment lines stripped), `processAllAvailable` and a memory
+    * sink appear only inside the `CarbonStream.runToEnd` / `replay`
+    * definitions. Each hit is attributed to the nearest enclosing `def`,
+    * so a hand-rolled start/drain/stop block in any operator body fails
+    * here.
     */
   test("finite stream replays go through CarbonStream.runToEnd / replay") {
-    val patterns = Seq("processAllAvailable", ".format(\"memory\")",
-      "withStreamPartitions(")
-    val hits = streamingHits(patterns).sorted
+    val patterns = Seq("processAllAvailable", ".format(\"memory\")")
+    val hits = codeHits("src/main/scala/graft/streaming", patterns).sorted
     val want = Seq(
       ("CarbonStream.scala", "replay", ".format(\"memory\")"),
-      ("CarbonStream.scala", "runToEnd", "processAllAvailable"),
-      ("CarbonStream.scala", "runToEnd", "withStreamPartitions(")).sorted
+      ("CarbonStream.scala", "runToEnd", "processAllAvailable")).sorted
     assert(hits == want,
       s"replay lifecycle census drifted: got $hits, want $want — run a finite " +
         "stream through CarbonStream.replay (memory sink) or runToEnd (any " +
@@ -141,7 +140,7 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     */
   test("staged stream replays go through CarbonStream.replaySlices") {
     val patterns = Seq("maxFilesPerTrigger", "createTempDirectory(", "writeFiles(")
-    val hits = streamingHits(patterns).distinct.sorted
+    val hits = codeHits("src/main/scala/graft/streaming", patterns).distinct.sorted
     val want = Seq(
       ("CarbonStream.scala", "replaySlices", "maxFilesPerTrigger"),
       ("CarbonStream.scala", "replaySlices", "createTempDirectory("),
@@ -153,6 +152,38 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       s"replay staging census drifted: got $hits, want $want — stage a finite " +
         "replay's slices with CarbonStream.replaySlices instead of writing and " +
         "reading its files by hand")
+  }
+
+  // ------------------------------------------------- session-state census
+
+  /** Session state is set where the session is built. In `src/main`
+    * (comment lines stripped) the only session-conf writes are the sticky
+    * `nanosAsLong` read flag of `Tables.events` and
+    * `CarbonStream.eventsStream` (sessions graft does not build still
+    * need it to read TIMESTAMP(NANOS) fixtures), and native functions
+    * are installed only by `GraftExtensions.register`, from the table
+    * the extension injects. Each hit is attributed to its enclosing
+    * `def`, so an operator that writes session conf fails here.
+    */
+  test("operators write no session conf and register functions in one place") {
+    val writes = Seq("conf.set(", "conf.unset(", "setConfString(")
+    val hits = codeHits("src/main/scala",
+      writes ++ Seq("createOrReplaceTempFunction", "registerFunction(")).sorted
+    val want = Seq(
+      ("CarbonStream.scala", "eventsStream", "conf.set("),
+      ("GraftExtensions.scala", "register", "registerFunction("),
+      ("Tables.scala", "events", "conf.set(")).sorted
+    assert(hits == want,
+      s"session-state census drifted: got $hits, want $want — size a plan " +
+        "on its frames (repartition) instead of the session conf, and add a " +
+        "native function to GraftExtensions.functions")
+    import scala.jdk.CollectionConverters._
+    val confLines = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(codeLines).filter(l => writes.exists(l.contains))
+    assert(confLines.nonEmpty &&
+      confLines.forall(_.contains("\"spark.sql.legacy.parquet.nanosAsLong\", \"true\"")),
+      s"a session-conf write other than the nanosAsLong read flag: $confLines")
   }
 
   // ------------------------------------------- session + tuning-main census

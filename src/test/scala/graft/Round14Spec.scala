@@ -30,7 +30,7 @@ class Round14Spec extends AnyFunSuite with TestSpark {
   // ------------------------------------------------- assignTopN window law
 
   test("assignTopN equals the window top-N of (ccos desc, c_id asc)") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecs = Similarity.fixedVecs(spark, Sf)
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
     val got = Similarity.assignTopN(vecs, cents, 3)
@@ -58,7 +58,7 @@ class Round14Spec extends AnyFunSuite with TestSpark {
   // ------------------------------------------- PQ Lloyd descent + shape law
 
   test("trainedPqCodebook keeps the M×k shape and does not increase qerr") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecs = Similarity.fixedVecs(spark, Sf)
     val seedCb = Similarity.pqCodebook(vecs)
     val trainedCb = Similarity.trainedPqCodebook(spark, Sf, vecs)
@@ -188,7 +188,7 @@ class Round14Spec extends AnyFunSuite with TestSpark {
   // --------------------------- stored IVF index: pruned read, equal answer
 
   test("ann_ivf_stored prunes partitions and matches ann_ivf_trained") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val stored = Similarity.ivfStored(spark, Sf)
     val plan = stored.queryExecution.executedPlan.toString
     val pruned = "PartitionFilters: \\[[^\\]]*c_id".r
@@ -324,7 +324,7 @@ class Round14Spec extends AnyFunSuite with TestSpark {
   // ------------------------------------ refinedKnnLists spill-tag isolation
 
   test("refinedKnnLists spills are tag-isolated across interleaved calls") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val all = Similarity.fixedVecs(spark, Sf)
     val slice = all.filter(col("vec_id") % 5 === 0)
     val cents = Similarity.centsFor(spark, Sf, "seed", Similarity.CentroidMod)

@@ -67,7 +67,7 @@ class Round15Spec extends AnyFunSuite with TestSpark {
     import graft.sources.{RollupStore, VecIndexStore}
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecs = Similarity.fixedVecs(spark, Sf)
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
     val assigned = Similarity.assignNearest(vecs, cents)
@@ -224,7 +224,7 @@ class Round15Spec extends AnyFunSuite with TestSpark {
     import graft.sources.{RollupStore, VecIndexStore}
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions._
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecs = Similarity.fixedVecs(spark, Sf)
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
     val assigned = Similarity.assignNearest(vecs, cents)
@@ -294,7 +294,7 @@ class Round15Spec extends AnyFunSuite with TestSpark {
   test("chunk_ann_stored and ann_ivfpq_stored prune partitions and match " +
       "their in-memory twins") {
     import graft.operators.{Similarity, TextOps}
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val prunedRe = "PartitionFilters: \\[[^\\]]*c_id".r
 
     val chunkStored = TextOps.chunkAnnStored(spark, Sf)
@@ -386,7 +386,7 @@ class Round15Spec extends AnyFunSuite with TestSpark {
   test("refinedKnnLists with a pre-spilled seed equals the self-built seed") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val verts = Similarity.fixedVecs(spark, Sf)
       .filter(col("vec_id") % Similarity.KnnGraphMod === 0)
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
@@ -408,7 +408,7 @@ class Round15Spec extends AnyFunSuite with TestSpark {
   test("mutualKnnEdgesIvf equals the direct closure and pins zero blocks") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val verts = Similarity.fixedVecs(spark, Sf)
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val edges = Similarity.mutualKnnEdgesIvf(spark, Sf, verts, "r15opt_full")

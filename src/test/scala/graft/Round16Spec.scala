@@ -21,7 +21,7 @@ import org.apache.spark.sql.expressions.Window
 class Round16Spec extends AnyFunSuite with TestSpark {
 
   private def vecs = {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     graft.operators.Similarity.fixedVecs(spark, Sf)
   }
 
@@ -40,7 +40,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
 
   test("assignTopN equals the window-rank reference at nprobe 3") {
     import graft.operators.Similarity
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val nprobe = 3
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
     val got = Similarity.assignTopN(vecs, cents, nprobe)
@@ -63,7 +63,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
 
   test("ivfProbeLists equals the window-rank reference") {
     import graft.operators.Similarity
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
     val got = Similarity.ivfProbeLists(vecs, cents, Similarity.NProbe)
       .select("q_id", "c_id")
@@ -82,7 +82,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
 
   test("pqCodesFrom equals the min_by aggregation form (codes AND qerr)") {
     import graft.operators.Similarity
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val cb = Similarity.trainedPqCodebook(spark, Sf, vecs)
     val got = Similarity.pqCodesFrom(vecs, cb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
@@ -104,7 +104,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
 
   test("hashedDenseDocs (row-local) equals the embedHashing-composed form") {
     import graft.operators.TextOps
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val got = TextOps.hashedDenseDocs(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList, r.getLong(2))).toSet
     // reference: the r15 densify — sparse (doc_id, dim, val) rows from the
@@ -125,7 +125,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
 
   test("assignChunks equals the max_by aggregation form") {
     import graft.operators.{Similarity, TextOps}
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val dense = TextOps.chunkDense(spark, Sf)
     val cents = TextOps.chunkCentsFor(spark, Sf, "trained", TextOps.ChunkCentMod)
     val got = TextOps.assignChunks(dense, cents)
@@ -166,7 +166,7 @@ class Round16Spec extends AnyFunSuite with TestSpark {
     assert(projected.isNullAt(0), "generated code must set isNull")
     // end to end: a non-nullable declaration lets the optimizer fold
     // `IS NULL` to false
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val nulls = spark.range(2)
       .selectExpr("array(id + 3, id + 4) AS x", "id + 25 AS xn")
       .selectExpr("vec_best_code(x, xn, filter(" +
@@ -174,5 +174,15 @@ class Round16Spec extends AnyFunSuite with TestSpark {
       .filter(col("b").isNull)
       .count()
     assert(nulls == 2)
+  }
+
+  test("an empty quantizer assigns and probes nothing, like assignNearest") {
+    import graft.operators.Similarity
+    val cents = Similarity.centsFor(spark, Sf, "trained", Similarity.CentroidMod)
+      .limit(0)
+    assert(Similarity.assignNearest(vecs, cents).count() == 0)
+    assert(Similarity.assignNearestLocal(vecs, cents).count() == 0)
+    assert(Similarity.ivfProbeLists(vecs, cents, Similarity.NProbe).count() == 0)
+    assert(Similarity.assignTopN(vecs, cents, 3).count() == 0)
   }
 }

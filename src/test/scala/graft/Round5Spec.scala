@@ -72,7 +72,7 @@ class Round5Spec extends AnyFunSuite with TestSpark {
   }
 
   test("vec_dot native expression equals the unrolled element_at dot") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val vecs = graft.model.Tables.embeddings(spark, Sf)
       .select(col("vec_id"),
         expr(s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * ${Similarity.Scale}) AS BIGINT))").as("v"))
@@ -106,7 +106,7 @@ class Round5Spec extends AnyFunSuite with TestSpark {
   }
 
   test("vec_signbits equals the unrolled CASE signed-sum signature") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     // an arbitrary 10-plane set exercised against the closed-form string
     var x = 99L
     def next(): Long = { x = (1103515245L * x + 12345L) % (1L << 31); x }
@@ -128,46 +128,38 @@ class Round5Spec extends AnyFunSuite with TestSpark {
     assert(mismatches == 0)
   }
 
-  test("RocksDB state store flag: stateful streaming dedup runs on RocksDB and matches") {
+  test("RocksDB state store: stateful streaming dedup runs on RocksDB and matches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    spark.conf.set(graft.streaming.CarbonStream.RocksDbFlag, "true")
+    val rocks = TestSpark.rocksDbSession()
+    implicit val ctx = rocks.sqlContext
+    import rocks.implicits._
     val chk = java.nio.file.Files.createTempDirectory("rocksdb_chk").toString
+    val in = MemoryStream[(Long, String)]
+    val docs = in.toDF.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+    val q = graft.streaming.DedupStream.dedupAgg(docs)
+      .writeStream.format("memory").queryName("rocksdb_dedup")
+      .option("checkpointLocation", chk)
+      .outputMode("complete").start()
     try {
-      val in = MemoryStream[(Long, String)]
-      val docs = in.toDF.toDF("doc_id", "text")
-        .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      graft.streaming.CarbonStream.withStreamPartitions(spark) {
-        val q = graft.streaming.DedupStream.dedupAgg(docs)
-          .writeStream.format("memory").queryName("rocksdb_dedup")
-          .option("checkpointLocation", chk)
-          .outputMode("complete").start()
-        try {
-          in.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (10L, "gamma"))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      val got = spark.table("rocksdb_dedup").collect()
-        .map(r => (r.getLong(1), r.getLong(2))).toSet
-      // "alpha": ids 1,3 -> keep 1, 2 copies; "beta": keep 2; "gamma": id 10
-      // is re-planted as 1000010 (doc_id % 10 == 0) -> keep 10, 2 copies
-      assert(got === Set((1L, 2L), (2L, 1L), (10L, 2L)))
-      // the state actually lives in RocksDB: its checkpoints are zip/changelog
-      // files, never the HDFS store's .delta files
-      val stateFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(chk, "state"))
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map[String](_.getFileName.toString).toArray.map(_.toString)
-      assert(stateFiles.exists(f => f.endsWith(".zip") || f.endsWith(".changelog")),
-        s"expected RocksDB zip/changelog state files, got: ${stateFiles.mkString(",")}")
-      assert(!stateFiles.exists(_.endsWith(".delta")),
-        "found HDFS-backed .delta state files — RocksDB provider was not in effect")
-      // and the provider override is restored after the run (getOption
-      // surfaces the session default — HDFS-backed — once no override is set)
-      assert(!spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDB"))
-    } finally spark.conf.unset(graft.streaming.CarbonStream.RocksDbFlag)
+      in.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"), (10L, "gamma"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = rocks.table("rocksdb_dedup").collect()
+      .map(r => (r.getLong(1), r.getLong(2))).toSet
+    // "alpha": ids 1,3 -> keep 1, 2 copies; "beta": keep 2; "gamma": id 10
+    // is re-planted as 1000010 (doc_id % 10 == 0) -> keep 10, 2 copies
+    assert(got === Set((1L, 2L), (2L, 1L), (10L, 2L)))
+    // the state actually lives in RocksDB: its checkpoints are zip/changelog
+    // files, never the HDFS store's .delta files
+    val stateFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(chk, "state"))
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map[String](_.getFileName.toString).toArray.map(_.toString)
+    assert(stateFiles.exists(f => f.endsWith(".zip") || f.endsWith(".changelog")),
+      s"expected RocksDB zip/changelog state files, got: ${stateFiles.mkString(",")}")
+    assert(!stateFiles.exists(_.endsWith(".delta")),
+      "found HDFS-backed .delta state files — RocksDB provider was not in effect")
   }
 
   test("SURVEY §2 operator inventory is 1:1 with Registry.ops") {

@@ -45,7 +45,7 @@ class Round6Spec extends AnyFunSuite with TestSpark {
   }
 
   test("vec_dot and vec_signbits fail loudly on malformed input (no unsafe reads)") {
-    graft.functions.VecMath.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     import spark.implicits._
     // length-mismatched dot: must throw, not return garbage from
     // out-of-bounds unsafe memory

@@ -29,53 +29,51 @@ class Round8StreamSpec extends AnyFunSuite with TestSpark {
     val sink = "socket_rollup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val lines = spark.readStream.format("socket")
       .option("host", "127.0.0.1").option("port", server.getLocalPort).load()
-    CarbonStream.withStreamPartitions(spark) {
-      val q = CarbonStream.windowedRollup(
-          CarbonStream.parseCarbonLines(lines), watermark = Some("0 seconds"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        val out = writerQ.take() // blocks until the source connected
-        // two 60 s windows of data + two malformed lines the parser drops
-        Seq("servers.web.cpu 1.50 70", "servers.web.cpu 2.50 80",
-          "servers.db.mem 10.00 65",
-          "servers.web.cpu 4.00 130",
-          "not-a-metric", "servers.bad.value abc 70").foreach(out.println)
-        // watermark pushers: emission happens in the batch AFTER the
-        // watermark advances, and batches only run when data arrives — so
-        // keep nudging with sentinel lines (filtered out of the
-        // assertion) until all three data windows flush
-        val deadline = System.currentTimeMillis() + 60000
-        var wmTs = 400L
-        def emitted() = spark.table(sink)
-          .filter(col("path") =!= "sentinel.wm").count()
-        while (emitted() < 3 && System.currentTimeMillis() < deadline) {
-          out.println(s"sentinel.wm 0.00 $wmTs")
-          wmTs += 100
-          q.processAllAvailable()
-        }
-        val got = spark.table(sink)
-          .filter(col("path") =!= "sentinel.wm")
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(got === Set(
-          ("servers.web.cpu", 120L, 2.0),   // (1.50 + 2.50) / 2
-          ("servers.db.mem", 120L, 10.0),
-          ("servers.web.cpu", 180L, 4.0)),
-          "socket-fed append rollup emitted wrong windows")
-      } finally {
-        q.stop()
-        spark.catalog.dropTempView(sink)
-        server.close()
+    val q = CarbonStream.windowedRollup(
+        CarbonStream.parseCarbonLines(lines), watermark = Some("0 seconds"))
+      .writeStream.format("memory").queryName(sink)
+      .outputMode("append").start()
+    try {
+      val out = writerQ.take() // blocks until the source connected
+      // two 60 s windows of data + two malformed lines the parser drops
+      Seq("servers.web.cpu 1.50 70", "servers.web.cpu 2.50 80",
+        "servers.db.mem 10.00 65",
+        "servers.web.cpu 4.00 130",
+        "not-a-metric", "servers.bad.value abc 70").foreach(out.println)
+      // watermark pushers: emission happens in the batch AFTER the
+      // watermark advances, and batches only run when data arrives — so
+      // keep nudging with sentinel lines (filtered out of the
+      // assertion) until all three data windows flush
+      val deadline = System.currentTimeMillis() + 60000
+      var wmTs = 400L
+      def emitted() = spark.table(sink)
+        .filter(col("path") =!= "sentinel.wm").count()
+      while (emitted() < 3 && System.currentTimeMillis() < deadline) {
+        out.println(s"sentinel.wm 0.00 $wmTs")
+        wmTs += 100
+        q.processAllAvailable()
       }
+      val got = spark.table(sink)
+        .filter(col("path") =!= "sentinel.wm")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got === Set(
+        ("servers.web.cpu", 120L, 2.0),   // (1.50 + 2.50) / 2
+        ("servers.db.mem", 120L, 10.0),
+        ("servers.web.cpu", 180L, 4.0)),
+        "socket-fed append rollup emitted wrong windows")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView(sink)
+      server.close()
     }
   }
 
   test("stream_dedup_watermark output is state-store-provider invariant (RocksDB)") {
-    def run() = SparkEntry.queries("stream_dedup_watermark")(spark, Sf)
-      .collect().map(_.toString).sorted
-    val hdfs = run()
-    spark.conf.set(CarbonStream.RocksDbFlag, "true")
-    val rocks = try run() finally spark.conf.unset(CarbonStream.RocksDbFlag)
+    def run(session: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("stream_dedup_watermark")(session, Sf)
+        .collect().map(_.toString).sorted
+    val hdfs = run(spark)
+    val rocks = run(TestSpark.rocksDbSession())
     assert(rocks.sameElements(hdfs),
       "watermarked dedup emitted different rows under the RocksDB provider")
   }

@@ -37,4 +37,14 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A session on the spec context whose stateful streams keep their
+    * state in RocksDB: Spark's own provider conf, set where it is built.
+    */
+  def rocksDbSession(): SparkSession = {
+    val s = session.newSession()
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s
+  }
 }
