@@ -559,28 +559,32 @@ object Dedup {
       (r.getDecimal(0), r.getLong(1))
     }
     var (prevSum, nVerts) = labelStats(labels)
-    // The per-round frames are |V| rows of two longs, but the loop's
-    // label aggregation inherited the SESSION shuffle width
-    // (cores-derived — 32 buckets of a few KB each at bench scale; the
-    // r15 scaling block measured the loop FASTER on 8 cores than 32 for
-    // exactly this reason). Scale its width to the label frame instead —
+    // The per-round frames are |V| rows of two longs, but every loop
+    // join/groupBy inherited the SESSION shuffle width (cores-derived —
+    // 32 buckets of a few KB each at bench scale; the r15 scaling block
+    // measured the loop FASTER on 8 cores than 32 for exactly this
+    // reason). Scale the loop's width to the label frame instead —
     // ~100k rows per partition, capped at the session value so a
     // 100 TB-scale vertex set keeps its full parallelism (guide §2:
     // partitioning must be scale-adaptive, not host-tuned). The width is
-    // a property of the aggregation's input frame, not of the session,
-    // so a query planned concurrently on the same session keeps the
-    // session width. The joins stay Spark's to plan: AQE broadcasts the
-    // small side or coalesces the exchange, and a sort-merge join over two
-    // narrower repartitioned inputs is planned at the session width anyway.
+    // set on the frames, never on the session, so a query planned
+    // concurrently on the same session keeps the session width: the
+    // label aggregation repartitions its input to `loopParts`, and a
+    // one-partition label frame (< 100k rows, ~2 MB) is broadcast into
+    // both joins, which then plan no exchange. Wider label frames join
+    // at the session width: Spark 4.1 raises a join whose sides are both
+    // shuffles to `spark.sql.shuffle.partitions`, and a localCheckpoint
+    // under AQE keeps no partitioning that could pin a narrower one.
     val loopParts = math.max(1L, math.min(
       spark.conf.get("spark.sql.shuffle.partitions").toLong,
       nVerts / 100000L + 1L)).toInt
+    def labelSide(df: DataFrame): DataFrame = if (loopParts == 1) broadcast(df) else df
     var converged = false
     var iter = 0
     while (!converged && iter < 50) {
       // min-label propagation: one hop along the edges per round …
-      val prop = edges.join(labels, col("u") === col("vid"))
-        .select(col("v").as("vid"), col("lbl"))
+      val prop = edges.join(labelSide(labels), edges("u") === labels("vid"))
+        .select(edges("v").as("vid"), labels("lbl"))
       val hop = labels.select(col("vid"), col("lbl")).union(prop)
         .repartition(loopParts, col("vid"))
         .groupBy("vid").agg(min("lbl").as("lbl")).localCheckpoint()
@@ -597,8 +601,9 @@ object Dedup {
       // — per-round AQE stage re-planning costs more than a tiny-frame
       // materialization.
       val ptr = hop.select(col("vid").as("pvid"), col("lbl").as("plbl"))
-      val next = hop.join(ptr, col("lbl") === col("pvid"), "left")
-        .select(col("vid"), least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
+      val next = hop.join(labelSide(ptr), hop("lbl") === ptr("pvid"), "left")
+        .select(hop("vid"),
+          least(hop("lbl"), coalesce(col("plbl"), hop("lbl"))).as("lbl"))
         .localCheckpoint()
       val (nextSum, _) = labelStats(next)
       labels = next

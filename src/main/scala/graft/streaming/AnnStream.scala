@@ -108,16 +108,12 @@ object AnnStream {
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
     CarbonStream.replaySlices(
         (0 until 3).map(i => raw.filter(pmod(col("vec_id"), lit(3)) === i))) { stream =>
-      CarbonStream.runToEnd {
-        Similarity.fixedVecsFrom(stream)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            VecIndexStore.append(
-              Similarity.assignNearestLocal(batch, cents)
-                .select("vec_id", "v", "nrm", "c_id"), idx)
-          }
-          .outputMode("append")
-          .start()
+      CarbonStream.runToEnd(Similarity.fixedVecsFrom(stream)) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          VecIndexStore.append(
+            Similarity.assignNearestLocal(batch, cents)
+              .select("vec_id", "v", "nrm", "c_id"), idx)
+        }.outputMode("append").start()
       }
     }
     VecIndexStore.compact(spark, idx)

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.SessionClone
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,32 +37,71 @@ object CarbonStream {
     out
   }
 
-  /** The one lifecycle of a FINITE replay: `start` builds and starts the
-    * query, the query runs to the end of the available input, and it
-    * stops whether or not that succeeded. The query plans at the session's
-    * own width and state-store provider: a replay always starts from a
-    * fresh checkpoint, so the session's `spark.sql.shuffle.partitions` is
-    * its state-partition count, and RocksDB state is Spark's own
-    * `spark.sql.streaming.stateStore.providerClass`, set where the session
-    * is built. The live daemon queries ([[startRollupFlush]]) own their
-    * lifetime instead.
+  /** Stateful streaming queries get one state-store instance PER shuffle
+    * partition, and every micro-batch commits a file per instance, so the
+    * count is a per-commit IO cost, not just parallelism (and streaming
+    * disables AQE, so nothing coalesces it). A replay plans at its
+    * session's width up to this cap, which these key cardinalities (~10k)
+    * need: at sf0.1 on a 4-core host the `stream_*` keys ran faster at a
+    * 4-wide session's own width than at 8, and much slower at a 32-wide
+    * session's own width than at 8.
     */
-  def runToEnd(start: => StreamingQuery): Unit = {
-    val q = start
+  val StreamShufflePartitions = 8
+
+  /** Each session wider than [[StreamShufflePartitions]] with its replay
+    * session and the snapshot of its conf and listeners that was cloned.
+    */
+  private val replaySessions = new java.util.WeakHashMap[SparkSession, (AnyRef, SparkSession)]()
+
+  /** The session a finite replay of a frame of `spark` starts on. A
+    * streaming query binds its state-partition count to its session's
+    * `spark.sql.shuffle.partitions` when it starts, so a session at most
+    * [[StreamShufflePartitions]] wide serves as it is. A wider one gets a
+    * clone built at that width ([[SessionClone.of]]: its conf, functions,
+    * views and execution listeners) with its streaming listeners added,
+    * so they see the replay's progress; the clone is rebuilt only when
+    * that conf or those listeners change (a session that starts a query
+    * registers a streaming listener bus on the SparkContext for good, so
+    * a clone per replay would pile them up). `spark`'s own conf is never
+    * written, so a query planned on it concurrently keeps its width.
+    */
+  private def replaySession(spark: SparkSession): SparkSession =
+    if (spark.conf.get("spark.sql.shuffle.partitions").toInt <= StreamShufflePartitions) spark
+    else replaySessions.synchronized {
+      val streamListeners = spark.streams.listListeners().toSeq
+      val snapshot = (spark.conf.getAll, SessionClone.executionListeners(spark), streamListeners)
+      Option(replaySessions.get(spark)).collect { case (`snapshot`, s) => s }.getOrElse {
+        val s = SessionClone.of(spark)
+        s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+        streamListeners.foreach(s.streams.addListener)
+        replaySessions.put(spark, (snapshot, s))
+        s
+      }
+    }
+
+  /** The one lifecycle of a FINITE replay: `start` starts the query from
+    * `df`'s writer on its replay session ([[replaySession]]), the query
+    * runs to the end of the available input, and it stops whether or not
+    * that succeeded; the stopped query is returned. RocksDB state is
+    * Spark's own `spark.sql.streaming.stateStore.providerClass`, set where
+    * the session is built. The live daemon queries ([[startRollupFlush]])
+    * own their lifetime instead.
+    */
+  def runToEnd(df: DataFrame)(start: DataStreamWriter[Row] => StreamingQuery): StreamingQuery = {
+    val q = start(SessionClone.bind(df, replaySession(df.sparkSession)).writeStream)
     try q.processAllAvailable() finally q.stop()
+    q
   }
 
   /** Replay `df` to the end of its input into a fresh memory sink in
     * output `mode` (`complete` or `append`) and return the drained rows
-    * ([[drainMemorySink]]: the sink's temp view is already gone).
+    * as a frame of `df`'s session ([[drainMemorySink]]: the sink's temp
+    * view is already gone).
     */
   def replay(df: DataFrame, mode: String): DataFrame = {
-    val spark = df.sparkSession
     val sink = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    runToEnd {
-      df.writeStream.format("memory").queryName(sink).outputMode(mode).start()
-    }
-    drainMemorySink(spark, sink)
+    val q = runToEnd(df)(_.format("memory").queryName(sink).outputMode(mode).start())
+    SessionClone.bind(drainMemorySink(q.sparkSession, sink), df.sparkSession)
   }
 
   /** Replay `slices` as a finite stream of one micro-batch per slice, in
@@ -363,10 +403,8 @@ object CarbonStream {
     // rows are materialized before the dir is deleted.
     val out = java.nio.file.Files.createTempDirectory("stream_rollup_append")
     try {
-      runToEnd {
-        windowedRollup(toMetrics(events), watermark = Some("0 seconds"))
-          .writeStream
-          .format("parquet")
+      runToEnd(windowedRollup(toMetrics(events), watermark = Some("0 seconds"))) {
+        _.format("parquet")
           .option("path", s"$out/data")
           .option("checkpointLocation", s"$out/chk")
           .outputMode("append")
@@ -397,32 +435,32 @@ object CarbonStream {
       glob: String = "*.parquet",
       config: () => Seq[graft.model.RollupDef] =
         () => graft.model.RollupConfig.reference)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    appendEachBatch(store, config)(flushMetrics(spark, srcDir, glob).writeStream)
+
+  private def flushMetrics(spark: SparkSession, srcDir: String, glob: String): DataFrame = {
     // one flush cycle per staged file
     val events = eventsStream(spark, srcDir, glob, maxFilesPerTrigger = Some(1))
     // Tables.metrics' mapping plus event_id — the five-method mergeable
     // state needs it for the LAST tiebreak key ([[toMetrics]] serves the
     // average-only windowed forms and deliberately drops it).
-    val metrics = events.select(
+    events.select(
       concat(lit("servers."), col("event_type"), lit(".u"),
         (col("user_id") % 8).cast("string")).as("path"),
       col("value"),
       expr("ts DIV 1000000000").as("ts"),
       col("event_id"))
-    appendEachBatch(metrics, store, config)
   }
 
   /** The flush cycle, the unit of ingest: each micro-batch of metric rows
-    * `(path, value, ts, event_id)` is reduced to its mergeable rollup state
-    * ([[flushState]]) and appended to the store as ONE slice. `config()` is
-    * read PER FLUSH CYCLE — the daemon's SIGHUP reload swaps it between
-    * cycles, never inside one.
+    * `(path, value, ts, event_id)` the writer `w` carries is reduced to its
+    * mergeable rollup state ([[flushState]]) and appended to the store as
+    * ONE slice. `config()` is read PER FLUSH CYCLE — the daemon's SIGHUP
+    * reload swaps it between cycles, never inside one.
     */
-  private def appendEachBatch(metrics: DataFrame, store: String,
-      config: () => Seq[graft.model.RollupDef])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    metrics.writeStream
-      .outputMode("append")
+  private def appendEachBatch(store: String, config: () => Seq[graft.model.RollupDef])(
+      w: DataStreamWriter[Row]): org.apache.spark.sql.streaming.StreamingQuery =
+    w.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.sources.RollupStore.appendStateSlice(flushState(batch, config()), store)
       }
@@ -453,12 +491,12 @@ object CarbonStream {
       config: () => Seq[graft.model.RollupDef] =
         () => graft.model.RollupConfig.reference)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    appendEachBatch(spark.readStream
+    appendEachBatch(store, config)(spark.readStream
       .schema("path STRING, value DOUBLE, ts BIGINT, event_id BIGINT")
       .option("pathGlobFilter", glob)
       .option("maxFilesPerTrigger", "1")
       .option("cleanSource", "delete")
-      .parquet(srcDir), store, config)
+      .parquet(srcDir).writeStream)
 
   /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle
     * (datastore/metricstore.go:85-185 — accumulate deltas per flush
@@ -483,7 +521,8 @@ object CarbonStream {
     */
   def streamRollupsToStore(spark: SparkSession, srcDir: String, store: String,
       glob: String = "*.parquet"): Unit =
-    runToEnd(startRollupFlush(spark, srcDir, store, glob))
+    runToEnd(flushMetrics(spark, srcDir, glob))(
+      appendEachBatch(store, () => graft.model.RollupConfig.reference))
 
   /** The LIVE form of `series_fill`: the dashboard gap-repaired range read
     * served from stream state instead of a batch aggregation. The state is

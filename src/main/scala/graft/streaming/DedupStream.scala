@@ -455,23 +455,20 @@ object DedupStream {
       .delete(outRoot, true) // fresh run
     val docs = graft.model.Tables.documents(spark, dir).persist()
     try CarbonStream.replaySlices(CarbonStream.thirds(docs, col("doc_id"))) { s =>
-      CarbonStream.runToEnd {
-        s.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val words = batch.select(col("doc_id"), explode(
-              expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
-            val wtok = words.select("word").distinct()
-              .withColumn("n_sym",
-                expr(s"cast(size(split(trim($chain), '  ')) as bigint)"))
-            val tokens = words.join(broadcast(wtok), "word")
-              .groupBy("doc_id")
-              .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_tokens"))
-              .select(col("doc_id"), col("n_words"), col("n_tokens"),
-                round(col("n_tokens") / col("n_words"), 6).as("tokens_per_word"))
-            graft.sources.ParquetFiles.append(tokens, out, Nil, Long.MaxValue)
-          }
-          .outputMode("append")
-          .start()
+      CarbonStream.runToEnd(s) {
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          val words = batch.select(col("doc_id"), explode(
+            expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word"))
+          val wtok = words.select("word").distinct()
+            .withColumn("n_sym",
+              expr(s"cast(size(split(trim($chain), '  ')) as bigint)"))
+          val tokens = words.join(broadcast(wtok), "word")
+            .groupBy("doc_id")
+            .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_tokens"))
+            .select(col("doc_id"), col("n_words"), col("n_tokens"),
+              round(col("n_tokens") / col("n_words"), 6).as("tokens_per_word"))
+          graft.sources.ParquetFiles.append(tokens, out, Nil, Long.MaxValue)
+        }.outputMode("append").start()
       }
     } finally docs.unpersist(blocking = true)
     spark.read.parquet(out)

@@ -102,8 +102,8 @@ class ReplaySliceSpec extends AnyFunSuite with TestSpark {
     val seen = new ConcurrentLinkedQueue[(Long, Seq[Long])]()
     val created = createdInTmpdir {
       CarbonStream.replaySlices(slices) { stream =>
-        CarbonStream.runToEnd {
-          stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+        CarbonStream.runToEnd(stream) {
+          _.foreachBatch { (batch: DataFrame, id: Long) =>
             seen.add(id -> batch.select("marker").distinct().collect().map(_.getLong(0)).toSeq)
             ()
           }.start()

@@ -38,8 +38,9 @@ import graft.operators.{Analytics, Dedup, Partitioning}
   *     which turns Nagle's algorithm off before it.
   * 11. No parquet append in `src/main` goes through Spark's commit
   *     protocol (`.mode("append")`); appends publish by rename.
-  * 12. No operator writes session conf (only the `nanosAsLong` read flag
-  *     is set), and native functions are registered in one place.
+  * 12. No operator writes a shared session's conf (only the sticky
+  *     `nanosAsLong` read flag is set; a replay session's width is set
+  *     as it is built), and native functions are registered in one place.
   */
 class Round12Spec extends AnyFunSuite with TestSpark {
 
@@ -145,7 +146,7 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       ("CarbonStream.scala", "replaySlices", "maxFilesPerTrigger"),
       ("CarbonStream.scala", "replaySlices", "createTempDirectory("),
       ("CarbonStream.scala", "eventsStream", "maxFilesPerTrigger"),
-      ("CarbonStream.scala", "startRollupFlush", "maxFilesPerTrigger"),
+      ("CarbonStream.scala", "flushMetrics", "maxFilesPerTrigger"),
       ("CarbonStream.scala", "startMetricRollupFlush", "maxFilesPerTrigger"),
       ("CarbonStream.scala", "rollupAppendQuery", "createTempDirectory(")).sorted
     assert(hits == want,
@@ -160,9 +161,10 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     * (comment lines stripped) the only session-conf writes are the sticky
     * `nanosAsLong` read flag of `Tables.events` and
     * `CarbonStream.eventsStream` (sessions graft does not build still
-    * need it to read TIMESTAMP(NANOS) fixtures), and native functions
-    * are installed only by `GraftExtensions.register`, from the table
-    * the extension injects. Each hit is attributed to its enclosing
+    * need it to read TIMESTAMP(NANOS) fixtures) and the width of the
+    * replay session `CarbonStream.replaySession` builds, and native
+    * functions are installed only by `GraftExtensions.register`, from the
+    * table the extension injects. Each hit is attributed to its enclosing
     * `def`, so an operator that writes session conf fails here.
     */
   test("operators write no session conf and register functions in one place") {
@@ -171,6 +173,7 @@ class Round12Spec extends AnyFunSuite with TestSpark {
       writes ++ Seq("createOrReplaceTempFunction", "registerFunction(")).sorted
     val want = Seq(
       ("CarbonStream.scala", "eventsStream", "conf.set("),
+      ("CarbonStream.scala", "replaySession", "conf.set("),
       ("GraftExtensions.scala", "register", "registerFunction("),
       ("Tables.scala", "events", "conf.set(")).sorted
     assert(hits == want,
@@ -181,9 +184,12 @@ class Round12Spec extends AnyFunSuite with TestSpark {
     val confLines = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
       .flatMap(codeLines).filter(l => writes.exists(l.contains))
-    assert(confLines.nonEmpty &&
-      confLines.forall(_.contains("\"spark.sql.legacy.parquet.nanosAsLong\", \"true\"")),
-      s"a session-conf write other than the nanosAsLong read flag: $confLines")
+    val (flag, width) = confLines.partition(
+      _.contains("\"spark.sql.legacy.parquet.nanosAsLong\", \"true\""))
+    assert(flag.size == 2 && width == Seq(
+      "s.conf.set(\"spark.sql.shuffle.partitions\", StreamShufflePartitions.toString)"),
+      s"a session-conf write other than the nanosAsLong read flag and the " +
+        s"replay session's width: $confLines")
   }
 
   // ------------------------------------------- session + tuning-main census
