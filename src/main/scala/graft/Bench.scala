@@ -14,6 +14,11 @@ package graft
   * sample can be 5× off. DEFAULT is min-of-3 so the driver-recorded
   * BENCH_r{N}.json is itself noise-robust (r6's single-sample run read
   * 6.8× high and had to be re-adjudicated by hand).
+  *
+  * A key with a failed run is left out of the per-key times and the total;
+  * the per-key line (and so its JSON side copy) then carries a
+  * `"failed":[…]` field, and a `{"metric":"failed","keys":[…]}` line after
+  * the headline names it too.
   */
 object Bench {
   private def opt(name: String): Option[String] =
@@ -36,14 +41,18 @@ object Bench {
     graft.model.Tables.metrics(spark, sfDir)
       .groupBy("path").count().write.format("noop").mode("overwrite").save()
 
-    val results = ops.map { op =>
-      val dt = (1 to reps).map { _ =>
+    // a failed rep has no time: its time until the failure is not the op's
+    // cost, and as the minimum it would lower the total
+    val timed = ops.map { op =>
+      val dts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        try op.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${op.name} failed: ${e.getMessage}")
-        }
+        val ok =
+          try { op.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] ${op.name} failed: ${e.getMessage}")
+              false
+          }
         val d = (System.nanoTime() - t0) / 1e9
         // inter-query isolation: one op must not re-price the ones after
         // it. clearCache drops Dataset-level cache entries; the RDD sweep
@@ -51,10 +60,12 @@ object Bench {
         // CacheManager.
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        d
-      }.min
-      op.name -> dt
+        Option.when(ok)(d)
+      }
+      op.name -> Option.when(dts.forall(_.isDefined))(dts.flatten.min)
     }
+    val results = timed.collect { case (k, Some(d)) => k -> d }
+    val failed = timed.collect { case (k, None) => k }
 
     val qs = results
       .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
@@ -69,10 +80,15 @@ object Bench {
     val headline =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_keys":${results.size},"sf":"$sfDir"}"""
     println(headline)
+    // the side copy names failed keys too: a failing run must not read as
+    // a faster one
+    val failedKeys = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedField = if (failed.isEmpty) "" else s""","failed":$failedKeys"""
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"$failedField}"""
     println(line)
     println(headline)
+    if (failed.nonEmpty) println(s"""{"metric":"failed","keys":$failedKeys}""")
     // parse insurance: stdout goes through whatever wrapper launched us
     // (sbt, a driver harness); the file copy is always clean JSON.
     // -Dgraft.bench.json / $GRAFT_BENCH_JSON override the destination;

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.api.MetricsHttpServer
-import graft.sources.RollupStore
+import graft.sources.{LocalFiles, RollupStore}
 import graft.streaming.CarbonStream
 
 /** The full cassabon daemon composition, CONCURRENT like the reference:
@@ -44,6 +44,15 @@ final class Daemon(spark: SparkSession, store: String,
     new MetricsHttpServer.StoreBackend(spark, store, () => rollupDefs, nowSec)
   private val httpd = new MetricsHttpServer(backend, healthCheckFile)
   @volatile private var ingestQ: StreamingQuery = _
+  /** The ingest query's checkpoint, deleted by [[stop]]. */
+  @volatile private var ingestChk: String = _
+
+  private def startFlush(start: String => StreamingQuery): StreamingQuery = {
+    require(ingestQ == null, "one flush query per daemon")
+    ingestChk = LocalFiles.checkpoint()
+    ingestQ = start(ingestChk)
+    ingestQ
+  }
 
   /** Bind the API (port 0 = ephemeral), one handler thread per core of
     * the session; returns the bound port.
@@ -54,11 +63,8 @@ final class Daemon(spark: SparkSession, store: String,
     * for the carbon socket). Caller may `processAllAvailable()` to drain
     * deterministically; the daemon keeps serving while it runs.
     */
-  def startIngest(srcDir: String, glob: String = "*.parquet"): StreamingQuery = {
-    ingestQ = CarbonStream.startRollupFlush(spark, srcDir, store, glob,
-      () => rollupDefs)
-    ingestQ
-  }
+  def startIngest(srcDir: String, glob: String = "*.parquet"): StreamingQuery =
+    startFlush(CarbonStream.startRollupFlush(spark, srcDir, store, _, glob, () => rollupDefs))
 
   /** The rollup dispatch config in force — every flush cycle reads it, so
     * [[reload]]'s swap takes effect at the next cycle boundary.
@@ -100,8 +106,8 @@ final class Daemon(spark: SparkSession, store: String,
     require(wire == null, "one wire arm per daemon")
     wire = listener
     wireSrcDir = srcDir
-    ingestQ = CarbonStream.startMetricRollupFlush(spark, srcDir, store,
-      config = () => rollupDefs)
+    startFlush(CarbonStream.startMetricRollupFlush(spark, srcDir, store, _,
+      config = () => rollupDefs))
     wire.port
   }
 
@@ -212,6 +218,7 @@ final class Daemon(spark: SparkSession, store: String,
     }
     if (wire != null) wire.stop()
     if (ingestQ != null) ingestQ.stop()
+    if (ingestChk != null) LocalFiles.deleteCheckpoint(ingestChk)
     httpd.stop()
   }
 }

@@ -1046,45 +1046,14 @@ object TextOps {
     */
   private[graft] def chunkDense(spark: SparkSession, dir: String): DataFrame =
     // r16: the batch path rides the ROW-LOCAL embedder too (guide §2.4)
-    // — the groupBy form below paid TWO exchanges of the whole chunk
+    // — the groupBy form paid TWO exchanges of the whole chunk
     // corpus (per-(doc, chunk, dim) signed counts, then the per-chunk
     // collect_list densify) where the r14 stream-ingest form computes
     // each chunk's vector inside its own row (hash per token once, one
     // native vec_hashbin bincount). Round14Spec pins the two frames
-    // identical (integer sums are order-immune).
+    // identical (integer sums are order-immune); the groupBy form lives
+    // on in the specs as ChunkDenseReference.
     chunkDenseRowLocal(Tables.documents(spark, dir))
-
-  /** The original explode-then-groupBy chunk embedder — kept as the
-    * REFERENCE form (it is the algebra the DuckDB `ck_*` CTEs mirror,
-    * and Round14Spec pins [[chunkDenseRowLocal]] against it); no
-    * production path rides it since r16.
-    */
-  private[graft] def chunkDenseGroupBy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(spark)
-    val stride = ChunkTokens - ChunkOverlap
-    val toks = Tables.documents(spark, dir)
-      .withColumn("t", split(lower(coalesce(col("text"), lit(""))), " "))
-      .withColumn("n", size(col("t")))
-      .withColumn("nc", greatest(lit(1),
-        expr(s"(n - $ChunkOverlap + ${stride - 1}) DIV $stride")))
-      .select(col("doc_id"), col("t"), col("n"),
-        explode(expr("sequence(0, nc - 1)")).as("chunk_id"))
-      .withColumn("s", col("chunk_id") * stride)
-      .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-        explode(expr(s"slice(t, s + 1, least($ChunkTokens, n - s))")).as("tok"))
-    toks
-      .withColumn("h", hash60(col("tok")))
-      .groupBy(col("doc_id"), col("chunk_id"),
-        (col("h") % EmbedDims).cast("int").as("dim"))
-      .agg(sum(expr(s"(h DIV $EmbedDims) % 2 * 2 - 1")).as("val"))
-      .groupBy("doc_id", "chunk_id")
-      .agg(map_from_entries(collect_list(struct(col("dim"), col("val")))).as("m"))
-      .withColumn("v", expr(
-        s"transform(sequence(0, ${EmbedDims - 1}), i -> coalesce(try_element_at(m, i), CAST(0 AS BIGINT)))"))
-      .withColumn("nrm", expr("vec_dot(v, v)"))
-      .filter(col("nrm") > 0)
-      .select("doc_id", "chunk_id", "v", "nrm")
-  }
 
   /** [[chunkDense]] as PURE row-local algebra — no explode-then-groupBy:
     * each (doc, chunk) row computes its dense vector with higher-order

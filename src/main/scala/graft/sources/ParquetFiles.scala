@@ -35,6 +35,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * A writer that dies between the two leaves a hidden temp behind; store
   * maintenance sweeps the old ones (`RollupStore.rewrite`).
   *
+  * Local files are written and renamed through [[LocalFiles]], which
+  * starts no process per file; the paths callers pass and see are
+  * unchanged.
+  *
   * Three writes: [[stageRows]] (driver rows, no Spark job: the wire
   * listeners' flush slices), [[stage]] (frames as one file each, all in
   * one job: the daemon's staged slices and every stream replay's
@@ -86,7 +90,7 @@ object ParquetFiles {
   }
 
   private def fsOf(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFiles.path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Run `f` over the rows of each of `dfs`, each frame planned in its own
     * SQL execution (nested, so `f` runs inside all of them).
@@ -122,7 +126,7 @@ object ParquetFiles {
   def stageRows(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
       dir: String, name: String): Unit = {
     val w = writer(spark, schema)
-    val dest = new Path(dir, name)
+    val dest = new Path(LocalFiles.path(dir), name)
     val temp = tempOf(dest)
     val fs = fsOf(spark, dir)
     try w.writeFile(rows, temp, w.context(0, 0))
@@ -150,7 +154,7 @@ object ParquetFiles {
     val ones = slices.map(_.coalesce(1))
     val writerOf = ones.map(_.schema).distinct.map(s => s -> writer(spark, s)).toMap
     val writers = ones.map(s => writerOf(s.schema))
-    val dests = names.map(new Path(dir, _))
+    val dests = names.map(new Path(LocalFiles.path(dir), _))
     val temps = dests.map(tempOf)
     val fs = fsOf(spark, dir)
     try onRows(ones) { rdds =>
@@ -192,6 +196,7 @@ object ParquetFiles {
     val w = writer(spark, dataSchema)
     val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
     val uuid = UUID.randomUUID().toString
+    val root = LocalFiles.path(path).toString
     def ref(i: Int) = BoundReference(i, schema(i).dataType, schema(i).nullable)
     val temps = onRows(Seq(rows))(_.head.mapPartitionsWithIndex { (task, it) =>
       val ctx = w.context(task, TaskContext.get().attemptNumber())
@@ -200,10 +205,10 @@ object ParquetFiles {
       val keys = UnsafeProjection.create(partIdx.map(ref))
       val names = UnsafeProjection.create(partIdx.map(i => Cast(ref(i), StringType, tz)))
       def dirOf(r: InternalRow): Path =
-        if (partIdx.isEmpty) new Path(path)
+        if (partIdx.isEmpty) new Path(root)
         else {
           val v = names(r)
-          new Path(path, partitionCols.indices.map { i =>
+          new Path(root, partitionCols.indices.map { i =>
             ExternalCatalogUtils.getPartitionPathString(partitionCols(i),
               if (v.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
               else v.getUTF8String(i).toString)

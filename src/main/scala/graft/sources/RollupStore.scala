@@ -365,6 +365,9 @@ object RollupStore {
     *     ingest never quiesces;
     *  8. the lease is released in `finally`.
     *
+    * The pass's own files (lease, manifest, `_compact`) are written
+    * through [[LocalFiles]] when the store is local; its reads keep `path`.
+    *
     * A crash anywhere leaves state the next entry point's [[recover]]
     * resolves: `_SUCCESS` present means the staged copies are committed
     * truth and the directories not yet swapped are swapped in; absent
@@ -375,7 +378,7 @@ object RollupStore {
       partitionCols: Seq[String], leaseMs: Long)(
       pick: (FileSystem, Seq[Path]) => (Seq[Path], Seq[Path]))(
       fold: DataFrame => DataFrame): Unit = {
-    val root = new Path(path)
+    val root = LocalFiles.path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root) || leaseIsYoung(fs, root, leaseMs)) return
     val depth = partitionCols.size
@@ -395,7 +398,7 @@ object RollupStore {
         require(fs.mkdirs(staged), s"maintenance: cannot create $staged")
         if (folded.nonEmpty) {
           val sources = spark.read.option("basePath", path)
-            .parquet(folded.map(f => new Path(root, f).toString): _*)
+            .parquet(folded.map(f => new Path(path, f).toString): _*)
           writeClustered(fold(sources), staged.toString, partitionCols, DefaultMaxRowsPerFile)
         }
         fs.create(new Path(staged, "_SUCCESS"), true).close()
@@ -644,7 +647,7 @@ object RollupStore {
     */
   private[graft] def recoverIfNeeded(spark: SparkSession, path: String,
       depth: Int = 2): Unit = {
-    val root = new Path(path)
+    val root = LocalFiles.path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) recover(fs, root, new Path(root, "_compact"), CompactLeaseMs, depth)
   }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.Op
 import graft.model.Tables
+import graft.sources.LocalFiles
 
 /** Structured-Streaming ingest: the Spark-native replacement for cassabon's
   * accumulate/flush goroutine loop (reference listener package feeding
@@ -82,16 +83,20 @@ object CarbonStream {
   /** The one lifecycle of a FINITE replay: `start` starts the query from
     * `df`'s writer on its replay session ([[replaySession]]), the query
     * runs to the end of the available input, and it stops whether or not
-    * that succeeded; the stopped query is returned. RocksDB state is
-    * Spark's own `spark.sql.streaming.stateStore.providerClass`, set where
-    * the session is built. The live daemon queries ([[startRollupFlush]])
-    * own their lifetime instead.
+    * that succeeded; the stopped query is returned. The writer carries a
+    * fresh checkpoint on [[graft.sources.LocalFiles]], deleted once the
+    * query has stopped. RocksDB state is Spark's own
+    * `spark.sql.streaming.stateStore.providerClass`, set where the session
+    * is built. The live daemon queries ([[startRollupFlush]]) own their
+    * lifetime instead.
     */
-  def runToEnd(df: DataFrame)(start: DataStreamWriter[Row] => StreamingQuery): StreamingQuery = {
-    val q = start(SessionClone.bind(df, replaySession(df.sparkSession)).writeStream)
-    try q.processAllAvailable() finally q.stop()
-    q
-  }
+  def runToEnd(df: DataFrame)(start: DataStreamWriter[Row] => StreamingQuery): StreamingQuery =
+    LocalFiles.withCheckpoint { chk =>
+      val q = start(SessionClone.bind(df, replaySession(df.sparkSession)).writeStream
+        .option("checkpointLocation", chk))
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
 
   /** Replay `df` to the end of its input into a fresh memory sink in
     * output `mode` (`complete` or `append`) and return the drained rows
@@ -400,17 +405,20 @@ object CarbonStream {
     // real deployment points the file sink + checkpointLocation at shared
     // storage. (Contrast dedup_cluster's label spill, which IS operator
     // state and therefore goes through graft.model.Spill.) The sink's
-    // rows are materialized before the dir is deleted.
+    // rows are materialized before the dir is deleted; runToEnd supplies
+    // the checkpoint. The sink and the read-back both name the dir on
+    // LocalFiles: the sink's log records its files under the scheme it
+    // was given, and a read through another scheme finds none of them.
     val out = java.nio.file.Files.createTempDirectory("stream_rollup_append")
+    val data = LocalFiles.path(s"$out/data").toString
     try {
       runToEnd(windowedRollup(toMetrics(events), watermark = Some("0 seconds"))) {
         _.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
+          .option("path", data)
           .outputMode("append")
           .start()
       }
-      spark.read.parquet(s"$out/data").localCheckpoint()
+      spark.read.parquet(data).localCheckpoint()
     } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
@@ -425,18 +433,21 @@ object CarbonStream {
   /** Start (and return) the LIVE flush query — the daemon's ingest arm:
     * each staged source file becomes one micro-batch, reduced to its
     * mergeable rollup state and appended to the store as one slice. The
-    * caller owns the query's lifetime (`graft.Daemon` runs it CONCURRENTLY
-    * with the HTTP server and store maintenance; [[streamRollupsToStore]]
-    * is the drain-and-stop batch harness). Safe beside a live `compact`:
-    * appends under a young lease skip recovery, and the additive swap
-    * cannot touch files it didn't fold.
+    * caller owns the query's lifetime and its `checkpoint` location
+    * (`graft.Daemon` runs it CONCURRENTLY with the HTTP server and store
+    * maintenance, on a [[graft.sources.LocalFiles.checkpoint]] it deletes
+    * when it stops; [[streamRollupsToStore]] is the drain-and-stop batch
+    * harness). Safe beside a live `compact`: appends under a young lease
+    * skip recovery, and the additive swap cannot touch files it didn't
+    * fold.
     */
   def startRollupFlush(spark: SparkSession, srcDir: String, store: String,
-      glob: String = "*.parquet",
+      checkpoint: String, glob: String = "*.parquet",
       config: () => Seq[graft.model.RollupDef] =
         () => graft.model.RollupConfig.reference)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    appendEachBatch(store, config)(flushMetrics(spark, srcDir, glob).writeStream)
+    appendEachBatch(store, config)(flushMetrics(spark, srcDir, glob).writeStream
+      .option("checkpointLocation", checkpoint))
 
   private def flushMetrics(spark: SparkSession, srcDir: String, glob: String): DataFrame = {
     // one flush cycle per staged file
@@ -484,10 +495,11 @@ object CarbonStream {
     * once its batch has committed (`cleanSource=delete`): the directory
     * it re-lists on every idle poll stays a couple of files long instead
     * of growing by one file per cycle. [[startRollupFlush]] never sets
-    * it: its directory may be a fixture.
+    * it: its directory may be a fixture. The caller owns `checkpoint`,
+    * as there.
     */
   def startMetricRollupFlush(spark: SparkSession, srcDir: String, store: String,
-      glob: String = "*.parquet",
+      checkpoint: String, glob: String = "*.parquet",
       config: () => Seq[graft.model.RollupDef] =
         () => graft.model.RollupConfig.reference)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -496,7 +508,8 @@ object CarbonStream {
       .option("pathGlobFilter", glob)
       .option("maxFilesPerTrigger", "1")
       .option("cleanSource", "delete")
-      .parquet(srcDir).writeStream)
+      .parquet(srcDir).writeStream
+      .option("checkpointLocation", checkpoint))
 
   /** The full INGEST→STORE loop: cassabon's accumulate/flush cycle
     * (datastore/metricstore.go:85-185 — accumulate deltas per flush

@@ -25,6 +25,10 @@ import graft.streaming.CarbonStream
   *  - a daemon TCP cycle stages its slice with no Spark job and appends
   *    it in at most two, leaving no `_temporary`, `_SUCCESS` or temp name
   *    behind, and the metric flush query deletes committed slices;
+  *  - flush cycles, a maintenance pass and a stream replay start no
+  *    `chmod` or `readlink` process (a JFR recording of `jdk.ProcessStart`
+  *    in this JVM): their files and checkpoints go through
+  *    `graft.sources.LocalFiles`;
   *  - staging creates nothing outside the staging directory;
   *  - the published store equals the one Spark's commit protocol writes
   *    ([[CommitterReference]]): directories, files per directory, merged
@@ -112,6 +116,41 @@ class FlushCycleSpec extends AnyFunSuite with TestSpark {
     } finally {
       sc.removeSparkListener(listener)
       daemon.stop()
+    }
+  }
+
+  test("flush cycles, maintenance and a replay start no chmod or readlink process") {
+    val store = Files.createTempDirectory("flush_fork_store").toString
+    val src = Files.createTempDirectory("flush_fork_src").toString
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val daemon = new Daemon(spark, store, Some(1700002000L))
+    rec.start()
+    try {
+      val port = daemon.startTcpIngest(src)
+      (0 until 3).foreach { c =>
+        send(port, cycleLines(c))
+        awaitAccepted(daemon.tcpListener, 200L * (c + 1))
+        assert(daemon.tcpFlush(f"slice_$c%03d.parquet") == 200)
+        daemon.ingestQuery.processAllAvailable()
+      }
+      daemon.maintain()
+      assert(CarbonStream.rollupQuery(spark, Sf).count() > 0)
+    } finally {
+      daemon.stop()
+      rec.stop()
+    }
+    assert(layout(store).values.forall(_.size == 1), "maintenance folded no directory")
+    val dump = Files.createTempFile("flush_forks", ".jfr")
+    try {
+      rec.dump(dump)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      val forks = commands.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+      assert(forks.size == 0, s"chmod/readlink process starts, e.g. ${forks.take(3)}")
+    } finally {
+      rec.close()
+      Files.delete(dump)
     }
   }
 

@@ -178,7 +178,7 @@ class Round14Spec extends AnyFunSuite with TestSpark {
     val a = graft.operators.TextOps.chunkDenseRowLocal(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[Long](2).toList, r.getLong(3))).toSet
-    val b = graft.operators.TextOps.chunkDenseGroupBy(spark, Sf)
+    val b = ChunkDenseReference.chunkDenseGroupBy(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[Long](2).toList, r.getLong(3))).toSet
     assert(a.nonEmpty && a == b,
